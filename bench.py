@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from linux_logs_spark.registry import all_queries  # noqa: E402
-from linux_logs_spark.session import get_spark  # noqa: E402
+from linux_logs_spark.session import default_parallelism, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -129,11 +129,10 @@ def scale_probe() -> None:
     first use (same seed and generator as the scale rehearsal, derived
     from the canonical sf0.1 tables — NOT from query results; the
     probe's own numbers are computed fresh from that parquet every
-    run). Knobs follow the rehearsal's documented per-decade rules
-    (KNOBS_100X — N_PLANES only; oracle verification is locked out
-    while knobs are patched, and the probe never verifies). Writes
-    bench_scale_probe_c<cpus>.json beside the repo; never touches
-    bench_full.json."""
+    run). Every scale-dependent size (LSH planes, sketch widths, IVF
+    cells) derives from the tier's parquet footers, exactly as at
+    sf0.1. Writes bench_scale_probe_c<cpus>.json beside the repo;
+    never touches bench_full.json."""
     import pyarrow.parquet as pq
 
     sr = _rehearsal_module()
@@ -167,7 +166,6 @@ def scale_probe() -> None:
     spark.range(1000).select(_warm(col("id"))).write.mode("overwrite").format(
         "noop"
     ).save()
-    sr._set_knobs(sr.KNOBS_100X)
     specs = all_queries()
     timings: dict[str, float] = {}
     for name in PROBE_QUERIES:
@@ -177,7 +175,7 @@ def scale_probe() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
     total = round(sum(timings.values()), 3)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     payload = {
         "metric": "scale_probe_wall_sec",
         "value": total,

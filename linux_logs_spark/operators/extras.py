@@ -251,9 +251,9 @@ def sim_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side materialization — one numpy float64 GEMM per
     (qblk, cblk) cell, block-local top-5, ranking-window merge.
     Shuffle volume is QB·n + CB·n rows (block replication), never the
-    n² pair space, and per-task memory is (n/QB + n/CB)·dim doubles —
-    both bounded by the block knobs. Since round 7 this IS the shared
-    engine (llm_pipeline._gemm_topk) that also serves the cached
+    n² pair space, and per-task memory is (n/QB + n/CB)·dim doubles,
+    with QB = CB = sim_blocks(n) from the footer row count. This IS the
+    shared engine (llm_pipeline._gemm_topk) that also serves the cached
     sim_cosine_topk family frame; this registration builds the plan
     fresh, and Spark's CacheManager may serve it from the family's
     persisted frame when one exists (see the registration comment).

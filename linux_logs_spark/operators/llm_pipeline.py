@@ -20,6 +20,8 @@ Scale shapes:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -734,22 +736,22 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Block counts for the blocked exact pair scan. At test scale 8×8 = 64
-# cells keeps local[32] saturated; at 100 TB pick CB so one cell's
-# candidate rows fit a task's heap next to its query rows, and QB so
-# QB·CB tasks saturate the cluster (same knob story as
-# SIM_{QUERY,CAND}_BLOCKS below).
-DEDUP_QUERY_BLOCKS = 8
-DEDUP_CAND_BLOCKS = 8
+def dedup_blocks(n_vecs: int) -> int:
+    """Query and candidate block count for the blocked exact pair scans
+    (dedup_embedding_cosine, _jvm_fold_topk): B·B cells, each holding
+    n/B query rows against n/B candidate rows. B grows as √n past 2000
+    vectors, so the per-task cell (n/B rows a side) grows only √n while
+    the cell count absorbs the rest; 8×8 = 64 cells at or below sf0.1."""
+    return max(8, round(8 * math.sqrt(n_vecs / 2000)))
 
-# Block counts for the blocked GEMM (shared by sim_cosine_blocked and
-# the cached sim_cosine_topk family frame). At test scale 4×4 keeps
-# every task busy with a meaningful matrix; at 100 TB these derive
-# from executor memory: pick CB so a candidate block (n/CB × dim
-# float64) fits a task's heap alongside a query block, and QB to
-# saturate the cluster (tasks = QB × CB).
-SIM_QUERY_BLOCKS = 4
-SIM_CAND_BLOCKS = 4
+
+def sim_blocks(n_vecs: int) -> int:
+    """Query and candidate block count for the blocked GEMM
+    (_gemm_topk): one (n/B × dim) float64 block a side per task. Same
+    √n growth as dedup_blocks from a 4×4 base — fewer, larger cells,
+    because one numpy GEMM per cell amortizes what a codegen fold
+    cannot."""
+    return max(4, round(4 * math.sqrt(n_vecs / 2000)))
 
 
 @register(
@@ -767,34 +769,21 @@ WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space near-dup: pairs whose exact cosine similarity
     clears the threshold, enumerated as a BLOCKED equi-join — the pair
-    space is tiled into DEDUP_{QUERY,CAND}_BLOCKS² cells, each side is
+    space is tiled into dedup_blocks(n)² cells, each side is
     replicated across the other side's block axis, and the join is a
     shuffle equi-join on the (qblk, cblk) cell key with `doc_a < doc_b`
     as a residual. No broadcast of the full table, no
     BroadcastNestedLoopJoin/CartesianProduct (pinned in
-    tests/test_plans.py): shuffle volume is CB·n + QB·n rows and
-    per-task memory is one cell (n/QB + n/CB rows) — both bounded by
-    the block knobs, so the plan survives a 100× scale-up by raising
-    the knobs, exactly like sim_cosine_blocked.
+    tests/test_plans.py): shuffle volume is 2·B·n rows and per-task
+    memory is one cell (2n/B rows), with B read from the footer row
+    count, so the plan sizes itself like sim_cosine_blocked.
 
-    Round-15 disposition (guide §3.2, round-14 verdict item 4 — "is
-    the blocked equi-join triangular?"): it is NOT, by measurement. A
-    triangular variant was built (range-based blocks monotone in
-    vec_id, doc_a side replicated to cells at-or-above its own block,
-    doc_b side at-or-below — each unordered pair meets once, identical
-    4137-row output verified) and A/B'd interleaved in one session:
-    +7% locally at both B=8 and the equal-task-grain B=12 (med 7.21
-    vs 6.73 s, min 7.06 vs 6.57, 8 reps/side, load1 0.23). The reason
-    the guide-§3.2 halving doesn't bite: the doc_a < doc_b residual
-    already sits BELOW the dot product, so the rectangle never paid
-    the dot twice — profiled join+filter without the dot is 0.4 s of
-    the 7 s; the 64-term dot on the EXACT n²/2 pairs is ~95% of the
-    query and is invariant to tiling. Triangular only trims the
-    replicated shuffle (2Bn → (B+1)n rows) and probe matches — the
-    LINEAR terms of a by-design-quadratic ground-truth query — while
-    measurably losing on codegen/geometry locally. Closed permanently:
-    the rectangle stays; the scale lever for this query remains the
-    block knobs (per-task memory), not the tiling.
+    The tiling is a full rectangle, not a triangle, on purpose: the
+    doc_a < doc_b residual sits BELOW the dot product, so the
+    rectangle never pays the dot twice, and the 64-term dot on the
+    exact n²/2 pairs is ~95% of the query whatever the tiling. A
+    triangular variant (same output) only trims the linear replicated
+    shuffle and measured ~7% slower.
 
     Why exact-blocked rather than LSH-candidates-then-verify: the
     verified threshold (0.35, chosen so the fixture yields pairs — the
@@ -807,41 +796,30 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair dot stays the JVM left-fold (not a GEMM) so rounded sims
     hash-match the DuckDB oracle exactly."""
     e = load(spark, sf_dir, "embeddings")
-    # The fixture is one parquet split: when the cell join resolves to
-    # a broadcast-hash (small side fits), the probe side would run as a
-    # SINGLE task — round-robin repartition spreads the per-cell dot
-    # evaluations across the cluster (measured 13× at sf0.1). At sizes
-    # where the build side outgrows the broadcast threshold, AQE plans
-    # the cell equi-join as a shuffle join and this exchange
-    # pre-spreads the probe anyway. Net vs the retired full-table
-    # broadcast BNLJ: 7.5 s vs 13.0 s at sf0.1 (quiet host, warm JVM)
-    # — the hash probe touches one cell, not every build row.
+    # One parquet split: when the cell join resolves to a broadcast-
+    # hash, the probe would run as ONE task — round-robin repartition
+    # spreads the per-cell dots (13× at sf0.1). Past the broadcast
+    # threshold AQE plans a shuffle join and this pre-spreads the probe.
+    blocks = dedup_blocks(table_row_count(sf_dir, "embeddings"))
     a = e.repartition(default_parallelism()).select(
         F.col("vec_id").alias("doc_a"),
         F.col("embedding").alias("va"),
         F.expr(norm_unrolled_sql("embedding")).alias("na"),
-        *block_pair_keys("vec_id", DEDUP_QUERY_BLOCKS, DEDUP_CAND_BLOCKS, "qblk", "cblk"),
+        *block_pair_keys("vec_id", blocks, blocks, "qblk", "cblk"),
     )
     b = e.select(
         F.col("vec_id").alias("doc_b"),
         F.col("embedding").alias("vb"),
         F.expr(norm_unrolled_sql("embedding")).alias("nb"),
-        *block_pair_keys("vec_id", DEDUP_CAND_BLOCKS, DEDUP_QUERY_BLOCKS, "cblk", "qblk"),
+        *block_pair_keys("vec_id", blocks, blocks, "cblk", "qblk"),
     )
-    # DELIBERATE round6_away EXCEPTION (round-7, measured): this query
-    # keeps F.round. The threshold filter below is predicate-pushed
-    # through the projection with alias substitution, so the rounding
-    # formula is evaluated at BOTH the filter and the project site.
-    # F.round references its argument once → 2 copies of the 64-term
-    # dot, codegen'd (the shape this query always had). round6_away
-    # references it twice (sign, abs) → 4 copies, which blows janino's
-    # 64 KB method limit and drops the whole stage to interpreted
-    # (measured: cost 1.26→2.02 s, WholeStageCodegen spans 0). The
-    # shared-oracle pair (sim_cosine_topk/sim_cosine_blocked — the
-    # round-6 advice item) and the window-barriered LSH/IVF paths keep
-    # the round6_away convention; this query's own oracle has been
-    # hash-green with F.round's shortest-decimal half-up since round 3
-    # — the same accepted measure-zero boundary class.
+    # F.round, not round6_away, on purpose: the threshold filter is
+    # pushed through the projection, so the rounding formula runs at
+    # both sites. F.round references the 64-term dot once (2 copies);
+    # round6_away twice (4 copies), which exceeds janino's 64 KB method
+    # limit and drops the stage to interpreted (1.26 → 2.02 s). The
+    # oracle hash-matches F.round's half-up; the boundary class where
+    # the two conventions differ has measure zero.
     sim = F.round(
         F.expr(dot_unrolled_sql("va", "vb")) / (F.col("na") * F.col("nb")), 6
     )
@@ -1271,7 +1249,7 @@ def _gemm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CB partial lists (correct because the global top-5 is a subset
     of the union of block top-5s). Shuffle volume is QB·n + CB·n rows,
     never the n² pair space; per-task memory is (n/QB + n/CB)·dim
-    doubles — both bounded by the block knobs."""
+    doubles, with QB = CB = sim_blocks(n) from the footer row count."""
     import numpy as np
     import pandas as pd
 
@@ -1280,15 +1258,16 @@ def _gemm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replicate each query row across the CB candidate blocks and each
     # candidate row across the QB query blocks, then cogroup on the
     # (qblk, cblk) composite key.
+    blocks = sim_blocks(table_row_count(sf_dir, "embeddings"))
     queries = e.select(
         "vec_id",
         "embedding",
-        *block_pair_keys("vec_id", SIM_QUERY_BLOCKS, SIM_CAND_BLOCKS, "qblk", "cblk"),
+        *block_pair_keys("vec_id", blocks, blocks, "qblk", "cblk"),
     )
     cands = e.select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("cemb"),
-        *block_pair_keys("vec_id", SIM_CAND_BLOCKS, SIM_QUERY_BLOCKS, "cblk", "qblk"),
+        *block_pair_keys("vec_id", blocks, blocks, "cblk", "qblk"),
     )
 
     def gemm_block(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -1394,17 +1373,18 @@ def _jvm_fold_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe pipeline and the fused method blew janino's 64 KB limit →
     # whole-stage fell back to interpreted, ~3× slower.)
     # Norms are computed once per replica row (8n), never per pair.
+    blocks = dedup_blocks(table_row_count(sf_dir, "embeddings"))
     a = e.repartition(default_parallelism()).select(
         F.col("vec_id").alias("vec_id"),
         F.col("embedding").alias("va"),
         F.expr(norm_unrolled_sql("embedding")).alias("na"),
-        *block_pair_keys("vec_id", DEDUP_QUERY_BLOCKS, DEDUP_CAND_BLOCKS, "qblk", "cblk"),
+        *block_pair_keys("vec_id", blocks, blocks, "qblk", "cblk"),
     )
     b = e.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("vb"),
         F.expr(norm_unrolled_sql("embedding")).alias("nb"),
-        *block_pair_keys("vec_id", DEDUP_CAND_BLOCKS, DEDUP_QUERY_BLOCKS, "cblk", "qblk"),
+        *block_pair_keys("vec_id", blocks, blocks, "cblk", "qblk"),
     )
     # Raw sim in its own projection, round6_away in the next: ONE
     # binary half-away-from-zero convention across every registration
@@ -1478,12 +1458,18 @@ def sim_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Plane count sizes the bucket fan-out (2^K buckets): pick
-# K ≈ log2(n / target_occupancy) so per-bucket candidate lists stay
-# ~constant as the corpus grows — the rehearsal's 10× pass runs K=8
-# (scripts/scale_rehearsal.py). 4 ⇒ 16 buckets, occupancy ~31 at
-# sf0.001 where the recall gate runs.
-N_PLANES = 4
+# Mean vectors per bucket the plane count is sized for: K planes give
+# 2^K buckets, and K = floor(log2(n / 78)) keeps occupancy n / 2^K in
+# [78, 156) at every size, so per-bucket candidate lists stay constant.
+_LSH_OCCUPANCY = 78
+
+
+def lsh_planes(n_vecs: int) -> int:
+    """Hyperplane count K for an n_vecs table: floor(log2(n / 78)),
+    never below 4 (16 buckets, the count every committed scale factor
+    runs). _LSH_ORACLE computes the same rule in SQL from count(*)."""
+    return max(4, max(n_vecs // _LSH_OCCUPANCY, 1).bit_length() - 1)
+
 
 # Query-side chunk for the per-bucket verification GEMM: bounds task
 # memory (chunk × |bucket| doubles) on a pathologically hot bucket.
@@ -1495,41 +1481,38 @@ _BUCKET_GEMM_CHUNK = 2048
 def lsh_plane(j: int, i: int) -> float:
     """Element i of hyperplane j: a sampled sinusoid whose FREQUENCY
     (j+1) differs per plane, so the K plane vectors are linearly
-    independent (distinct integer frequencies ≤ K don't alias for
-    K·1 rad < 2π·K, verified: rank == K for K ≤ 11). The round-6
-    scale rehearsal caught the previous phase-shift-only series
-    sin(1 + j·64 + i): every plane was a phase shift of ONE sinusoid,
-    i.e. a linear combination of {sin(1+i), cos(1+i)} — rank 2 — so K
-    planes produced only ~2K occupied buckets (a 2-D line arrangement)
-    instead of 2^K, and candidate volume stayed ~n²/2K: quadratic at
-    any scale, with the K knob a no-op. Closed form (not a PRNG) so
-    the DuckDB oracle can replay it."""
-    import math
-
+    independent (rank == K, pinned by tests for every K lsh_planes
+    yields up to 60M vectors). Phase shifts of one sinusoid would
+    span only {sin, cos} — rank 2, ~2K occupied buckets instead of
+    2^K, and candidate volume quadratic at any K. Closed form (not a
+    PRNG) so the DuckDB oracle can replay it."""
     return math.sin((i + 1.0) * (j + 1.0) + j)
 
 
 # The hyperplanes are a deterministic closed-form series, so DuckDB can
-# replay the whole index: recompute each plane with list_transform,
-# take the projection sign via list_dot_product (both engines'
-# projections agree to ~1e-15; a sign flip needs |proj| < 1e-14 —
-# vanishing for continuous data), bucket-join, and rank by the SAME
-# round-6 cosine the exact-family oracles already hash-match
-# (vector.py's left fold ≡ DuckDB list_cosine_similarity under
-# round-6). Graduated from rows-only in round 6 (the r5 verdict's
-# item 1): "approximate" means approximate NEIGHBORS, not a
-# nondeterministic computation. Built from N_PLANES/lsh_plane so the
-# oracle cannot drift from the engine's constants.
+# replay the whole index: derive K from count(*) exactly as lsh_planes
+# does, recompute each plane j < K with list_transform, take the
+# projection sign via list_dot_product (both engines' projections
+# agree to ~1e-15; a sign flip needs |proj| < 1e-14 — vanishing for
+# continuous data), bucket-join, and rank by the SAME round-6 cosine
+# the exact-family oracles already hash-match (vector.py's left fold ≡
+# DuckDB list_cosine_similarity under round-6). "Approximate" means
+# approximate NEIGHBORS, not a nondeterministic computation.
 _LSH_ORACLE = f"""
 WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dv FROM embeddings
+),
+k AS (
+  SELECT greatest(4, CAST(floor(log2(greatest(count(*) // {_LSH_OCCUPANCY}, 1))) AS BIGINT)) AS k
+  FROM embeddings
 ),
 b AS (
   SELECT vec_id,
          CAST(sum(CASE WHEN list_dot_product(dv,
                  list_transform(range(0, 64), i -> sin((i + 1) * (p.j + 1) + p.j))) >= 0
-               THEN CAST(power(2, {N_PLANES - 1} - p.j) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-  FROM v CROSS JOIN (SELECT unnest(range(0, {N_PLANES})) AS j) p
+               THEN CAST(power(2, k.k - 1 - p.j) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
+  FROM v CROSS JOIN k CROSS JOIN (SELECT unnest(range(0, 64)) AS j) p
+  WHERE p.j < k.k
   GROUP BY vec_id
 ),
 pairs AS (
@@ -1551,45 +1534,40 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via random-hyperplane LSH: K signed projections
     → 2^K buckets → exact cosine only within the bucket. The scale
     path: the join is an equi-join on bucket, never a cross join, and
-    K grows as log2(n / occupancy) so candidate volume stays ~n·const
-    (see lsh_plane for the rank-degeneracy bug the round-6 rehearsal
-    caught here). Hyperplanes are deterministic driver-side constants,
+    K = lsh_planes(n) from the footer row count, so bucket occupancy
+    and candidate volume per vector stay constant as n grows.
+    Hyperplanes are deterministic driver-side constants (lsh_plane),
     so results are reproducible run-to-run — and the DuckDB oracle
-    replays the full index (see _LSH_ORACLE).
+    replays the full index, plane count included (see _LSH_ORACLE).
 
     Bucket assignment runs as an Arrow-batched pandas UDF — one numpy
-    float64 GEMM of the batch against the K×64 plane matrix (the same
-    blocked-matmul shape a 100 TB run would use). A JVM-expression
-    form of the 512-term projection exceeded janino's 64 KB method
-    limit: a single Catalyst expression cannot be split across
-    generated methods, so codegen failed and the whole stage ran
-    interpreted.
+    float64 GEMM of the batch against the K×64 plane matrix. A
+    JVM-expression form of the K×64-term projection exceeds janino's
+    64 KB method limit (one Catalyst expression cannot be split across
+    generated methods), which drops the whole stage to interpreted.
 
     Within-bucket verification is ONE numpy float64 GEMM per bucket
-    (round-12: the JVM-fold-per-pair form priced the 2M-vector leg at
-    ~244M scalar 64-term folds, projected ~650 s — past the 590 s
-    rehearsal window; the GEMM regime is the sim_cosine family's
-    measured ~17× over codegen folds at dim=64). Exactness is
+    (a JVM fold per pair is ~17× slower at dim=64). Exactness is
     structural: each vector hashes to exactly ONE bucket, so its
     candidate set is wholly contained in its own group and the
     per-bucket local top-5 IS the global answer — no cross-bucket
     ranking window, no pair-space shuffle. Shuffle volume is n rows
     keyed by bucket; per-task memory is bounded by the query-chunked
-    GEMM (occupancy stays ~constant because K follows log2(n), the
-    round-6 plane-rank fix). Sims round 6-digit half-away-from-zero
-    on the binary double BEFORE ranking — the one convention every
-    rounded-sim oracle shares (see _gemm_topk) — so the 1-ulp
-    BLAS-vs-fold drift is invisible and the DuckDB oracle hash still
-    matches."""
+    GEMM. Sims round 6-digit half-away-from-zero on the binary double
+    BEFORE ranking — the one convention every rounded-sim oracle
+    shares (see _gemm_topk) — so the 1-ulp BLAS-vs-fold drift is
+    invisible and the DuckDB oracle hash still matches."""
     import numpy as np
     import pandas as pd
 
     dim = 64
+    n_vecs = table_row_count(sf_dir, "embeddings")
+    k = lsh_planes(n_vecs)
     planes_mat = np.array(
-        [[lsh_plane(j, i) for i in range(dim)] for j in range(N_PLANES)],
+        [[lsh_plane(j, i) for i in range(dim)] for j in range(k)],
         dtype=np.float64,
     )
-    weights = (2 ** np.arange(N_PLANES - 1, -1, -1)).astype(np.int64)
+    weights = (2 ** np.arange(k - 1, -1, -1)).astype(np.int64)
     chunk = _BUCKET_GEMM_CHUNK
 
     def _lsh_bucket(emb):
@@ -1632,9 +1610,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_ingest: the bucket-assignment GEMM runs inside the scan
     # stage, which a single-row-group file pins to ONE task (the
     # round-10 second-decade finding) — spread the narrow frame first
-    e = spread_ingest(
-        load(spark, sf_dir, "embeddings"), table_row_count(sf_dir, "embeddings")
-    )
+    e = spread_ingest(load(spark, sf_dir, "embeddings"), n_vecs)
     bucketed = e.select("vec_id", "embedding", lsh_bucket(F.col("embedding")).alias("bucket"))
     return bucketed.groupBy("bucket").applyInPandas(
         bucket_topk, "vec_id long, neighbor_id long, sim double, nn_rank long"

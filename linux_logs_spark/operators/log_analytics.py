@@ -261,7 +261,9 @@ def log_user_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_user.agg(
         F.count("signup_s").alias("n_signed"),
         F.count(converted).alias("n_converted"),
-        (F.count(converted).cast("double") / F.count("signup_s")).alias(
+        # try_divide: no signup at all (empty events) is NULL, not an
+        # ANSI DIVIDE_BY_ZERO — DuckDB's x / 0 is NULL too
+        F.try_divide(F.count(converted).cast("double"), F.count("signup_s")).alias(
             "conversion_rate"
         ),
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from linux_logs_spark.catalog import load
+from linux_logs_spark.catalog import load, table_row_count
 from linux_logs_spark.registry import register
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "..", ".scratch")
@@ -647,8 +647,6 @@ def table_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and the z computation is pure codegen'd projection, so
     the only cost over a plain rewrite is the range exchange every
     OPTIMIZE pays anyway."""
-    from linux_logs_spark.catalog import table_row_count
-
     zpath = _scratch(sf_dir, "orders_zorder")
     # file count derives from the table's footer row count (the
     # table_optimize_compact rule: ~50k rows per file, floor of 8 so
@@ -742,7 +740,19 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.format("pyavro").option("path", path).load()
 
 
-_SYNTH_N = 20000
+def synth_rows(n_events: int) -> int:
+    """Rows the synthlog generator emits: one per five events, at
+    least 20 000 (every committed scale factor), so the Python source's
+    row volume follows the data through a fixed task structure."""
+    return max(20_000, n_events // 5)
+
+
+# The same rule in SQL: the oracles size range() from events' count(*).
+_SYNTH_RANGE = """
+  SELECT unnest(range(n)) AS i
+  FROM (SELECT greatest(20000, count(*) // 5) AS n FROM events)
+"""
+
 # DuckDB replay of sources/synthetic.py's row formula: identical
 # 64-bit integer ops + one int/int double division, filter included
 # (the engine side pushes it INTO the source via pushFilters; the
@@ -750,7 +760,7 @@ _SYNTH_N = 20000
 _SYNTH_ORACLE = f"""
 WITH g AS (
   SELECT i AS row_id, (i * 2654435761) % 4294967296 AS h
-  FROM range({_SYNTH_N}) t(i)
+  FROM ({_SYNTH_RANGE}) t
 )
 SELECT row_id,
        'host-' || lpad(CAST(h % 16 AS VARCHAR), 2, '0') AS host,
@@ -771,25 +781,21 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     before any row is generated — generation cost tracks the filter,
     the 100 TB property that separates a source from a post-filtered
     scan. Partition pruning + the leave-unsupported-filters contract
-    are pinned by tests/test_plans.py. sf-independent by design (a
-    generator source has no backing files)."""
+    are pinned by tests/test_plans.py. The generator has no backing
+    files; its row count is synth_rows(n) from the events footer, so
+    the source grows with the scale factor while the [5000, 15000)
+    result stays fixed."""
     from linux_logs_spark.sources.synthetic import register_synthlog
 
     register_synthlog(spark)
-    # Python-source pushdown is opt-in (SQL conf, default false);
-    # without it Spark refuses to plan a reader that implements
-    # pushFilters rather than silently skipping the pushdown. The conf
-    # is deliberately NOT save/restored: it is read at ACTION time,
-    # after this function has returned its lazy frame, so a finally-
-    # restore would fail the driver's own collect with
-    # DATA_SOURCE_PUSHDOWN_DISABLED (round-7 review — the suggested
-    # restore breaks lazy planning). Leaving it on is strictly
-    # permissive: it only changes behavior for readers that IMPLEMENT
-    # pushFilters, which otherwise refuse to plan at all.
+    # Python-source pushdown is opt-in; without it Spark refuses to
+    # plan a reader that implements pushFilters. Not restored: the conf
+    # is read at ACTION time, after this returns its lazy frame, and
+    # leaving it on only affects readers that would otherwise not plan.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = (
         spark.read.format("synthlog")
-        .option("n", str(_SYNTH_N))
+        .option("n", str(synth_rows(table_row_count(sf_dir, "events"))))
         .option("parts", "8")
         .load()
     )
@@ -994,7 +1000,7 @@ def table_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH g AS (
   SELECT i AS row_id, (i * 2654435761) % 4294967296 AS h
-  FROM range({_SYNTH_N}) t(i)
+  FROM ({_SYNTH_RANGE}) t
 ), r AS (
   SELECT CASE ((h // 16) % 4) WHEN 0 THEN 'info' WHEN 1 THEN 'warn'
               WHEN 2 THEN 'error' ELSE 'debug' END AS severity,
@@ -1026,14 +1032,9 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linux_logs_spark.sources.synthetic import register_synthlog
 
     register_synthlog(spark)
-    # same runtime conf as scan_python_datasource (and for the same
-    # reason): a plain driver session has Python-source pushdown off,
-    # and a reader that implements pushFilters refuses to plan at all
-    # without it. Unlike the scan query, the synthlog read here is
-    # fully materialized inside .save(), so the conf can be restored
-    # before returning — no leak into sibling queries on the shared
-    # session (round-8 advice; the returned frame is a plain JSON
-    # read that doesn't need it).
+    # same pushdown conf as scan_python_datasource; the synthlog read
+    # is fully materialized inside .save() here, so it is restored
+    # before returning (the returned JSON read does not need it).
     _PD_CONF = "spark.sql.python.filterPushdown.enabled"
     try:
         prev = spark.conf.get(_PD_CONF)
@@ -1043,7 +1044,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         src = (
             spark.read.format("synthlog")
-            .option("n", str(_SYNTH_N))
+            .option("n", str(synth_rows(table_row_count(sf_dir, "events"))))
             .option("parts", "8")
             .load()
         )

@@ -33,14 +33,6 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# True while scripts/scale_rehearsal.py has family knobs (N_PLANES,
-# block counts) patched away from their import-time
-# defaults. Registered oracle SQL is baked from those defaults at
-# import, so verifying against an oracle under patched knobs would
-# compare mismatched configurations — verify.run_oracle refuses while
-# this is set (round-6 advice).
-knobs_patched = False
-
 # Modules that register queries on import. Kept explicit so the import
 # order (and thus registry order) is deterministic.
 _QUERY_MODULES = (

@@ -18,7 +18,22 @@ APP_NAME = "linux-logs-spark"
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local cores: $SPARK_GRAFT_CPUS, else the CPUs this process may
+    run on (the affinity mask, which a container's cpuset narrows)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: $SPARK_DRIVER_MEMORY, else ~70% of the host's
+    MemTotal in whole GB (at least 1g), leaving room for the Python
+    workers and the OS on a host with no swap."""
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{max(1, int(total_kb * 0.7) // 2**20)}g"
 
 
 def scaled_partitions(n_rows: int, rows_per_part: int = 250_000) -> int:
@@ -61,7 +76,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # events.parquet stores TIMESTAMP(NANOS) which Spark's reader

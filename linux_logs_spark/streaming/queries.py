@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from linux_logs_spark.catalog import load, nanos_ts_to_micros, table_path
+from linux_logs_spark.catalog import (
+    load,
+    nanos_ts_to_micros,
+    table_path,
+    table_row_count,
+)
 from linux_logs_spark.registry import register
 from linux_logs_spark.session import broadcast_if_fits
 
@@ -760,11 +765,21 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PYSRC_N = 8000
-_PYSRC_BATCH = 4000
-_PYSRC_ORACLE = f"""
+def pysrc_rows(n_events: int) -> tuple[int, int]:
+    """(rows, rows per offset range) for stream_python_source: 2 rows
+    per 25 events, at least 8 000 (every committed scale factor), in
+    two ranges — the row volume follows the data while the restart
+    structure stays fixed."""
+    n = max(8_000, 2 * n_events // 25)
+    return n, n // 2
+
+
+# The oracle sizes range() by the same rule, from events' count(*).
+_PYSRC_ORACLE = """
 WITH g AS (
-  SELECT (i * 2654435761) % 4294967296 AS h FROM range({_PYSRC_N}) t(i)
+  SELECT (i * 2654435761) % 4294967296 AS h
+  FROM (SELECT unnest(range(n)) AS i
+        FROM (SELECT greatest(8000, 2 * count(*) // 25) AS n FROM events))
 )
 SELECT CASE ((h // 16) % 4) WHEN 0 THEN 'info' WHEN 1 THEN 'warn'
             WHEN 2 THEN 'error' ELSE 'debug' END AS severity,
@@ -784,9 +799,9 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exhausted — offsets, state restore, and exactly-once commits
     all exercised across genuine query restarts (not merely multiple
     micro-batches inside one run). The final complete-mode aggregate
-    over all {n} rows ≡ one batch GROUP BY over the closed-form row
-    formula, which DuckDB replays — a full hash oracle for a
-    multi-restart stateful stream.
+    over all pysrc_rows(n) rows ≡ one batch GROUP BY over the
+    closed-form row formula, which DuckDB replays — a full hash
+    oracle for a multi-restart stateful stream.
 
     Scale shape: the simple stream reader is the driver-side,
     low-throughput path by contract (Spark prefetches and caches each
@@ -802,12 +817,13 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linux_logs_spark.sources.synthetic import register_synthlog
 
     register_synthlog(spark)
+    n_rows, batch = pysrc_rows(table_row_count(sf_dir, "events"))
     ck = _scratch(sf_dir, "pysrc_ckpt")
     shutil.rmtree(ck, ignore_errors=True)  # deterministic fresh drain
     sdf = (
         spark.readStream.format("synthlog")
-        .option("n", str(_PYSRC_N))
-        .option("batch", str(_PYSRC_BATCH))
+        .option("n", str(n_rows))
+        .option("batch", str(batch))
         .load()
     )
     agg = sdf.groupBy("severity").agg(
@@ -820,13 +836,11 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _committed_pos(q) -> int:
         """Absolute source position from the last committed batch's
         endOffset — the offset IS the drain progress, unlike summed
-        numInputRows which double-counts a batch replayed after an
-        interrupted run (round-7 advice). availableNow always runs
-        ≥1 batch, so lastProgress is set after awaitTermination.
-
-        Python-source offsets surface as the dict's repr (single
-        quotes, e.g. "{'pos': 4000}"), not JSON — PySpark serializes
-        SimpleStreamReader offsets with str(); accept both."""
+        numInputRows, which double-counts a batch replayed after an
+        interrupted run. availableNow always runs ≥1 batch, so
+        lastProgress is set after awaitTermination. Python-source
+        offsets surface as the dict's repr ("{'pos': 4000}"), not
+        JSON; accept both."""
         import ast as _ast
         import json as _json
 
@@ -847,13 +861,13 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(eo["pos"])
 
     pos, runs = 0, 0
-    max_runs = math.ceil(_PYSRC_N / _PYSRC_BATCH) + 2
+    max_runs = math.ceil(n_rows / batch) + 2
     try:
-        while pos < _PYSRC_N:
+        while pos < n_rows:
             runs += 1
             if runs > max_runs:  # loud, not silent partial results
                 raise RuntimeError(
-                    f"stream_python_source failed to drain: pos {pos}/{_PYSRC_N} "
+                    f"stream_python_source failed to drain: pos {pos}/{n_rows} "
                     f"after {runs - 1} availableNow restarts"
                 )
             q = (

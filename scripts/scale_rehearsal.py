@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Scale rehearsal: do the heavy dedup/similarity plans survive 10×?
 
-The blocked-pair and banding docstrings claim the plans "survive 100×
-by raising the knobs". This script makes the first decade of that
-claim MEASURED instead of asserted (r5 verdict item 3):
+The blocked-pair and banding plans size themselves from parquet
+footer row counts (block counts, LSH planes, sketch widths, cells).
+This script measures whether those rules hold the cost curve as the
+data grows:
 
 1. ``--gen``: synthesize a ~10× documents (50k rows) + embeddings
    (20k rows) dataset into ``.scale10/`` with the exact sf0.1 parquet
@@ -13,15 +14,15 @@ claim MEASURED instead of asserted (r5 verdict item 3):
    plus ~3% planted near-duplicates so the dedup family has real work.
    The other eight tables are copied from sf0.1 so ``load()`` works
    unchanged.
-2. ``--run``: run the heavy family at sf0.1 (baseline knobs) and at
-   ``.scale10`` (block knobs raised ~√10, exactly the documented
-   scale-up move), recording wall seconds, result rows, and total
-   shuffle-write bytes (Spark UI REST API) per query.
+2. ``--run``: run the heavy family at sf0.1 and at ``.scale10``,
+   recording wall seconds, result rows, and total shuffle-write bytes
+   (Spark UI REST API) per query, plus each tier's derived sizes
+   (_derived_knobs).
 
 3. ``--gen100`` / ``--run100`` (round 10): the SECOND decade —
    500k documents / 200k embeddings into ``.scale100/`` and the
-   sub-quadratic family (HEAVY_100X) run at 100× with the knob
-   rules continued one more decade. Two measured decades turn the
+   sub-quadratic family (HEAVY_100X) run at 100× under the same
+   rules. Two measured decades turn the
    "survives 100×" docstring claim into a fitted scaling exponent
    per family instead of an extrapolation from one.
 
@@ -46,9 +47,8 @@ N_DOCS = 50_000
 N_VECS = 20_000
 NEAR_DUP_FRAC = 0.03
 
-# --- second decade (round 10): the docstrings' scale claim is
-# "survives 100× by raising the knobs"; one decade measured makes
-# that an extrapolation, two make it a CURVE — the per-family
+# --- second decade: one measured decade makes the scale claim an
+# extrapolation, two make it a CURVE — the per-family
 # scaling exponent alpha = log(w_100x / w_1x) / 2 falls out of the
 # pair of legs. Only documents/embeddings are regenerated at 100×
 # (the sub-quadratic dedup/similarity family reads nothing else);
@@ -76,20 +76,15 @@ STREAMING = [
     "stream_stream_join",
 ]
 
-# Second decade for the streaming family (round-11 verdict item 6:
-# only batch paths had 100× coverage). Runs at the REAL 10M-row
-# events table (--gen100-events); the Python DataSource pair
-# continues the KNOBS_10X row-volume rule one more decade through
-# the SAME task/batch structure.
+# Second decade for the streaming family: the REAL 10M-row events
+# table (--gen100-events); the Python DataSource pair derives its row
+# volume from the events footer (pysrc_rows) through the SAME
+# task/batch structure.
 STREAMING_100X = [
     "stream_python_sink",
     "stream_python_source",
     "stream_stream_join",
 ]
-STREAM_KNOBS_100X = {
-    ("linux_logs_spark.streaming.queries", "_PYSRC_N"): 800_000,
-    ("linux_logs_spark.streaming.queries", "_PYSRC_BATCH"): 400_000,
-}
 
 HEAVY = [
     "dedup_near_minhash",
@@ -156,8 +151,8 @@ HEAVY = [
     # three of the nine slowest 1x queries (6.6-8.2 s) — the claim to
     # measure is that the cost is Python-worker protocol overhead
     # that AMORTIZES: 10x rows through the same task/batch structure
-    # (10x _SYNTH_N over the same 8 parts; 10x events through the
-    # same availableNow micro-batches; 10x _PYSRC_N over the same
+    # (10x synth_rows over the same 8 parts; 10x events through the
+    # same availableNow micro-batches; 10x pysrc_rows over the same
     # restart count) should grow wall well under 10x.
     "sink_python_datasource",
     "stream_python_sink",
@@ -242,31 +237,6 @@ WARM_FIRST = {
     "graph_triangle_count",
 }
 
-# knob → 10× value, each the documented scale-up move for its family:
-# - blocked-cosine blocks scale ~√10 so per-task memory (one pair
-#   cell) stays CONSTANT while the cell count absorbs the growth;
-# - LSH planes 4 → 8 (buckets 16 → 256) keeps the mean bucket
-#   occupancy — and thus Σ bucket² candidate volume per vector —
-#   level as n grows (K = log2(n/occupancy) — the sim_ann_lsh
-#   docstring's sizing rule);
-# - IVF cells need no patch since round 11: _ivf_cells derives
-#   cells ∝ n from the footer row count (occupancy flat — the
-#   hand-patched ×8/decade sequence's occupancy creep was the one
-#   measured super-linear family at 100×).
-KNOBS_10X = {
-    ("linux_logs_spark.operators.llm_pipeline", "DEDUP_QUERY_BLOCKS"): 25,
-    ("linux_logs_spark.operators.llm_pipeline", "DEDUP_CAND_BLOCKS"): 25,
-    ("linux_logs_spark.operators.llm_pipeline", "N_PLANES"): 8,
-    ("linux_logs_spark.operators.llm_pipeline", "SIM_QUERY_BLOCKS"): 13,
-    ("linux_logs_spark.operators.llm_pipeline", "SIM_CAND_BLOCKS"): 13,
-    # Python DataSource family: 10x rows through the SAME task/batch
-    # structure (fixed 8 parts; fixed ~2 stream restarts) — isolates
-    # protocol overhead from row volume.
-    ("linux_logs_spark.operators.scans", "_SYNTH_N"): 200_000,
-    ("linux_logs_spark.streaming.queries", "_PYSRC_N"): 80_000,
-    ("linux_logs_spark.streaming.queries", "_PYSRC_BATCH"): 40_000,
-}
-
 # --- second decade: the SUB-QUADRATIC document/embedding family only
 # (the exact blocked-pair baselines — sim_cosine_blocked,
 # dedup_shingle_jaccard, dedup_embedding_cosine — are quadratic BY
@@ -325,22 +295,6 @@ HEAVY_100X = [
     "table_zorder_cluster",
 ]
 
-# Each knob continues its documented per-decade rule from KNOBS_10X:
-# LSH planes keep mean bucket occupancy level (+~3.3 planes/decade:
-# 200k vecs / 2^11 buckets ≈ 98/bucket vs 78 at 10×). The
-# dedup/sim BLOCK knobs belong to the quadratic exact baselines,
-# which are not in this family — they stay at import defaults so the
-# baked oracles remain valid for any interleaved verify.
-# Gone since round 11 (auto-derived from footer row counts, verdict
-# items 2-3): N_IVF_CELLS (cells ∝ n via _ivf_cells — the hand-
-# patched ×8/decade sequence's occupancy creep was the one measured
-# super-linear family), N_MINHASH and SIMHASH_BITS (log-n width via
-# minhash_width/simhash_width — 500k docs get 32 hashes / 64 bits
-# with no patch, exactly the values this dict used to carry).
-KNOBS_100X = {
-    ("linux_logs_spark.operators.llm_pipeline", "N_PLANES"): 11,
-}
-
 # --- third decade (round-11 verdict item 8): a SPOT rehearsal of the
 # cheapest sub-linear per-doc/token families at 5M docs / 2M
 # embeddings. The 1000× corpus is a key-shifted 10× replication of
@@ -386,68 +340,36 @@ HEAVY_1000X_TRUE = [
 
 # Embedding family at 2M vectors (--gen1000-emb overwrites the
 # .scale1000t embeddings with a true 2M-vector set, same construction
-# as gen()). kmeans pins the fixed-K linear claim at a third decade;
-# SemDeDup runs its K∝n rule at K=8000 — deep inside the GEMM regime;
-# LSH continues the log-n plane rule (14 planes ≈ 122/bucket at 2M,
-# the knob stays a knob because the plane count is baked into the
-# registered oracle SQL). sim_ann_ivf joined in round 13: the
-# per-cell GEMM verify replaced the JVM candidate join whose ~5e8
-# exact-dot verify volume priced this leg at ~20 minutes (the
-# round-12 exclusion reason); 2M vectors ≥ IVF_TWOLEVEL_FLIP_ROWS
-# (1M), so this leg runs the round-14 two-level arm (K1 = 126 coarse
-# cells, fine cells ~125 rows inside the UDF; the retired round-13 √n
-# hatch measured 34.5 s here at 1414 cells / occupancy 1414).
+# as gen()): kmeans pins fixed-K linearity a third decade, SemDeDup
+# runs its K∝n rule at K=8000, LSH runs lsh_planes = 14 (≈122 per
+# bucket), sim_ann_ivf its two-level arm (2M ≥ IVF_TWOLEVEL_FLIP_ROWS).
 EMB_1000X_TRUE = [
     "emb_kmeans_lloyd",
     "dedup_semantic_cluster",
     "sim_ann_lsh",
     "sim_ann_ivf",
 ]
-EMB_KNOBS_1000X = {
-    ("linux_logs_spark.operators.llm_pipeline", "N_PLANES"): 14,
-}
 
-# Fourth decade (round 12): 20M vectors, ONLY for the emb families
-# whose third-decade legs COMPLETED (the round-11 verdict's rule).
-# sim_ann_lsh continues the log-n plane rule (17 planes ≈ 2^17
-# buckets, occupancy ~152 at 20M); dedup_semantic_cluster crosses
-# SEMDEDUP_TWOLEVEL_FLIP_ROWS here, so this leg measures the
-# two-level auto-flip live (round-13: K1 = √(20M/250) = 282 coarse
-# super-cells, fine cells back at ~250 rows so pair output is linear
-# again — the round-12 √n hatch this replaces measured 2.88B
-# same-cell pairs / 768.3 s on this leg, and the flat rule's K=80000
-# assignment GEMM alone would be ~20 minutes on this host).
-# emb_kmeans_lloyd is excluded: fixed
-# K=8 is proven linear through 2M and a ~15-minute fourth leg
-# re-proves nothing.
-# sim_ann_ivf's 20M leg continues the two-level arm one decade past
-# the 2M first-live-leg (20M ≥ IVF_TWOLEVEL_FLIP_ROWS → K1 = 400
-# coarse cells, closure 205 KB, fine occupancy ~125 → verify is
-# linear n·N_PROBE²·T·dim; the retired √n hatch measured 507.1 s on
-# this leg at occupancy 4472).
+# Fourth decade: 20M vectors, only for the emb families whose
+# third-decade legs completed. LSH runs 17 planes (occupancy ~152);
+# dedup_semantic_cluster crosses SEMDEDUP_TWOLEVEL_FLIP_ROWS (K1 = 282
+# coarse cells, fine cells ~250 rows); sim_ann_ivf runs two-level at
+# K1 = 400. kmeans is excluded: fixed K=8 is proven linear through 2M.
 EMB_10000X_TRUE = [
     "dedup_semantic_cluster",
     "sim_ann_lsh",
     "sim_ann_ivf",
 ]
-EMB_KNOBS_10000X = {
-    ("linux_logs_spark.operators.llm_pipeline", "N_PLANES"): 17,
-}
 
-# Half-decade stress point (round 13): 60M vectors — 3× the fourth
-# decade, sized to exercise the two-level SemDeDup's per-task memory
-# dimension (coarse cells grow √(n·T): ~122k rows ≈ 125 MB matrices
-# per task at 60M vs 71k at 20M) and the √n-IVF-style shuffle volumes
-# (~3× the 20M legs) without the 200M full decade, whose ~100 GB+
-# shuffle exceeds this host's free disk. N_PLANES continues the log-n
-# rule to 19 (2¹⁹ buckets, occupancy ~114).
+# Half-decade stress point: 60M vectors, sized to stress the
+# two-level SemDeDup's per-task memory (coarse cells ~122k rows) and
+# ~3× the 20M shuffle volumes without the 200M decade, whose shuffle
+# exceeds the free disk. lsh_planes gives 19 (occupancy ~114).
 EMB_30000X_TRUE = [
     "dedup_semantic_cluster",
     "sim_ann_lsh",
 ]
-EMB_KNOBS_30000X = {
-    ("linux_logs_spark.operators.llm_pipeline", "N_PLANES"): 19,
-}
+
 TAIL_MULT_1000X = 3000
 
 # Fourth decade for the PAIR-BASED document families (round 14,
@@ -884,38 +806,35 @@ def _shuffle_write_bytes(spark) -> int:
         return -1
 
 
-# import-time defaults of every knob _set_knobs has ever touched —
-# lets the restore call prove all knobs are back to baked-oracle state
-_KNOB_DEFAULTS: dict = {}
+def _rows(sf_dir: str, table: str) -> int:
+    """Footer row count, 0 for a table the tier does not carry."""
+    from linux_logs_spark.catalog import table_path, table_row_count
+
+    if not os.path.exists(table_path(sf_dir, table)):
+        return 0
+    return table_row_count(sf_dir, table)
 
 
-def _set_knobs(values: dict) -> dict:
-    """Patch family knobs module-globally, returning the old values.
-
-    Also flips registry.knobs_patched whenever any knob differs from
-    its import-time value: registered oracle SQL (e.g. _IVF_ORACLE,
-    _LSH_ORACLE f-strings) was baked from the defaults, so
-    verify.run_oracle refuses to run while knobs are patched — the
-    count-only rehearsal never verifies, and this guard keeps that
-    combination impossible rather than merely unused (round-6 advice)."""
-    import importlib
-
-    from linux_logs_spark import registry
-
-    old = {}
-    for (mod_name, attr), val in values.items():
-        mod = importlib.import_module(mod_name)
-        current = getattr(mod, attr)
-        # snapshot the import-time default the first time we touch a
-        # knob — the restore call must be able to clear the flag
-        _KNOB_DEFAULTS.setdefault((mod_name, attr), current)
-        old[(mod_name, attr)] = current
-        setattr(mod, attr, val)
-    registry.knobs_patched = any(
-        getattr(importlib.import_module(m), a) != default
-        for (m, a), default in _KNOB_DEFAULTS.items()
+def _derived_knobs(sf_dir: str) -> dict:
+    """The footer-derived sizes a tier runs with, recorded beside its
+    legs so scale_rehearsal.json says what ran."""
+    from linux_logs_spark.operators.llm_pipeline import (
+        dedup_blocks,
+        lsh_planes,
+        sim_blocks,
     )
-    return old
+    from linux_logs_spark.operators.scans import synth_rows
+    from linux_logs_spark.streaming.queries import pysrc_rows
+
+    knobs = {}
+    if n_vecs := _rows(sf_dir, "embeddings"):
+        knobs.update(lsh_planes=lsh_planes(n_vecs),
+                     dedup_blocks=dedup_blocks(n_vecs),
+                     sim_blocks=sim_blocks(n_vecs))
+    if n_events := _rows(sf_dir, "events"):
+        knobs.update(synth_rows=synth_rows(n_events),
+                     pysrc_rows=pysrc_rows(n_events))
+    return knobs
 
 
 def _reap_scratch(spark) -> None:
@@ -936,21 +855,17 @@ def _reap_scratch(spark) -> None:
 
 def run(
     only: list[str] | None = None,
-    tiers: list[tuple[str, str, dict]] | None = None,
+    tiers: list[tuple[str, str]] | None = None,
     family: list[str] | None = None,
 ) -> None:
     import sys
 
     sys.path.insert(0, REPO)
     from linux_logs_spark.registry import all_queries
-    from linux_logs_spark.session import get_spark
+    from linux_logs_spark.session import get_spark, scaled_partitions
 
     spark = get_spark("scale-rehearsal", extra_conf={"spark.ui.enabled": "true"})
-    # Absorb session/executor bootstrap (same discipline as bench.py):
-    # without this the FIRST heavy query of the 1x pass is charged
-    # ~3-6 s of JVM spin-up, which read as a phantom 2x on
-    # dedup_near_minhash's 1x leg and made solo --queries reruns
-    # incomparable with full-run entries.
+    # absorb JVM/executor bootstrap so the first leg is not charged it
     spark.range(1000).selectExpr("sum(id)").collect()
     specs = all_queries()
     # local filter — rebinding the module global would make a second
@@ -961,102 +876,62 @@ def run(
     # data regen) updates only its own rows
     dest = os.path.join(REPO, "scale_rehearsal.json")
     out: dict[str, dict] = {}
+    knobs: dict[str, dict] = {}
     if os.path.exists(dest):
         with open(dest) as fh:
-            out = json.load(fh).get("queries", {})
-    for tag, sf_dir, knobs in tiers or (
-        ("1x", SF1_DIR, {}),
-        ("10x", SCALE_DIR, KNOBS_10X),
-    ):
-        # Shuffle-partition count must scale with the tier (round 14):
-        # the engine session pins spark.sql.shuffle.partitions at core
-        # count, so every post-exchange stage at the 50M-doc tier ran
-        # 32 tasks of ~1.6M docs — the partial hash-agg under a token
-        # explode spilled its dictionary and shipped near-raw tokens
-        # (90+ GB observed on the CHEAPEST leg, vs 2.9 GB at 5M docs
-        # where 156k docs/task kept the combine dictionary resident).
-        # Same failure class as the round-13 scaled_partitions fix,
-        # one level up (shuffle stages instead of ingest repartition).
-        # AQE coalescing is ON, so small stages collapse back down —
-        # sizing UP is free at the small tiers (which keep their
-        # historical 32: scaled_partitions returns core count below
-        # 250k rows/core).
-        import pyarrow.parquet as _pqr
-
-        from linux_logs_spark.session import scaled_partitions as _sp
-
-        tier_rows = max(
-            (
-                _pqr.ParquetFile(os.path.join(sf_dir, f"{t}.parquet"))
-                .metadata.num_rows
-                for t in ("documents", "embeddings", "events")
-                if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-            ),
-            default=0,
-        )
-        # REHEARSAL_SHUFFLE_PARTITIONS: A/B override for isolating the
-        # shuffle-partition dimension itself (round 14: the 20M IVF leg
-        # was re-measured under 32 vs the scaled 80 to separate this
-        # knob's effect from a code change landed the same day).
+            prev = json.load(fh)
+        out = prev.get("queries", {})
+        knobs = prev.get("knobs", {})
+    for tag, sf_dir in tiers or (("1x", SF1_DIR), ("10x", SCALE_DIR)):
+        # Shuffle partitions scale with the tier: pinned at core count,
+        # a 50M-doc tier ran ~1.6M docs per post-exchange task and the
+        # partial hash-agg under a token explode shipped near-raw tokens
+        # (90+ GB shuffle). AQE coalesces small stages back down, so
+        # sizing up is free at small tiers. REHEARSAL_SHUFFLE_PARTITIONS
+        # pins the count for A/B runs on this dimension alone.
+        tier_rows = max(_rows(sf_dir, t) for t in ("documents", "embeddings", "events"))
         spark.conf.set(
             "spark.sql.shuffle.partitions",
             os.environ.get("REHEARSAL_SHUFFLE_PARTITIONS")
-            or str(_sp(tier_rows)),
+            or str(scaled_partitions(tier_rows)),
         )
-        old = _set_knobs(knobs)
-        try:
-            for name in heavy:
-                if name in WARM_FIRST:
-                    # one untimed construction+run pays conditional
-                    # one-time setup (bucketed-table builds, scratch
-                    # staging) OUTSIDE the timed region — otherwise the
-                    # recorded wall compares different work depending on
-                    # prior session state (round-7 review: the bucketed
-                    # join's cold 1x leg measured SLOWER than its 10x leg)
-                    specs[name].fn(spark, sf_dir).count()
-                    # reap the warm run's checkpoint/shuffle scratch
-                    # BEFORE the timed pass: at the 60M half-decade,
-                    # two generations of a ~33 GB scratch footprint
-                    # live concurrently exceeded this host's free disk
-                    # ("No space left on device" in the timed pass,
-                    # round 13) — the blocks are unreferenced after
-                    # the warm action but only release via GC +
-                    # ContextCleaner, which we trigger explicitly.
-                    _reap_scratch(spark)
-                sw0 = _shuffle_write_bytes(spark)
-                t0 = time.monotonic()
-                n_rows = specs[name].fn(spark, sf_dir).count()
-                wall = time.monotonic() - t0
-                sw1 = _shuffle_write_bytes(spark)
-                rec = {
-                    "wall_s": round(wall, 2),
-                    "rows": n_rows,
-                    "shuffle_write_mb": round((sw1 - sw0) / 2**20, 1)
-                    if sw0 >= 0 and sw1 >= 0
-                    else None,
-                }
-                out.setdefault(name, {})[tag] = rec
-                print(f"{tag:>4} {name:28} {wall:7.2f}s {n_rows:>9} rows "
-                      f"{rec['shuffle_write_mb']} MB shuffle", flush=True)
+        knobs[tag] = _derived_knobs(sf_dir)
+        for name in heavy:
+            if name in WARM_FIRST:
+                # an untimed run pays one-time setup (bucketed-table
+                # builds, scratch staging) outside the timed region;
+                # reaping its scratch first keeps two generations of
+                # it off the disk at once
+                specs[name].fn(spark, sf_dir).count()
                 _reap_scratch(spark)
-                # checkpoint after every leg: a multi-hour decade run
-                # that dies on its last family must not lose the legs
-                # that completed (round-14; pre-r14 wrote once at exit)
-                _write_results(dest, out)
-        finally:
-            _set_knobs(old)
-    _write_results(dest, out)
+            sw0 = _shuffle_write_bytes(spark)
+            t0 = time.monotonic()
+            n_rows = specs[name].fn(spark, sf_dir).count()
+            wall = time.monotonic() - t0
+            sw1 = _shuffle_write_bytes(spark)
+            rec = {
+                "wall_s": round(wall, 2),
+                "rows": n_rows,
+                "shuffle_write_mb": round((sw1 - sw0) / 2**20, 1)
+                if sw0 >= 0 and sw1 >= 0
+                else None,
+            }
+            out.setdefault(name, {})[tag] = rec
+            print(f"{tag:>4} {name:28} {wall:7.2f}s {n_rows:>9} rows "
+                  f"{rec['shuffle_write_mb']} MB shuffle", flush=True)
+            _reap_scratch(spark)
+            # checkpoint every leg: a long run that dies keeps the rest
+            _write_results(dest, out, knobs)
+    _write_results(dest, out, knobs)
     print(f"wrote {dest}")
 
 
-def _write_results(dest: str, out: dict) -> None:
+def _write_results(dest: str, out: dict, knobs: dict) -> None:
     with open(dest, "w") as fh:
         json.dump(
             {"n_docs_10x": N_DOCS, "n_vecs_10x": N_VECS, "seed": SEED,
-             "knobs_10x": {f"{m}.{a}": v for (m, a), v in KNOBS_10X.items()},
              "n_docs_100x": N_DOCS_100X, "n_vecs_100x": N_VECS_100X,
-             "knobs_100x": {f"{m}.{a}": v for (m, a), v in KNOBS_100X.items()},
-             "queries": out},
+             "knobs": knobs, "queries": out},
             fh, indent=1,
         )
 
@@ -1250,7 +1125,7 @@ if __name__ == "__main__":
             family = [q for q in family if q not in _FACTS_LEGS]
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("100x", SCALE100_DIR, KNOBS_100X)],
+            tiers=[("100x", SCALE100_DIR)],
             family=family,
         )
     if args.stream_run:
@@ -1296,7 +1171,7 @@ if __name__ == "__main__":
             ap.error("--run1000 requires --gen1000 first")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("1000x", SCALE1000_DIR, {})],
+            tiers=[("1000x", SCALE1000_DIR)],
             family=HEAVY_1000X,
         )
     if args.gen1000_true:
@@ -1353,7 +1228,7 @@ if __name__ == "__main__":
                      "third-decade set: run --gen1000-emb")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("1000x_true", SCALE1000T_DIR, EMB_KNOBS_1000X)],
+            tiers=[("1000x_true", SCALE1000T_DIR)],
             family=EMB_1000X_TRUE,
         )
     if args.gen10000_emb:
@@ -1415,7 +1290,7 @@ if __name__ == "__main__":
                      "fourth-decade set: run --gen10000-emb")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("10000x_true", SCALE10K_DIR, EMB_KNOBS_10000X)],
+            tiers=[("10000x_true", SCALE10K_DIR)],
             family=EMB_10000X_TRUE,
         )
     if args.gen30000_emb:
@@ -1477,7 +1352,7 @@ if __name__ == "__main__":
                      "half-decade set: run --gen30000-emb")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("30000x_true", SCALE30K_DIR, EMB_KNOBS_30000X)],
+            tiers=[("30000x_true", SCALE30K_DIR)],
             family=EMB_30000X_TRUE,
         )
     if args.run1000_true:
@@ -1485,7 +1360,7 @@ if __name__ == "__main__":
             ap.error("--run1000-true requires --gen1000-true first")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("1000x_true", SCALE1000T_DIR, {})],
+            tiers=[("1000x_true", SCALE1000T_DIR)],
             family=HEAVY_1000X_TRUE,
         )
     if args.gen10000_true:
@@ -1510,7 +1385,7 @@ if __name__ == "__main__":
                      "fourth-decade set: run --gen10000-true")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("10000x_true", SCALE10KT_DIR, {})],
+            tiers=[("10000x_true", SCALE10KT_DIR)],
             family=HEAVY_10000X_TRUE,
         )
     if args.stream_run100:
@@ -1523,7 +1398,7 @@ if __name__ == "__main__":
                      "table: run --gen100-events first")
         run(
             args.queries.split(",") if args.queries else None,
-            tiers=[("100x", SCALE100_DIR, STREAM_KNOBS_100X)],
+            tiers=[("100x", SCALE100_DIR)],
             family=STREAMING_100X,
         )
     if not (args.gen or args.run or args.stream_run or args.gen100

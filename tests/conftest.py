@@ -23,3 +23,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR
+
+
+@pytest.fixture
+def make_tier(sf_dir, tmp_path):
+    """Build a scale-factor directory under tmp_path: every table copied
+    from sf_dir, except the ones passed as pyarrow Tables. Returns the
+    directory path."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from linux_logs_spark.catalog import TABLES, table_path
+
+    def make(**tables) -> str:
+        out = str(tmp_path)
+        for t in TABLES:
+            if t in tables:
+                pq.write_table(tables[t], table_path(out, t))
+            else:
+                shutil.copy(table_path(sf_dir, t), table_path(out, t))
+        return out
+
+    return make

@@ -74,3 +74,42 @@ def test_memory_sink_view_lives_while_returned_frame_is_held(spark, sf_dir):
     assert held_names <= set(sq._sink_refs)
     live = {n for n, r in sq._sink_refs.items() if r() is not None}
     assert len(sq._sink_refs) <= len(live) + sq._SINK_KEEP_FLOOR
+
+
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_user_funnel_on_degenerate_events(spark, sf_dir, make_tier, n_rows):
+    """0 or 1 events can leave no signup at all, making the conversion
+    rate 0/0: the query returns NULL like the oracle, never an ANSI
+    DIVIDE_BY_ZERO."""
+    import pyarrow.parquet as pq
+
+    from linux_logs_spark.catalog import table_path
+
+    events = pq.read_table(table_path(sf_dir, "events")).slice(0, n_rows)
+    tier = make_tier(events=events)
+    spec = _SPECS["log_user_funnel"]
+    pdf = spec.fn(spark, tier).toPandas()
+    issues = compare_frames(pdf, run_oracle(spec.oracle, tier))
+    assert not issues, "; ".join(issues)
+
+
+def test_resource_defaults_fit_the_host(monkeypatch):
+    """Without overrides, local cores and driver heap come from the host:
+    at most the CPUs this process may use, at most 70% of MemTotal."""
+    import os
+
+    from linux_logs_spark.session import default_driver_memory, default_parallelism
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert 1 <= default_parallelism() <= len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    heap = default_driver_memory()
+    assert heap.endswith("g")
+    assert int(heap[:-1]) * 2**20 <= 0.7 * total_kb
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    assert default_parallelism() == 3
+    assert default_driver_memory() == "2g"
