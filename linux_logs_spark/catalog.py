@@ -98,11 +98,10 @@ _row_count_cache: dict[tuple[str, str], tuple[int, int, int]] = {}
 def table_row_count(sf_dir: str, name: str) -> int:
     """Exact row count from the parquet FOOTER — no Spark job at all.
 
-    The broadcast size gates (session.broadcast_if_fits call sites)
-    need a cheap upper bound on a source table's rows; df.count()
-    launches a Spark job per call site per construction, which a
-    round-7 review measured as dozens of redundant jobs across a full
-    driver pass. The footer's num_rows is the same number for zero
+    The scale rules (partition counts, block counts, LSH planes,
+    synthetic source sizes) need a source table's rows at plan time.
+    df.count() would launch a Spark job per call site per
+    construction; the footer's num_rows is the same number for zero
     jobs. Cached per file fingerprint (size + mtime) so a regenerated
     dataset at the same path is never answered stale."""
     if name not in TABLES:

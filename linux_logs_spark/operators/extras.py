@@ -13,11 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from linux_logs_spark.catalog import load, table_row_count
+from linux_logs_spark.catalog import load
 from linux_logs_spark.functions.compat import dsum, oracle_dsum
 from linux_logs_spark.operators.llm_pipeline import COSINE_TOPK_ORACLE
 from linux_logs_spark.registry import register
-from linux_logs_spark.session import broadcast_if_fits
 
 
 @register(
@@ -178,12 +177,10 @@ def scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     image): left-join the update set, project the merged row. At scale
     this is the standard copy-on-write upsert: join on the key,
     rewrite affected partitions. The update set is a segment-filtered
-    slice of customer (~1/5 of a corpus-sized table), so its
-    broadcast is SIZE-GATED via broadcast_if_fits on the parquet
-    metadata count — past the cap the merge shuffles on the key, the
-    normal copy-on-write plan."""
+    slice of customer (~1/5 of a corpus-sized table), so the
+    broadcast threshold and AQE size its join — past the threshold
+    the merge shuffles on the key, the normal copy-on-write plan."""
     c = load(spark, sf_dir, "customer")
-    n_cust = table_row_count(sf_dir, "customer")  # footer, no job
     updates = (
         c.filter(F.col("c_mktsegment") == "BUILDING")
         .select(
@@ -191,9 +188,7 @@ def scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("c_acctbal") * 1.1).alias("new_acctbal"),
         )
     )
-    merged = c.join(
-        broadcast_if_fits(updates, n_cust, 32), c.c_custkey == updates.u_custkey, "left"
-    )
+    merged = c.join(updates, c.c_custkey == updates.u_custkey, "left")
     return merged.select(
         "c_custkey",
         "c_name",
@@ -526,7 +521,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy — identical to how Delta/Iceberg resolve versions; writer
     races are fenced by commit_manifest's optimistic check-and-swap
     (the container-honest slice of their commit service)."""
-    n_cust = table_row_count(sf_dir, "customer")
     read_as_of = _customer_snapshot_reader(spark, sf_dir)
 
     v1 = read_as_of(1).select(
@@ -535,11 +529,10 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = read_as_of(2).select(
         F.col("c_custkey").alias("k2"), F.col("c_acctbal").alias("acctbal_v2")
     )
-    # |customers| vs |customers| join: gate the smaller projection —
-    # past the cap the as-of diff shuffles on the key (same class as
-    # scd2_merge's gate).
+    # |customers| vs |customers| join: the broadcast threshold and AQE
+    # size it; past the threshold the as-of diff shuffles on the key.
     return (
-        v1.join(broadcast_if_fits(v2, n_cust, 32), v1.c_custkey == F.col("k2"))
+        v1.join(v2, v1.c_custkey == F.col("k2"))
         .select(
             "c_custkey",
             "c_name",
@@ -940,7 +933,8 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate, key uniqueness, value-range, and referential integrity, as
     ONE lazy plan (no driver-side loop, no action per check). The
     three single-table checks share ONE scan (a single aggregate
-    projection); the referential check is a size-gated anti-join.
+    projection); the referential check is an anti-join that the
+    broadcast threshold and AQE size.
     Output is (expectation, violations) rows so the gate composes —
     a publish step filters violations > 0 and aborts. The oracle runs
     the same four checks as plain SQL."""
@@ -960,9 +954,8 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         [], list(single_pass.columns), "expectation", "violations"
     )
     c = load(spark, sf_dir, "customer").select("c_custkey")
-    n_cust = table_row_count(sf_dir, "customer")
     orphans = (
-        o.join(broadcast_if_fits(c, n_cust, 16), F.col("o_custkey") == F.col("c_custkey"), "left_anti")
+        o.join(c, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .agg(F.count("*").alias("violations"))
         .select(
             F.lit("orders_custkey_references_customer").alias("expectation"),

@@ -17,10 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from linux_logs_spark.catalog import load, table_row_count
+from linux_logs_spark.catalog import load
 from linux_logs_spark.functions.compat import dsum, oracle_dsum
 from linux_logs_spark.registry import register
-from linux_logs_spark.session import broadcast_if_fits
 
 # join_bloom_runtime_filter's isolated demo-conf sessions, memoized
 # per SparkContext so repeated invocations don't accumulate sessions
@@ -271,17 +270,13 @@ GROUP BY n_name
 def join_self_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way star join, single agg shuffle on n_name. Nation is a true
     dim (25 rows, unconditional broadcast); customer is corpus-sized,
-    so its broadcast is SIZE-GATED on the parquet metadata count —
-    past the cap the custkey join shuffles (round-7, closing the
-    q3/q5/q10 class everywhere)."""
+    so the broadcast threshold and AQE size its join — past the
+    threshold the custkey join shuffles."""
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     return (
-        o.join(
-            broadcast_if_fits(c, table_row_count(sf_dir, "customer"), 96),
-            o.o_custkey == c.c_custkey,
-        )
+        o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(F.count("*").alias("n_orders"), dsum("o_totalprice", 2).alias("revenue"))
@@ -512,17 +507,13 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is |events| × windows-per-bin instead of |events| ×
     |windows| — the same candidates-then-verify shape as the LSH/IVF
     paths, applied to time. Windows (one per user after the min-agg)
-    broadcast here; when the window side outgrows broadcast, the same
-    plan shuffle-joins on the bin id, whose cardinality grows with the
-    time span, not with data volume. wb is a COMPUTED per-user frame,
-    so the hint is size-gated (round-6 advice item): users ≤ events,
-    making the parquet metadata row count × ≤2 bins a sound upper
-    bound on wb's rows — past the cap the shuffle-on-bin fallback
-    actually engages instead of OOMing. Whole seconds + event_id keep
-    every value engine-exact."""
+    are a computed frame, so the bin join carries no hint: AQE sees
+    their materialized size and broadcasts them while they are small;
+    past the threshold the same plan shuffle-joins on the bin id,
+    whose cardinality grows with the time span, not with data volume.
+    Whole seconds + event_id keep every value engine-exact."""
     ev = load(spark, sf_dir, "events")
     e = ev.select("event_id", "user_id", F.unix_timestamp("ts").alias("s"))
-    n_events = ev.count()  # parquet metadata count — no second load
     b = F.lit(RANGE_BIN_S).cast("long")
     w = (
         e.groupBy(F.col("user_id").alias("w_user"))
@@ -540,7 +531,7 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eb = e.withColumn("bin", (F.col("s") / b).cast("long"))
     return (
-        eb.join(broadcast_if_fits(wb, 2 * n_events, 64), "bin")
+        eb.join(wb, "bin")
         .filter((F.col("s") >= F.col("w_start")) & (F.col("s") < F.col("w_end")))
         .groupBy("w_user", "w_start")
         .agg(F.count("*").alias("n_events"))

@@ -13,9 +13,9 @@ Scale shapes:
 - Brute-force cosine is the CORRECTNESS baseline — the pair space is
   enumerated through a blocked (qblk, cblk) cell equi-join, never a
   cross join or full-table broadcast; sim_ann_lsh is the scale path.
-- Broadcast hints on computed corpus-sized frames are SIZE-GATED via
-  session.broadcast_if_fits (round-5 review): at test scale they
-  broadcast, past the cap the same joins shuffle on their equi-keys.
+- Joins against computed corpus-sized frames carry no broadcast hint:
+  the broadcast threshold and AQE size them, so at test scale they
+  broadcast and past the threshold they shuffle on their equi-keys.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from linux_logs_spark.catalog import load, table_row_count
 from linux_logs_spark.functions.compat import dsum
 from linux_logs_spark.session import (
-    broadcast_if_fits,
     default_parallelism,
     spread_ingest,
 )
@@ -114,13 +113,6 @@ w0 AS (
   JOIN nw nb ON doc_b = nb.doc_id
 )
 """
-
-
-# Estimated broadcast-relation bytes per row for the small frames the
-# similarity/dedup paths hint: (id, count) rows ≈ 64 B with UnsafeRow
-# overhead; a bucketed embedding row (64 floats + norm + ids) ≈ 600 B.
-_COUNT_ROW_BYTES = 64
-_EMBED_ROW_BYTES = 600
 
 
 def _posting_frame(
@@ -282,37 +274,23 @@ def dedup_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: levenshtein is O(len²) per pair, so it must only ever
     run on candidates — here the df-capped posting-list join bounds
     the pair count, the prefix bounds per-pair cost at 80², and the
-    candidate frame broadcasts into the documents scan twice to fetch
-    prefixes — the corpus is never collected, shuffled on text, or
-    self-joined. The candidate frame is COMPUTED and worst-case grows
-    with the corpus, so both hints are size-gated (round-6 advice
-    item): pairs is localCheckpoint'd (truncating the multi-stage
-    lineage so the second join doesn't recompute the blocked join)
-    and its EXACT count feeds broadcast_if_fits — past the cap both
-    joins shuffle on doc_id, correct at any scale."""
+    candidate frame joins the documents scan twice to fetch prefixes —
+    the corpus is never collected, shuffled on text, or self-joined.
+    The candidate frame is computed and worst-case grows with the
+    corpus, so neither join carries a hint: AQE sees its materialized
+    size and broadcasts it while it is small, else both joins shuffle
+    on doc_id."""
     d = load(spark, sf_dir, "documents")
-    pairs = (
-        blocked_jaccard_pairs(d)
-        .filter(F.col("jaccard") >= 0.4)
-        .localCheckpoint()
-    )
-    n_pairs = pairs.count()  # checkpointed → count is metadata-cheap
+    pairs = blocked_jaccard_pairs(d).filter(F.col("jaccard") >= 0.4)
     pref = d.select("doc_id", F.substring("text", 1, 80).alias("p"))
     with_a = (
         pref.alias("da")
-        .join(
-            broadcast_if_fits(pairs, n_pairs, _COUNT_ROW_BYTES),
-            F.col("da.doc_id") == F.col("doc_a"),
-        )
+        .join(pairs, F.col("da.doc_id") == F.col("doc_a"))
         .select("doc_a", "doc_b", "jaccard", F.col("da.p").alias("pa"))
     )
-    # with_a = pairs + an 80-char prefix per row (~2× the bytes).
     return (
         pref.alias("db")
-        .join(
-            broadcast_if_fits(with_a, n_pairs, 2 * _COUNT_ROW_BYTES + 160),
-            F.col("db.doc_id") == F.col("doc_b"),
-        )
+        .join(with_a, F.col("db.doc_id") == F.col("doc_b"))
         .select(
             "doc_a",
             "doc_b",
@@ -1437,16 +1415,13 @@ WHERE rn = 1
 def sim_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Majority label among the 5 nearest neighbors (ties → smallest
     label). Builds on the same ranked-neighbor plan as sim_cosine_topk.
-    The label frame is |embeddings| rows — size-gated (16 B/row:
-    two longs), falling back to a key shuffle past the cap."""
+    The label frame is |embeddings| rows; the broadcast threshold and
+    AQE size its join, a key shuffle past the threshold."""
     e = load(spark, sf_dir, "embeddings")
     topk = sim_cosine_topk(spark, sf_dir)
     labels = e.select(F.col("vec_id").alias("neighbor_id"), "label")
     votes = (
-        topk.join(
-            broadcast_if_fits(labels, table_row_count(sf_dir, "embeddings"), 16),
-            "neighbor_id",
-        )
+        topk.join(labels, "neighbor_id")
         .groupBy("vec_id", "label")
         .agg(F.count("*").alias("votes"))
     )
@@ -1692,17 +1667,14 @@ WHERE rn <= 3
 """,
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF terms per document. df (vocab-sized) broadcasts
-    into the tf table while it fits; the corpus size is the parquet
-    footer row count baked in as a literal (zero jobs — round 14;
-    previously a 1-row count(*) scalar that cost a second full
-    documents scan and a nested-loop broadcast). The vocab is Heaps-law
-    unbounded at 100 TB, so the df broadcast is SIZE-GATED on an
-    exact checkpointed count (the dedup_edit_verify precedent —
-    there is no metadata proxy for |vocab|); past the cap the word
-    join shuffles, which is the right plan once vocab >> executor
-    memory. The localCheckpoint also keeps the df agg from being
-    recomputed for the count."""
+    """Top-3 TF-IDF terms per document. The corpus size is the parquet
+    footer row count baked in as a literal, so no count(*) scalar adds
+    a second documents scan or a nested-loop join. The vocab is
+    Heaps-law unbounded at 100 TB, so the df join carries no hint: AQE
+    picks the build side from the materialized sizes while one side
+    fits the threshold, and shuffles the word join once neither does.
+    df derives from tf, so AQE reuses tf's exchange and documents is
+    read once."""
     d = load(spark, sf_dir, "documents")
     tok = spread_ingest(
         d.select("doc_id", "text"), table_row_count(sf_dir, "documents")
@@ -1713,16 +1685,12 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df derives from tf (rows are already unique per (doc, word)):
     # one fewer pass over the exploded tokens and no countDistinct
     # shuffle — at 100 TB the token explosion is the dominant volume.
-    df = tf.groupBy("word").agg(F.count("*").alias("df")).localCheckpoint(eager=True)
-    n_vocab = df.count()  # exact, on the checkpointed frame — no recompute
-    # n_docs from the parquet footer (zero jobs) — the old 1-row
-    # d.agg(count(*)) scalar was a SECOND full documents scan plus a
-    # BroadcastNestedLoopJoin in the plan (round-14 audit; guide §2.4)
+    df = tf.groupBy("word").agg(F.count("*").alias("df"))
     n_docs = F.lit(table_row_count(sf_dir, "documents"))
     tfidf = F.round(F.col("tf") * F.log(n_docs.cast("double") / F.col("df")), 6)
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("word"))
     return (
-        tf.join(broadcast_if_fits(df, n_vocab, 24), "word")
+        tf.join(df, "word")
         .withColumn("tfidf", tfidf)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
@@ -2075,22 +2043,20 @@ def emb_neighborhood_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard proxy for "does this embedding space separate classes").
     Reuses the cached ranked-neighbor plan (sim_cosine_topk), so the
     O(n²) scan is shared across the eval family; this query adds two
-    broadcast label joins and a 10-row aggregate. On uniform-random
+    label joins (sized by the broadcast threshold and AQE, key
+    shuffles past it) and a 10-row aggregate. On uniform-random
     synthetic vectors purity ≈ 1/|labels| by construction — the
     metric's JOB here is to be the deterministic, oracle-checked eval
     pipeline a real embedding table plugs into."""
     e = load(spark, sf_dir, "embeddings")
-    n_vecs = table_row_count(sf_dir, "embeddings")  # footer, no job
     topk = sim_cosine_topk(spark, sf_dir)
     ql = e.select(F.col("vec_id"), F.col("label"))
     nl = e.select(
         F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label")
     )
-    # |embeddings|-row label frames: size-gated (16 B/row — two
-    # longs); past the cap these enrich joins shuffle on their keys.
     nb = (
-        topk.join(broadcast_if_fits(ql, n_vecs, 16), "vec_id")
-        .join(broadcast_if_fits(nl, n_vecs, 16), "neighbor_id")
+        topk.join(ql, "vec_id")
+        .join(nl, "neighbor_id")
         .select(
             "label",
             F.when(F.col("label") == F.col("n_label"), 1).otherwise(0).alias("same"),
@@ -2137,9 +2103,10 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     division by n_tokens is deterministic on identical inputs.
 
     Scale shape: token explode → two hash aggregates (per-(doc,word),
-    per-word) — the same two-shuffle skeleton as text_tfidf; the
-    vocab-sized cnt frame is size-gated on its exact checkpointed
-    count; the 1-row total crossJoins as a broadcast scalar."""
+    per-word) — the same two-shuffle skeleton as text_tfidf. The
+    vocab-sized cnt frame is checkpointed because it feeds both the
+    word join (sized by the broadcast threshold and AQE) and the
+    1-row total, which crossJoins as a broadcast scalar."""
     d = load(spark, sf_dir, "documents")
     tok = spread_ingest(
         d.select("doc_id", "text"), table_row_count(sf_dir, "documents")
@@ -2150,15 +2117,14 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         tf.groupBy("word").agg(F.sum("tf").alias("cnt")).localCheckpoint(eager=True)
     )
-    n_vocab = cnt.count()  # exact, on the checkpointed frame
     # total tokens = sum over the vocab-sized cnt frame — NOT a second
-    # corpus-wide explode (round-7 review; exact long sum, identical)
+    # corpus-wide explode (exact long sum, identical)
     tot = cnt.agg(F.sum("cnt").alias("total"))
     term_raw = F.col("tf").cast("double") * F.log(
         F.col("cnt").cast("double") / F.col("total").cast("double")
     )
     return (
-        tf.join(broadcast_if_fits(cnt, n_vocab, 24), "word")
+        tf.join(cnt, "word")
         .crossJoin(F.broadcast(tot))
         .select("doc_id", "tf", term_raw.alias("term_raw"))
         .select(
@@ -2229,7 +2195,7 @@ FROM ce GROUP BY 1, 2
 def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-on-one-split, score-the-other perplexity filter as ONE
     declarative plan — the composition text_bigram_lm/text_perplexity
-    exercise separately (round-9 verdict item 6): a Laplace-smoothed
+    exercise separately: a Laplace-smoothed
     unigram LM is fit on the train split (split_train_holdout's
     md5 < 'cccc' rule, ~80%), every held-out document is scored
     against it (OOV words get the +1-smoothed floor ln(1/(total+V))),
@@ -2243,10 +2209,10 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle ∝ distinct eval terms), per-doc ce (∝ eval docs), final
     (lang, source) rollup (∝ blocks); lang/source ride the tf keys so
     scoring never joins back to the corpus. The vocab-sized LM frame
-    is size-gated into the tf join (broadcast_if_fits on its exact
-    checkpointed count — at 100 TB a 10⁸-word vocab falls back to a
-    shuffle equi-join on word); the 1-row (total, V) frame is a
-    broadcast scalar. Float discipline is text_perplexity's: each
+    is checkpointed because it feeds both the tf join and the 1-row
+    (total, V) broadcast scalar; the broadcast threshold and AQE size
+    the tf join, so a 10⁸-word vocab at 100 TB becomes a shuffle
+    equi-join on word. Float discipline is text_perplexity's: each
     term rounds half-away at 6 digits, per-doc sums run in
     DECIMAL(25,6), the ce division is one IEEE op on identical
     inputs, and the rollup mean re-applies round6 + DECIMAL."""
@@ -2260,7 +2226,6 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         tok_t.groupBy("word").agg(F.count("*").alias("cnt")).localCheckpoint(eager=True)
     )
-    n_vocab = cnt.count()  # exact, on the checkpointed frame
     tot = cnt.agg(F.sum("cnt").alias("total"), F.count("*").alias("v"))
     tf = (
         s.filter(~F.col("is_train"))
@@ -2272,7 +2237,7 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total") + F.col("v")
     ).cast("double")
     ce = (
-        tf.join(broadcast_if_fits(cnt, n_vocab, 24), "word", "left")
+        tf.join(cnt, "word", "left")
         .crossJoin(F.broadcast(tot))
         .select(
             "doc_id",

@@ -27,17 +27,20 @@ _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 
 def _scratch_tag(sf_dir: str) -> str:
     """Scratch/catalog tag for an sf_dir: basename PLUS a hash of the
-    full normalized path (round-5 review) — basename alone would let
-    two data roots sharing a final path component (/a/sf0.01 and
-    /b/sf0.01) clobber each other's staged state and serve one
-    dataset's staging to the other's query."""
+    full normalized path and of the scratch root's real path. Basename
+    alone would let two data roots sharing a final path component
+    (/a/sf0.01 and /b/sf0.01) clobber each other's staged state; the
+    scratch root keeps a copied or moved checkout from reusing staging
+    (a streaming checkpoint records absolute paths) written under the
+    old location."""
     import hashlib
 
     norm = os.path.normpath(sf_dir)
+    key = norm + "\0" + os.path.realpath(_SCRATCH)
     return (
         os.path.basename(norm).replace(".", "_")
         + "_"
-        + hashlib.md5(norm.encode()).hexdigest()[:8]
+        + hashlib.md5(key.encode()).hexdigest()[:8]
     )
 
 

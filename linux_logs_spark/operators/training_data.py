@@ -35,7 +35,6 @@ from linux_logs_spark.operators.llm_pipeline import (
     blocked_jaccard_pairs,
 )
 from linux_logs_spark.registry import register
-from linux_logs_spark.session import broadcast_if_fits
 
 # Token budget per packed training sequence. Small so sf0.001 already
 # exercises multi-chunk docs; the plan shape is budget-independent.
@@ -213,10 +212,9 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges — map-side partial min, so the exchange carries one row per
     distinct endpoint per partition, never the edge volume;
     (2) the strictly-decreasing merge map (b → nm, nm < b) is at most
-    vertex-set-sized and shrinks every round — it broadcasts
-    (size-gated on the |docs| footer bound), so updating the full
-    doc_id→cluster frame and remapping both edge endpoints are
-    broadcast joins with NO shuffle;
+    vertex-set-sized and shrinks every round — while it fits the
+    broadcast threshold, updating the full doc_id→cluster frame and
+    remapping both edge endpoints are broadcast joins with NO shuffle;
     (3) remapped intra-cluster edges become self-loops, filtered
     MAP-SIDE before the distinct, so the re-materialized edge set
     shrinks geometrically — near-clique dup graphs collapse almost
@@ -237,7 +235,6 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round past the first and needs no df-cap-ordering caveats.
     The oracle is the same graph closed under a recursive CTE."""
     d = load(spark, sf_dir, "documents")
-    n_docs = table_row_count(sf_dir, "documents")  # footer, no job
     edges0 = (
         blocked_jaccard_pairs(d)
         .filter(F.col("jaccard") >= 0.5)
@@ -268,23 +265,15 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
             converged = True
             break
         labels = (
-            labels.join(
-                broadcast_if_fits(upd, n_docs, 64),
-                F.col("cluster_id") == F.col("b"),
-                "left",
-            )
+            labels.join(upd, F.col("cluster_id") == F.col("b"), "left")
             .select("doc_id", F.coalesce("nm", "cluster_id").alias("cluster_id"))
             .localCheckpoint(eager=True)
         )
         ua = upd.toDF("ka", "va")
         ub = upd.toDF("kb", "vb")
         cedges = (
-            cedges.join(
-                broadcast_if_fits(ua, n_docs, 64), F.col("a") == F.col("ka"), "left"
-            )
-            .join(
-                broadcast_if_fits(ub, n_docs, 64), F.col("b") == F.col("kb"), "left"
-            )
+            cedges.join(ua, F.col("a") == F.col("ka"), "left")
+            .join(ub, F.col("b") == F.col("kb"), "left")
             .select(
                 F.coalesce("va", "a").alias("a"),
                 F.coalesce("vb", "b").alias("b"),

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from linux_logs_spark.catalog import load, table_row_count
 from linux_logs_spark.functions.compat import davg, dec, dsum, oracle_davg, oracle_dsum
 from linux_logs_spark.session import (
-    broadcast_if_fits,
     default_parallelism,
     scaled_partitions,
     spread_ingest,
@@ -65,12 +64,11 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key; top-10 via TakeOrderedAndProject with a unique
     tie-break (revenue, o_orderdate, l_orderkey).
 
-    Scale shape: orders (date-pruned but fact-proportional) and
-    customer (segment-filtered but corpus-sized) are SIZE-GATED via
-    broadcast_if_fits on their parquet metadata counts — same rule as
-    tpch_q8 — so past the cap those joins shuffle on their keys
-    instead of OOMing an executor; at test scale both still broadcast
-    (pinned in test_plans.py)."""
+    Orders (date-pruned but fact-proportional) and customer
+    (segment-filtered but corpus-sized) join without hints: the
+    broadcast threshold and AQE size both joins, so they broadcast
+    at test scale (pinned in test_plans.py) and shuffle on their keys
+    once either side outgrows the threshold."""
     cust_all = load(spark, sf_dir, "customer")
     c = cust_all.filter(F.col("c_mktsegment") == "BUILDING")
     orders_all = load(spark, sf_dir, "orders")
@@ -80,12 +78,10 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1996-07-01").cast("timestamp")
     )
-    n_orders = table_row_count(sf_dir, "orders")  # footer, no job
-    n_cust = table_row_count(sf_dir, "customer")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(broadcast_if_fits(o, n_orders, 64), li.l_orderkey == o.o_orderkey)
-        .join(broadcast_if_fits(c, n_cust, 96), o.o_custkey == c.c_custkey)
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(dsum(revenue, 4).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -114,14 +110,12 @@ GROUP BY n_name
 )
 def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-supplier volume (TPC-H Q5 shape): only the fixed-size
-    dims (nation, filtered region) broadcast unconditionally; orders
-    (one-year filter, fact-proportional), customer AND supplier —
-    both corpus-proportional per FIXTURES.md (supplier scales
-    10/100/1,000 with sf, linearly, like customer) — are SIZE-GATED
-    via broadcast_if_fits on parquet metadata counts, so the fact
-    table is shuffled exactly once at test scale and the big joins
-    fall back to key shuffles past the cap (round-7 review: the old
-    'supplier is a true dim' claim contradicted the fixture data)."""
+    dims (nation, filtered region) broadcast unconditionally. Orders
+    (one-year filter, fact-proportional), customer and supplier (both
+    corpus-proportional per FIXTURES.md) join without hints: the
+    broadcast threshold and AQE size them, so the fact table is
+    shuffled exactly once at test scale and the big joins become key
+    shuffles once they outgrow the threshold."""
     c = load(spark, sf_dir, "customer")
     orders_all = load(spark, sf_dir, "orders")
     o = orders_all.filter(
@@ -132,17 +126,11 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n_orders = table_row_count(sf_dir, "orders")  # footer, no job
-    n_cust = table_row_count(sf_dir, "customer")
-    n_supp = table_row_count(sf_dir, "supplier")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(broadcast_if_fits(o, n_orders, 64), li.l_orderkey == o.o_orderkey)
-        .join(broadcast_if_fits(c, n_cust, 96), o.o_custkey == c.c_custkey)
-        .join(
-            broadcast_if_fits(s, n_supp, 64),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
@@ -208,10 +196,12 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nation-pair trade volume (TPC-H Q7 shape, adapted to the
     reduced schema: the year comes from l_shipdate).
 
-    Scale shape: BOTH fact inputs are pre-filtered through broadcast
-    dims before the one fact-fact join — lineitem keeps only rows
-    whose supplier sits in the two nations (~2/|nations| of the
-    table), orders keeps only rows whose customer does. The orderkey
+    Scale shape: BOTH fact inputs are pre-filtered through the
+    nation-filtered dims before the one fact-fact join (the broadcast
+    threshold and AQE pick each dim join's build side) — lineitem
+    keeps only rows whose supplier sits in the two nations
+    (~2/|nations| of the table), orders keeps only rows whose
+    customer does. The orderkey
     join therefore shuffles two already-thinned streams instead of
     broadcasting an unfiltered orders table (which no executor could
     hold at 100 TB), and the final aggregate runs on the handful of
@@ -223,16 +213,11 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    cust_all = load(spark, sf_dir, "customer")
     # customer/supplier filtered to 2 nations are still ~2/|nations|
-    # of corpus-proportional tables (FIXTURES.md: both scale linearly
-    # with sf) — size-gate both broadcasts on the footer counts of
-    # their unfiltered parents (a conservative upper bound); only
-    # nation is a true fixed-size dim.
-    n_cust = table_row_count(sf_dir, "customer")  # footer, no job
-    n_supp = table_row_count(sf_dir, "supplier")
+    # of corpus-proportional tables (FIXTURES.md), so only nation
+    # carries a hint; the threshold and AQE size the other joins.
     cust = (
-        cust_all
+        load(spark, sf_dir, "customer")
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
@@ -242,11 +227,8 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load(spark, sf_dir, "orders")
     return (
-        li.join(broadcast_if_fits(supp, n_supp, 40), li.l_suppkey == supp.s_suppkey)
-        .join(
-            o.join(broadcast_if_fits(cust, n_cust, 40), o.o_custkey == cust.c_custkey),
-            li.l_orderkey == o.o_orderkey,
-        )
+        li.join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(o.join(cust, o.o_custkey == cust.c_custkey), li.l_orderkey == o.o_orderkey)
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy(
             "supp_nation",
@@ -288,10 +270,9 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     with c_custkey as the unique tie-break. c_acctbal passes through
     ungrouped-arithmetic-free, so the double is bit-identical.
     Orders (quarter-filtered, fact-proportional) and customer
-    (corpus-sized) are SIZE-GATED via broadcast_if_fits on parquet
-    metadata counts — the tpch_q8 rule, not a prose appeal to the
-    bucketed join: past the cap these two joins shuffle on their
-    keys; at test scale they still broadcast (test_plans.py pin)."""
+    (corpus-sized) join without hints: the broadcast threshold and
+    AQE size them, so they broadcast at test scale (test_plans.py
+    pin) and shuffle on their keys past the threshold."""
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     orders_all = load(spark, sf_dir, "orders")
     o = orders_all.filter(
@@ -300,11 +281,9 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
-    n_orders = table_row_count(sf_dir, "orders")  # footer, no job
-    n_cust = table_row_count(sf_dir, "customer")
     return (
-        li.join(broadcast_if_fits(o, n_orders, 64), li.l_orderkey == o.o_orderkey)
-        .join(broadcast_if_fits(c, n_cust, 96), o.o_custkey == c.c_custkey)
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
@@ -336,21 +315,19 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue from PROMO-type parts. Conditional-vs-total sums both
     accumulate in DECIMAL, then (100.0 * promo) / total runs as two
     IEEE double ops with identical parenthesization on both engines.
-    part is corpus-proportional (FIXTURES.md: 200/2,000/20,000 across
-    sf — ~1/1000 of lineitem but linear in it), so its broadcast is
-    SIZE-GATED on the parquet footer count; past the cap the fallback
-    is a key shuffle on p_partkey (the natural bucketing column, so a
-    bucketed layout makes it co-located)."""
+    part is corpus-proportional (FIXTURES.md: ~1/1000 of lineitem but
+    linear in it), so the broadcast threshold and AQE size its join;
+    past the threshold it is a key shuffle on p_partkey (the natural
+    bucketing column, so a bucketed layout makes it co-located)."""
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
     )
     p = load(spark, sf_dir, "part")
-    n_part = table_row_count(sf_dir, "part")  # footer, no job
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", disc_price).otherwise(F.lit(0.0))
     return (
-        li.join(broadcast_if_fits(p, n_part, 96), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             ((F.lit(100.0) * dsum(promo, 4)) / dsum(disc_price, 4)).alias(
                 "promo_revenue_pct"
@@ -398,11 +375,10 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = rev.agg(F.max("total_revenue").alias("_max_rev"))
     s = load(spark, sf_dir, "supplier")
     # top is a literal 1-row scalar — always broadcast; supplier is
-    # corpus-proportional (FIXTURES.md) → size-gate on footer count.
-    n_supp = table_row_count(sf_dir, "supplier")
+    # corpus-proportional (FIXTURES.md), so the threshold sizes it.
     return (
         rev.join(F.broadcast(top), rev.total_revenue == top._max_rev)
-        .join(broadcast_if_fits(s, n_supp, 64), F.col("supplier_no") == s.s_suppkey)
+        .join(s, F.col("supplier_no") == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
     )
@@ -430,20 +406,13 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent — a raw double sum would flip rows sitting on
     the boundary between partitionings). The grouped frame itself
     carries sum_qty forward, so lineitem is scanned and shuffled
-    exactly once. Broadcast DIRECTION matters here (round-5 review):
-    the HAVING survivors broadcast INTO the orders scan, and that
-    join result broadcasts into customer — the unfiltered
-    orders/customer tables are only ever streamed through, never
-    built into a hash table (q7's docstring in this file says why an
-    unfiltered orders broadcast is impossible at 100 TB). But 'rare'
-    is selectivity-DEPENDENT — survivors scale linearly with the
-    corpus and a skewed quantity distribution could blow the hint —
-    so both hints are gated on big's EXACT localCheckpoint'd count
-    (the dedup_edit_verify pattern; round-7 review): past the cap
-    both joins fall back to key shuffles, correct at any scale.
-    with_orders is 1:1 with big (o_orderkey is unique in orders), so
-    one count gates both. Top-100 is TakeOrderedAndProject with the
-    unique o_orderkey tie-break."""
+    exactly once. The HAVING survivors are rare but their count is
+    selectivity-dependent, so no join carries a hint: the broadcast
+    threshold and AQE pick each join's strategy and build side (at
+    test scale orders and customer fit the threshold and are built;
+    past it, AQE broadcasts the materialized survivors or shuffles).
+    Top-100 is TakeOrderedAndProject with the unique o_orderkey
+    tie-break."""
     li = load(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
@@ -452,14 +421,12 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("_dec_qty") > 250)
         .select("l_orderkey", F.col("_dec_qty").cast("double").alias("sum_qty"))
-        .localCheckpoint()
     )
-    n_big = big.count()  # checkpointed → count is metadata-cheap
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
-    with_orders = o.join(broadcast_if_fits(big, n_big, 24), o.o_orderkey == big.l_orderkey)
+    with_orders = o.join(big, o.o_orderkey == big.l_orderkey)
     return (
-        c.join(broadcast_if_fits(with_orders, n_big, 128), c.c_custkey == with_orders.o_custkey)
+        c.join(with_orders, c.c_custkey == with_orders.o_custkey)
         .select(
             "c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice", "sum_qty"
         )
@@ -1511,12 +1478,10 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lineitem fact, which is shuffled exactly once for the per-year
     aggregate. Only the fixed-size dims (two nation roles, region)
     broadcast unconditionally; part, supplier, orders and customer
-    are ALL corpus-proportional (FIXTURES.md: part 200/2,000/20,000
-    and supplier 10/100/1,000 scale linearly with sf, exactly like
-    orders/customer) and are SIZE-GATED via broadcast_if_fits on
-    their parquet metadata counts, so past the cap those joins
-    shuffle on their keys instead of OOMing an executor (rounds 6-7
-    review — the same rule as the blocked-pair family). Share = DECIMAL-accumulated
+    are all corpus-proportional (FIXTURES.md) and join without hints,
+    so the broadcast threshold and AQE size each of those joins and
+    past the threshold they shuffle on their keys instead of OOMing
+    an executor. Share = DECIMAL-accumulated
     conditional volume ÷ DECIMAL-accumulated total volume, divided
     once in double — bit-identical to the oracle's formulation (both
     sums exact, one IEEE division)."""
@@ -1529,10 +1494,6 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     c = load(spark, sf_dir, "customer")
-    n_orders = table_row_count(sf_dir, "orders")  # footer, no job
-    n_cust = table_row_count(sf_dir, "customer")
-    n_part = table_row_count(sf_dir, "part")
-    n_supp = table_row_count(sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
     n1 = n.select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey").alias("c_rkey")
@@ -1543,10 +1504,10 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     base = (
-        li.join(broadcast_if_fits(p, n_part, 96), li.l_partkey == p.p_partkey)
-        .join(broadcast_if_fits(s, n_supp, 64), li.l_suppkey == s.s_suppkey)
-        .join(broadcast_if_fits(o, n_orders, 64), li.l_orderkey == o.o_orderkey)
-        .join(broadcast_if_fits(c, n_cust, 96), o.o_custkey == c.c_custkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n1), c.c_nationkey == F.col("c_nkey"))
         .join(F.broadcast(n2), s.s_nationkey == F.col("s_nkey"))
         .join(F.broadcast(r), F.col("c_rkey") == r.r_regionkey)
@@ -1619,33 +1580,28 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic correlated scalar subquery, decorrelated into an
     aggregate-join.
 
-    Scale shape (round-7 review — the classic hand-optimized Q17):
+    Scale shape (the classic hand-optimized Q17):
     Catalyst cannot push a join-derived IN-set into an aggregate, so
     the per-part average's input is EXPLICITLY semi-joined with the
     brand partkey set BEFORE groupBy(l_partkey) — the aggregate then
     shuffles only ~1/|brands| of lineitem instead of the full table.
     Results are identical: the oracle's pa rows for non-brand parts
     were dropped by its own downstream partkey join anyway. part is
-    corpus-proportional (FIXTURES.md), so both its broadcasts are
-    SIZE-GATED on the footer count. The final 1-row aggregate is a
+    corpus-proportional (FIXTURES.md), so the broadcast threshold and
+    AQE size both of its joins. The final 1-row aggregate is a
     partial+final; DECIMAL accumulation on both the threshold average
     and the revenue sum keeps the single double division (÷ 7.0)
     bit-identical to the oracle."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
-    n_part = table_row_count(sf_dir, "part")  # footer, no job
     keys = p.select("p_partkey")
     pa = (
-        li.join(
-            broadcast_if_fits(keys, n_part, 16),
-            li.l_partkey == keys.p_partkey,
-            "left_semi",
-        )
+        li.join(keys, li.l_partkey == keys.p_partkey, "left_semi")
         .groupBy(F.col("l_partkey").alias("a_partkey"))
         .agg((F.lit(0.2) * davg("l_quantity", 2)).alias("qty_threshold"))
     )
     return (
-        li.join(broadcast_if_fits(p, n_part, 96), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(pa, F.col("a_partkey") == li.l_partkey)
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg((dsum("l_extendedprice", 2) / F.lit(7.0)).alias("avg_yearly"))
@@ -3102,14 +3058,13 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part scans only the three brands' size ranges, lineitem only
     quantity 1-30 — visible as PushedFilters on both scans), while
     the cross-side residual evaluates post-join. part is
-    corpus-proportional, so its broadcast is SIZE-GATED on the
-    parquet footer count (the tpch_q14 rule); revenue accumulates in
-    DECIMAL(25,4), order-free."""
+    corpus-proportional, so the broadcast threshold and AQE size its
+    join (the tpch_q14 rule); revenue accumulates in DECIMAL(25,4),
+    order-free."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
-    n_part = table_row_count(sf_dir, "part")
     return (
-        li.join(broadcast_if_fits(p, n_part, 96), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .filter(F.expr(_q19_pred_sql()))
         .agg(
             F.count("*").alias("n_lines"),

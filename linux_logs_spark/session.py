@@ -129,26 +129,6 @@ def get_spark(
     return spark
 
 
-# Cap for ADAPTIVE broadcast hints on computed frames (round-5 review).
-# Catalyst can't estimate the size of a frame behind a pandas UDF or a
-# multi-stage agg, so an unconditional F.broadcast() hint caps the plan
-# at whatever fits one executor — with no fallback, the 100 TB story
-# dies in a broadcast OOM. Call sites estimate rows × bytes/row from a
-# SOURCE-table count (parquet metadata — cheap) and only hint when the
-# estimate fits; past the cap the same join runs as a shuffle equi-join.
-BROADCAST_CAP_BYTES = 64 << 20
-
-
-def broadcast_if_fits(df, est_rows: int, est_bytes_per_row: int):
-    """F.broadcast(df) when est_rows * est_bytes_per_row fits the cap,
-    else df unchanged (the join then shuffles — correct at any scale)."""
-    from pyspark.sql import functions as F
-
-    if est_rows * est_bytes_per_row <= BROADCAST_CAP_BYTES:
-        return F.broadcast(df)
-    return df
-
-
 def spread_ingest(df, n_rows: int | None = None):
     """Round-robin repartition of a NARROW scan feeding a compute-
     heavy map stage (shingle/word explode + multi-hash signatures).

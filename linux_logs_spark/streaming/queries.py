@@ -34,7 +34,6 @@ from linux_logs_spark.catalog import (
     table_row_count,
 )
 from linux_logs_spark.registry import register
-from linux_logs_spark.session import broadcast_if_fits
 
 _counter = itertools.count()
 
@@ -446,15 +445,13 @@ FROM events e JOIN ua ON e.user_id = ua.user_id
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream ⋈ static dimension enrichment: the static side (per-user
-    averages, batch-computed) broadcasts into every micro-batch when
-    it fits. The frame is |users| rows; the gate uses the EXACT row
-    count of the checkpointed aggregate (32 B/row: long key + double +
-    hashmap overhead) — |events| as a proxy overestimated ~67× and
-    would drop the broadcast long before the real frame outgrew the
-    cap (round-7 review). The localCheckpoint also computes the
-    static side ONCE instead of once per micro-batch. At 10⁸ users
-    the enrich falls back to a key shuffle instead of OOMing every
-    trigger."""
+    averages, batch-computed) is |users| rows and joins without a
+    hint, so the broadcast threshold decides — it broadcasts into
+    every micro-batch while it fits, and at 10⁸ users the enrich is a
+    key shuffle instead of OOMing every trigger. AQE does not run in
+    streaming, so the threshold reads the statistics the
+    localCheckpoint carries; the checkpoint also computes the static
+    side ONCE instead of once per micro-batch."""
     ev = load(spark, sf_dir, "events")
     static_avg = (
         ev.groupBy("user_id")
@@ -466,9 +463,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    n_users = static_avg.count()  # exact, on the checkpointed frame
     src = _events_stream(spark, sf_dir)
-    joined = src.join(broadcast_if_fits(static_avg, n_users, 32), "user_id").select(
+    joined = src.join(static_avg, "user_id").select(
         "event_id", "user_id", "event_type", "user_avg"
     )
     return _run(spark, joined, "append")

@@ -9,8 +9,9 @@ A fingerprint hashes everything that determines a query's behavior
 that is reachable statically from its registered callable:
 
 - the transitive CPython bytecode of the operator function and every
-  package-local function it references (globals by co_names, nested
-  code objects, closure cells, default args);
+  package-local function it references (globals by co_names, names
+  imported inside a function body, nested code objects, closure
+  cells, default args);
 - the simple constants embedded in that bytecode and the module-level
   scalar knobs it reads (so a knob change re-fingerprints every query
   whose behavior it steers);
@@ -36,7 +37,9 @@ prints {name: fingerprint} as JSON for every query registered there.
 
 from __future__ import annotations
 
+import dis
 import hashlib
+import sys
 import types
 
 _SIMPLE = (str, bytes, int, float, bool, complex, type(None))
@@ -79,6 +82,7 @@ def fingerprint_fn(
         seen_fns.add(id(f))
         g = getattr(f, "__globals__", {})
         names: set[str] = set()
+        imported: set[tuple[str, str]] = set()
         stack = [f.__code__]
         seen_codes: set[int] = set()
         while stack:
@@ -88,6 +92,14 @@ def fingerprint_fn(
             seen_codes.add(id(code))
             h.update(code.co_code)
             names.update(code.co_names)
+            # `from mod import x` inside a body: IMPORT_NAME, then one
+            # IMPORT_FROM per imported name
+            module = None
+            for op in dis.get_instructions(code):
+                if op.opname == "IMPORT_NAME":
+                    module = op.argval
+                elif op.opname == "IMPORT_FROM":
+                    imported.add((module, op.argval))
             for c in code.co_consts:
                 if isinstance(c, types.CodeType):
                     stack.append(c)
@@ -114,13 +126,17 @@ def fingerprint_fn(
                 b = _const_bytes(v, strip)
                 if b is not None:
                     h.update(b)
-        # module-level globals the bytecode names, in sorted order so
-        # traversal is deterministic: package functions recurse, scalar
-        # knobs hash as name=value
-        for n in sorted(names):
-            if n not in g:
-                continue
-            v = g[n]
+        # module-level globals the bytecode names, then the names it
+        # imports locally, in sorted order so traversal is
+        # deterministic: package functions recurse, scalar knobs hash
+        # as name=value
+        refs = [(n, g[n]) for n in sorted(names) if n in g]
+        refs += [
+            (n, getattr(sys.modules[m], n))
+            for m, n in sorted(imported)
+            if m.startswith(package) and hasattr(sys.modules.get(m), n)
+        ]
+        for n, v in refs:
             if isinstance(v, types.FunctionType) and getattr(
                 v, "__module__", ""
             ).startswith(package):
@@ -137,7 +153,6 @@ def fingerprint_fn(
 def compute_fingerprints(repo_dir: str) -> dict[str, str]:
     """{query name: fingerprint} for the registry rooted at repo_dir."""
     import os
-    import sys
 
     repo_dir = os.path.realpath(repo_dir)
     sys.path.insert(0, repo_dir)
@@ -156,7 +171,6 @@ def compute_fingerprints(repo_dir: str) -> dict[str, str]:
 if __name__ == "__main__":
     import json
     import os
-    import sys
 
     repo = sys.argv[1] if len(sys.argv) > 1 else os.getcwd()
     print(json.dumps(compute_fingerprints(os.path.abspath(repo)), indent=1))

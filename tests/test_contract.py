@@ -253,3 +253,31 @@ def test_fingerprint_detects_behavior_changes():
     s2 = _REGISTRY["scan_csv_roundtrip"]
     fp_a = mod.fingerprint_fn(s2.fn, s2.oracle, strip=str(repo))
     assert fp_a == mod.fingerprint_fn(s2.fn, s2.oracle, strip=str(repo))
+
+
+def test_fingerprint_follows_function_local_imports(monkeypatch):
+    """sim_cosine_blocked imports llm_pipeline._gemm_topk inside its
+    body, so the name is not in the operator's module globals; changing
+    that function must still move the operator's fingerprint."""
+    import importlib.util
+    from pathlib import Path
+
+    from linux_logs_spark.operators import llm_pipeline as lp
+    from linux_logs_spark.registry import _REGISTRY
+
+    repo = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "plan_fingerprint", repo / "scripts" / "plan_fingerprint.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    s = _REGISTRY["sim_cosine_blocked"]
+    fp1 = mod.fingerprint_fn(s.fn, s.oracle, strip=str(repo))
+
+    def changed(spark, sf_dir):
+        return lp.sim_cosine_topk(spark, sf_dir).limit(1)
+
+    changed.__module__ = lp.__name__
+    monkeypatch.setattr(lp, "_gemm_topk", changed)
+    assert mod.fingerprint_fn(s.fn, s.oracle, strip=str(repo)) != fp1

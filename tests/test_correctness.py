@@ -29,6 +29,34 @@ def test_query_matches_oracle(name, spark, sf_dir):
     assert not issues, f"{name}: " + "; ".join(issues)
 
 
+# Queries whose corpus-proportional joins carry no broadcast hint, so
+# the broadcast threshold and AQE pick broadcast or shuffle for them.
+_THRESHOLD_SIZED = (
+    "dedup_clusters_cc", "dedup_edit_verify", "dq_expectations",
+    "emb_neighborhood_purity", "join_range_binned", "join_self_multi",
+    "pipeline_perplexity_gate", "scd2_merge", "sim_knn_label",
+    "stream_static_join", "table_time_travel", "text_perplexity",
+    "text_tfidf", "tpch_q3", "tpch_q5", "tpch_q7", "tpch_q8", "tpch_q10",
+    "tpch_q14", "tpch_q15", "tpch_q17", "tpch_q18", "tpch_q19",
+)
+
+
+@pytest.mark.parametrize("name", _THRESHOLD_SIZED)
+def test_shuffle_joins_match_oracle(name, spark, sf_dir):
+    """Past the broadcast threshold these joins shuffle; with the
+    threshold off every unhinted join takes that path at test scale
+    and must still match the oracle."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        spark_pdf = _SPECS[name].fn(spark, sf_dir).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+    issues = compare_frames(spark_pdf, run_oracle(_SPECS[name].oracle, sf_dir))
+    assert not issues, f"{name}: " + "; ".join(issues)
+
+
 def test_blocked_gemm_equals_jvm_fold_topk(spark, sf_dir):
     """The two exact top-5 ENGINES must agree row-for-row: the blocked
     GEMM (numpy, the registered engine since round 7) vs the JVM

@@ -274,13 +274,15 @@ def test_jaccard_self_join_reuses_one_corpus_pass(spark, sf_dir):
     exists so neither that (a checkpoint truncates the reused subtree)
     nor a count-table join (different pruned subtree → no reuse) can
     silently come back."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, -1)
     try:
         df = _Q["dedup_ngram_jaccard"].fn(spark, sf_dir)
         df.collect()  # AQE reuse is decided at runtime
         final = df._jdf.queryExecution().executedPlan().toString()
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set(key, prev)
     assert "ReusedExchange" in final, final
     assert "Checkpoint" not in final, final
 
@@ -377,26 +379,24 @@ def test_tpch_q15_max_compare_is_broadcast_equijoin(spark, sf_dir):
 
 
 def test_tpch_q18_single_lineitem_shuffle(spark, sf_dir):
-    """The HAVING-filtered grouped frame carries sum_qty forward and
-    is localCheckpoint'd so its exact count can size-gate the two
-    broadcasts (round-7 review): lineitem's one groupBy shuffle runs
-    inside the checkpoint job, so the FINAL plan has zero Exchanges —
-    orders and customer ride the (gate-approved) broadcasts and the
-    top-100 is TakeOrdered."""
+    """The HAVING-filtered grouped frame carries sum_qty forward, so
+    lineitem's one groupBy shuffle is the plan's ONLY Exchange —
+    orders and customer ride broadcasts and the top-100 is
+    TakeOrdered."""
     plan = plan_string(_Q["tpch_q18"].fn(spark, sf_dir))
     nodes = set(re.findall(r"\((\d+)\) (BroadcastExchange|Exchange)\b", plan))
     shuffles = [n for n in nodes if n[1] == "Exchange"]
-    assert len(shuffles) == 0, plan
+    assert len(shuffles) == 1, plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_tpch_q8_star_broadcasts_at_test_scale(spark, sf_dir):
     """All six dims around the lineitem fact — including the four
-    size-gated corpus-proportional ones (part, supplier, orders,
-    customer) — must still ride broadcasts at test scale: the gate
-    falling back to shuffle here would mean broadcast_if_fits
-    mis-sized a table that trivially fits."""
+    corpus-proportional ones (part, supplier, orders, customer) that
+    the broadcast threshold sizes — must still ride broadcasts at
+    test scale: a shuffle here would mean a table that trivially
+    fits was planned past the threshold."""
     plan = plan_string(_Q["tpch_q8"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 6, plan
     assert "SortMergeJoin" not in plan, plan
@@ -539,9 +539,9 @@ def test_emb_quantize_is_shuffle_free_and_codegen(spark, sf_dir):
 def test_tpch_q8_six_broadcast_dims_no_smj(spark, sf_dir):
     """Q8's deepest star AT TEST SCALE: all six dims broadcast around
     the lineitem fact — the fact shuffles exactly once, for the
-    per-year agg. The orders/customer sides are size-gated
-    (broadcast_if_fits), so this pins the under-cap shape; past the
-    cap those two joins legitimately shuffle."""
+    per-year agg. The orders/customer sides are sized by the
+    broadcast threshold, so this pins the under-threshold shape; past
+    the threshold those two joins legitimately shuffle."""
     plan = plan_string(_Q["tpch_q8"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 6, plan
     assert "SortMergeJoin" not in plan, plan
@@ -559,10 +559,10 @@ def test_tpch_q13_preserves_left_join(spark, sf_dir):
 
 
 def test_scd2_merge_update_set_broadcasts_at_test_scale(spark, sf_dir):
-    """The MERGE update set is a slice of corpus-sized customer, so it
-    is size-gated (broadcast_if_fits, round-6 review) — this pins the
-    under-cap shape: the left join still broadcasts the update set at
-    test scale; past the cap it legitimately shuffles on the key."""
+    """The MERGE update set is a slice of corpus-sized customer, so the
+    broadcast threshold sizes its join — this pins the under-threshold
+    shape: the left join still broadcasts the update set at test
+    scale; past the threshold it legitimately shuffles on the key."""
     plan = plan_string(_Q["scd2_merge"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 1, plan
     assert "SortMergeJoin" not in plan, plan
@@ -570,31 +570,30 @@ def test_scd2_merge_update_set_broadcasts_at_test_scale(spark, sf_dir):
 
 def test_sim_knn_label_vote_join_broadcasts_at_test_scale(spark, sf_dir):
     """The |embeddings|-row label frame feeding the kNN vote join is
-    size-gated; under the cap it must still ride a broadcast."""
+    sized by the broadcast threshold; under it the join must still
+    ride a broadcast."""
     plan = plan_string(_Q["sim_knn_label"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 1, plan
 
 
 def test_emb_neighborhood_purity_label_joins_broadcast(spark, sf_dir):
-    """Both gated label-enrich joins (query label + neighbor label)
-    must still broadcast at test scale."""
+    """Both label-enrich joins (query label + neighbor label) must
+    still broadcast at test scale."""
     plan = plan_string(_Q["emb_neighborhood_purity"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
 def test_stream_static_join_gate_broadcasts_at_test_scale(spark, sf_dir):
-    """Mirrors stream_static_join's size gate with its batch twin —
-    the SAME gate decision as production (exact checkpointed |users|
-    count, round-7 review; the |events| proxy would diverge from the
-    production gate past ~2M events): at test scale the |users|-row
-    per-user-average frame must still broadcast into the enrich join.
-    (The streaming plan itself is not inspectable pre-run; the gate
-    decision is identical because it is taken batch-side, before
-    readStream.)"""
+    """Mirrors stream_static_join with its batch twin: the static side
+    is the same checkpointed |users|-row per-user-average frame, and
+    with no hint the broadcast threshold must still pick a broadcast
+    from the statistics the checkpoint carries. (The streaming plan
+    itself is not inspectable pre-run, and AQE does not run in
+    streaming, so the static planner's choice is the one that
+    holds.)"""
     from pyspark.sql import functions as F
 
     from linux_logs_spark.catalog import load
-    from linux_logs_spark.session import broadcast_if_fits
 
     ev = load(spark, sf_dir, "events")
     static_avg = (
@@ -602,38 +601,42 @@ def test_stream_static_join_gate_broadcasts_at_test_scale(spark, sf_dir):
         .agg(F.avg("value").alias("user_avg"))
         .localCheckpoint(eager=True)
     )
-    n_users = static_avg.count()
-    joined = ev.join(broadcast_if_fits(static_avg, n_users, 32), "user_id")
+    joined = ev.join(static_avg, "user_id")
     plan = plan_string(joined)
     assert "BroadcastHashJoin" in plan, plan
 
 
 def test_join_self_multi_customer_broadcasts_at_test_scale(spark, sf_dir):
-    """customer's broadcast is size-gated (round-7); under the cap the
-    star join must still run both joins as broadcasts."""
+    """customer's join is sized by the broadcast threshold; under it
+    the star join must still run both joins as broadcasts."""
     plan = plan_string(_Q["join_self_multi"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
 def test_tpch_q7_gated_customer_still_broadcasts(spark, sf_dir):
-    """q7's nation-filtered customer is size-gated; under the cap all
-    four dim-enrich joins broadcast and only the fact-fact orderkey
-    join (plus aggs) shuffles."""
+    """q7's nation-filtered customer is sized by the broadcast
+    threshold; under it all four dim-enrich joins broadcast and only
+    the fact-fact orderkey join (plus aggs) shuffles."""
     plan = plan_string(_Q["tpch_q7"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 4, plan
 
 
 def test_text_tfidf_df_broadcasts_at_test_scale(spark, sf_dir):
-    """The vocab-sized df frame is size-gated on an exact checkpointed
-    count; under the cap the word join must still broadcast. Round 14:
-    n_docs comes from the parquet footer, so the plan must hold exactly
-    ONE documents scan (the token explode) and no nested-loop join —
-    the old 1-row count(*) scalar cost a second full scan + BNLJ."""
-    plan = plan_string(_Q["text_tfidf"].fn(spark, sf_dir))
+    """The vocab-sized df frame is sized by the broadcast threshold;
+    under it the word join must still broadcast. n_docs comes from the
+    parquet footer and df derives from tf, so AQE's final plan reads
+    documents exactly ONCE (the df side reuses tf's exchange) and holds
+    no nested-loop join — a 1-row count(*) scalar would cost a second
+    full scan + BNLJ."""
+    df = _Q["text_tfidf"].fn(spark, sf_dir)
+    plan = plan_string(df)
     assert plan.count("BroadcastHashJoin") >= 1, plan
-    tree = plan.split("\n\n")[0]
-    assert len(re.findall(r"Scan parquet", tree)) == 1, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    df.collect()  # AQE reuse is decided at runtime
+    final = plan_string(df)
+    assert "isFinalPlan=true" in final, final
+    tree = final.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"Scan parquet", tree)) == 1, final
 
 
 def test_scan_apache_log_is_shuffle_free(spark, sf_dir):
@@ -655,8 +658,9 @@ def test_corpus_budget_trim_shuffle_budget(spark, sf_dir):
 
 
 def test_table_time_travel_diff_broadcasts_at_test_scale(spark, sf_dir):
-    """The as-of diff's v2 side is size-gated; under the cap it rides
-    a broadcast (past the cap the diff shuffles on the key)."""
+    """The as-of diff's v2 side is sized by the broadcast threshold;
+    under it the join rides a broadcast (past it the diff shuffles on
+    the key)."""
     plan = plan_string(_Q["table_time_travel"].fn(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 1, plan
 
@@ -664,8 +668,8 @@ def test_table_time_travel_diff_broadcasts_at_test_scale(spark, sf_dir):
 def test_text_perplexity_two_aggregate_skeleton(spark, sf_dir):
     """Same two-shuffle skeleton as text_tfidf: per-(doc,word) tf agg
     and the per-doc reduction; the vocab join broadcasts under the
-    cap and the 1-row total crossJoins as a broadcast scalar — no
-    cartesian, no vocab shuffle at test scale."""
+    threshold and the 1-row total crossJoins as a broadcast scalar —
+    no cartesian, no vocab shuffle at test scale."""
     plan = plan_string(_Q["text_perplexity"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 1, plan

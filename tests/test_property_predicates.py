@@ -100,28 +100,6 @@ def test_block_pair_keys_covers_every_pair_exactly_once(spark):
         assert meets["min_meets"] == 1 and meets["max_meets"] == 1, (qb, cb, meets)
 
 
-def test_broadcast_if_fits_gates_on_estimate(spark, sf_dir):
-    """session.broadcast_if_fits: under the cap the frame comes back
-    broadcast-hinted; over the cap it is returned UNCHANGED so the
-    join can fall back to a shuffle at scale."""
-    from pyspark.sql import functions as F
-
-    from linux_logs_spark.catalog import load
-    from linux_logs_spark.session import BROADCAST_CAP_BYTES, broadcast_if_fits
-
-    df = load(spark, sf_dir, "nation")
-    over = broadcast_if_fits(df, BROADCAST_CAP_BYTES, 2)  # 2x the cap
-    assert over is df
-    under = broadcast_if_fits(df, 10, 10)
-    assert under is not df
-    joined = load(spark, sf_dir, "customer").join(
-        under, F.col("c_nationkey") == F.col("n_nationkey")
-    )
-    from linux_logs_spark.plans.explain import assert_in_plan
-
-    assert_in_plan(joined, "BroadcastHashJoin")
-
-
 def test_lsh_planes_are_full_rank_for_any_k():
     """A plane series of phase shifts of one sinusoid has rank 2, so K
     planes give ~2K buckets, not 2^K, and K stops mattering. The

@@ -113,3 +113,18 @@ def test_resource_defaults_fit_the_host(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
     assert default_parallelism() == 3
     assert default_driver_memory() == "2g"
+
+
+def test_scratch_tag_follows_the_scratch_root(monkeypatch, tmp_path, sf_dir):
+    """Staging written under one checkout's .scratch must not be
+    reused by a copy of the checkout: a streaming checkpoint in it
+    records the old absolute paths. The tag therefore changes with
+    the scratch root, not only with sf_dir."""
+    from linux_logs_spark.operators import scans
+
+    tag = scans._scratch_tag(sf_dir)
+    assert scans._scratch_tag(sf_dir) == tag
+    monkeypatch.setattr(scans, "_SCRATCH", str(tmp_path / ".scratch"))
+    moved = scans._scratch_tag(sf_dir)
+    assert moved != tag
+    assert moved.split("_")[:-1] == tag.split("_")[:-1]  # same sf basename
