@@ -1,14 +1,16 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the full registered query surface at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] once and prints ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"<name>": <sec>, ...}, "sf": <sf>}
 
 Each query is forced through the noop sink so the whole plan executes
 (a bare count() would let Catalyst prune projections). Per-category
-regressions localize via the query name prefixes.
+regressions localize via the query name prefixes. The artifact beside
+the repo holds every query's time and a host stamp (see _host), so a
+run on a loaded or smaller host shows in its own numbers.
 """
 
 from __future__ import annotations
@@ -18,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from linux_logs_spark.registry import all_queries  # noqa: E402
 from linux_logs_spark.session import default_parallelism, get_spark  # noqa: E402
@@ -106,14 +109,58 @@ PROBE_QUERIES = (
 )
 
 
+def _host() -> dict:
+    """Where a run happens: cores, MemTotal, the 1-minute load average
+    before the session starts and the code's git sha, suffixed
+    ``-dirty`` when tracked files differ from it (None outside a
+    checkout). The artifact adds ``load1_after`` when it is written."""
+    import subprocess
+
+    with open("/proc/meminfo") as fh:
+        mem = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    try:
+        r = subprocess.run(
+            ["git", "-C", REPO, "describe", "--always", "--dirty", "--abbrev=40"],
+            capture_output=True, text=True, timeout=30,
+        )
+        sha = r.stdout.strip() if r.returncode == 0 else None
+    except (OSError, subprocess.SubprocessError):
+        sha = None
+    return {"cpus": default_parallelism(), "mem_total_kib": mem,
+            "load1_before": os.getloadavg()[0], "git_sha": sha}
+
+
+def _write(artifact: str, blob: dict) -> None:
+    try:
+        with open(os.path.join(REPO, artifact), "w") as fh:
+            json.dump(blob, fh, indent=1)
+    except OSError:
+        pass
+
+
+def _noop(df) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def warm_session(app: str):
+    """A session whose JVM executors and Python/Arrow worker pool have
+    already started, so neither bootstrap (the workers' is ~2-5 s) is
+    billed to whichever query happens to need it first."""
+    from pyspark.sql.functions import col, pandas_udf
+
+    spark = get_spark(app, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    _noop(spark.range(1000).selectExpr("sum(id)"))
+    _warm = pandas_udf(lambda s: s + 1, "long")
+    _noop(spark.range(1000).select(_warm(col("id"))))
+    return spark
+
+
 def _rehearsal_module():
     """Load scripts/scale_rehearsal.py (not a package) for its tier
-    generator, knob table and directory constants."""
+    generator and directory constants."""
     import importlib.util
 
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "scripts", "scale_rehearsal.py"
-    )
+    path = os.path.join(REPO, "scripts", "scale_rehearsal.py")
     spec = importlib.util.spec_from_file_location("scale_rehearsal", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -131,8 +178,8 @@ def scale_probe() -> None:
     probe's own numbers are computed fresh from that parquet every
     run). Every scale-dependent size (LSH planes, sketch widths, IVF
     cells) derives from the tier's parquet footers, exactly as at
-    sf0.1. Writes bench_scale_probe_c<cpus>.json beside the repo;
-    never touches bench_full.json."""
+    sf0.1. Writes bench_scale_probe_c<cpus>.json (with the host stamp)
+    beside the repo; never touches bench_full.json."""
     import pyarrow.parquet as pq
 
     sr = _rehearsal_module()
@@ -152,185 +199,39 @@ def scale_probe() -> None:
             tail_mult=sr.TAIL_MULT_100X,
             docs_only=True,
         )
-    _await_quiet_window()
-    spark = get_spark(
-        "linux-logs-spark-scale-probe",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    from pyspark.sql.functions import col, pandas_udf
-
-    _warm = pandas_udf(lambda s: s + 1, "long")
-    spark.range(1000).select(_warm(col("id"))).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    host = _host()
+    spark = warm_session("linux-logs-spark-scale-probe")
     specs = all_queries()
     timings: dict[str, float] = {}
     for name in PROBE_QUERIES:
         t0 = time.perf_counter()
-        df = specs[name].fn(spark, sr.SCALE100_DIR)
-        df.write.mode("overwrite").format("noop").save()
+        _noop(specs[name].fn(spark, sr.SCALE100_DIR))
         timings[name] = round(time.perf_counter() - t0, 3)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
-    total = round(sum(timings.values()), 3)
-    cpus = default_parallelism()
     payload = {
         "metric": "scale_probe_wall_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "n_queries": len(timings),
-        "cpus": cpus,
+        "cpus": host["cpus"],
         "n_docs": sr.N_DOCS_100X,
         "n_vecs": sr.N_VECS_100X,
     }
-    try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                f"bench_scale_probe_c{cpus}.json",
-            ),
-            "w",
-        ) as fh:
-            json.dump(payload, fh, indent=1)
-    except OSError:
-        pass
+    _write(f"bench_scale_probe_c{host['cpus']}.json",
+           {**payload, "host": {**host, "load1_after": os.getloadavg()[0]}})
     print(json.dumps(payload), flush=True)
 
 
-# Loaded-window gate: a full run whose median exceeds the committed
-# artifact's by more than this ratio is rejected (see guard_full_artifact).
-GUARD_RATIO = 1.10
-
-# Outlier-splice gate (round 13, verdict item 3): two rounds running,
-# the driver's artifact was a rejected loaded run because load arrived
-# MID-run — after the pre-run cooldown passed. A mid-run load check
-# can't tell external load from our own (local[32] keeps load1 ≈ ncpu
-# while the bench itself runs), so instead the run self-heals after
-# the main pass: any query slower than the committed per-query
-# baseline by >RETRY_RATIO AND >RETRY_MIN_ABS seconds is re-timed
-# once, solo, after a fresh cooldown, and the better time is spliced
-# in (min-of-passes — the _MEASURED_COST convention). A REAL
-# regression re-times to the same slow number and stays; a transient
-# stall window re-times to the quiet number and the artifact stops
-# being hostage to whichever minute the host got busy.
-RETRY_RATIO = 1.5
-RETRY_MIN_ABS = 0.3
-MAX_RETRIES = 60
-
-
-def _baseline_query_times(repo_dir: str) -> dict[str, float] | None:
-    """Per-query seconds of the HEAD-committed bench_full.json (the
-    guarded-publish baseline), or None."""
-    import subprocess
-
-    try:
-        r = subprocess.run(
-            ["git", "-C", repo_dir, "show", "HEAD:bench_full.json"],
-            capture_output=True, text=True, timeout=30,
-        )
-        if r.returncode != 0:
-            return None
-        q = json.loads(r.stdout).get("queries")
-        return {k: float(v) for k, v in q.items()} if isinstance(q, dict) else None
-    except (OSError, subprocess.SubprocessError, ValueError, TypeError):
-        return None
-
-
-def _stats_of_artifact(text: str) -> tuple[float, float] | None:
-    """(median, total) of an artifact's per-query timings, or None."""
-    try:
-        blob = json.loads(text)
-        vals = sorted(float(v) for v in blob["queries"].values())
-        return (vals[len(vals) // 2], sum(vals)) if vals else None
-    except (ValueError, KeyError, AttributeError, TypeError):
-        return None
-
-
-def _prior_full_stats(repo_dir: str) -> tuple[float, float] | None:
-    """(median, total) per-query time of the HEAD-COMMITTED bench_full.json
-    (``git show HEAD:bench_full.json``), falling back to the
-    working-tree file when git is unavailable; None if neither is
-    usable. HEAD-first closes the round-8 drift loop: an external
-    runner may write a loaded-window run straight into the
-    working-tree file, and a disk-based guard would then measure the
-    NEXT run against the loaded numbers — the committed artifact is
-    the one that passed a human/guarded publish, so it is the
-    baseline. 'Unusable' includes structurally wrong JSON (non-dict
-    queries, non-numeric values) — the guard must degrade, never
-    crash a finished run (round-8 review)."""
-    import subprocess
-
-    head = disk = None
-    try:
-        r = subprocess.run(
-            ["git", "-C", repo_dir, "show", "HEAD:bench_full.json"],
-            capture_output=True, text=True, timeout=30,
-        )
-        if r.returncode == 0:
-            head = _stats_of_artifact(r.stdout)
-    except (OSError, subprocess.SubprocessError):
-        pass
-    try:
-        with open(os.path.join(repo_dir, "bench_full.json")) as fh:
-            disk = _stats_of_artifact(fh.read())
-    except OSError:
-        pass
-    if head is None or disk is None:
-        return head or disk
-    # Baseline = elementwise best of the two (round-9 review):
-    # HEAD-first alone let a later worse run overwrite a better
-    # UNCOMMITTED run from the same session (keep-best held across
-    # commits only). Taking min(median) and min(total) separately
-    # means a new run must beat the best median or the best total
-    # seen in EITHER artifact; a loaded run written straight to disk
-    # still can't raise the baseline because the committed numbers
-    # stay in the min.
-    return (min(head[0], disk[0]), min(head[1], disk[1]))
-
-
-def guard_full_artifact(new_median: float | None,
-                        prior: tuple[float, float] | None,
-                        force: bool, new_total: float | None = None) -> bool:
-    """True = the run may overwrite bench_full.json. The artifact's
-    contract is 'best quiet-window run of the current code', so any
-    run with a median >10% above the committed one is presumed a
-    loaded window and rejected — round 7's quiet 183.9 s artifact was
-    silently replaced by a loaded 215.5 s driver run whose median was
-    only 12.5% inflated, so the gate must sit BELOW that (a 25%
-    threshold would have passed the exact incident it exists to
-    block — round-8 review). A real regression will show up under
-    --force after a quiet-window confirmation rerun.
-
-    KEEP-BEST (round 9): a run inside the 10% window that improves
-    NEITHER the median NOR the total is also rejected — round 9
-    measured three consecutive "passing" runs ratchet the committed
-    baseline 219.1 s → 235.8 s → 255.7 s because each compared
-    against the previous overwrite; under keep-best the artifact only
-    moves when some number actually got better, so compounding
-    sub-10% degradations can never walk the baseline upward. A real
-    across-the-board regression lands via --force after a
-    quiet-window confirmation rerun."""
-    if force or prior is None or new_median is None:
-        return True
-    prior_median, prior_total = prior
-    if new_median > GUARD_RATIO * prior_median:
-        return False  # loaded window
-    return new_median <= prior_median or (
-        new_total is not None and new_total < prior_total
-    )
-
-
-def _emit(timings: dict[str, float], partial: bool = False, subset: bool = False,
-          force: bool = False, retimed: dict[str, dict] | None = None) -> None:
+def _emit(timings: dict[str, float], host: dict, partial: bool = False,
+          subset: bool = False) -> None:
     total = round(sum(timings.values()), 3)
     # Median/p90 ride along because the shared VM's hypervisor
     # throttle windows inflate single queries 5-40x (BASELINE.md
     # round-5 notes): the distribution shape tells a stall-window
     # total apart from a genuine regression.
     ordered = sorted(timings.values())
+    sf = sf_of(SF_DIR)
     payload = {
         "metric": "wall_sec_all_queries",
         "value": total,
@@ -342,105 +243,38 @@ def _emit(timings: dict[str, float], partial: bool = False, subset: bool = False
         # the stall-outlier signal this field exists to separate out,
         # so report p90 only when the sample supports it.
         "p90_sec": ordered[(len(ordered) * 9) // 10] if len(ordered) >= 10 else None,
-        "sf": sf_of(SF_DIR),
+        "sf": sf,
     }
     if partial:
         payload["partial"] = True
     # Only a COMPLETE full run at the canonical sf0.1 may overwrite
     # bench_full.json. Everything else goes to a side file: subset
-    # runs (a 2-query smoke must not clobber the 167-query evidence),
+    # runs (a 2-query smoke must not clobber the full-surface evidence),
     # SIGTERM'd partials (a truncated run is indistinguishable from a
-    # complete one once committed — this nearly happened in round 5),
-    # and non-default SF runs (same clobber class the driver_sim SF
-    # guard closes).
-    sf = sf_of(SF_DIR)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
+    # complete one once committed) and non-default SF runs.
     if subset:
         artifact = "bench_full_subset.json"
     elif partial:
         artifact = "bench_full_partial.json"
     elif sf != 0.1:
         artifact = f"bench_full_sf{sf}.json"
-    elif not guard_full_artifact(
-        payload["median_sec"], prior := _prior_full_stats(repo_dir), force,
-        new_total=total,
-    ):
-        artifact = "bench_full_rejected.json"
-        payload["rejected_loaded_run"] = True
-        loaded = (
-            prior is not None
-            and payload["median_sec"] is not None
-            and payload["median_sec"] > GUARD_RATIO * prior[0]
-        )
-        reason = (
-            f"median >{round((GUARD_RATIO - 1) * 100)}% above the baseline "
-            "artifact — presumed loaded window; rerun quietly or pass --force"
-            if loaded
-            else "run improves neither median nor total vs the baseline "
-            "artifact — keep-best retains the existing one (--force to "
-            "override after a quiet-window confirmation)"
-        )
-        print(f"bench: {reason}; writing bench_full_rejected.json",
-              file=sys.stderr)
     else:
         artifact = "bench_full.json"
-    blob = {"total_sec": total, "queries": timings, "sf": sf}
-    if retimed:
-        # transparency: these entries are min(first pass, solo retry),
-        # and BOTH pass times are recorded (round-13 advice: the
-        # min-of-passes policy is asymmetric — only slower-than-
-        # baseline queries get a second chance — so the artifact
-        # carries the raw pair to make that bias auditable)
-        blob["retimed"] = {k: retimed[k] for k in sorted(retimed)}
-        payload["retimed"] = len(retimed)
+    blob = {"total_sec": total, "queries": timings, "sf": sf,
+            "host": {**host, "load1_after": os.getloadavg()[0]}}
     if partial:
         blob["partial"] = True
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), artifact),
-            "w",
-        ) as fh:
-            json.dump(blob, fh, indent=1)
-    except OSError:
-        pass
+    _write(artifact, blob)
     print(json.dumps(payload), flush=True)
-
-
-def _await_quiet_window(max_wait_s: int = 300, threshold: float = 8.0) -> None:
-    """Best-effort cooldown before the timed pass: rounds 5/6/9/11 each
-    recorded a rejected loaded-window artifact because the driver's
-    bench started while rehearsal stragglers still held the cores
-    (uniform ~1.2-1.3× inflation across every query — the documented
-    load signature). Poll the 1-minute load average and delay up to
-    max_wait_s until it drops below `threshold`; if it never does,
-    proceed anyway (the median guard still rejects) so a busy host
-    cannot deadlock the driver."""
-    deadline = time.monotonic() + max_wait_s
-    while time.monotonic() < deadline:
-        try:
-            load1 = os.getloadavg()[0]
-        except OSError:
-            return
-        if load1 < threshold:
-            return
-        print(f"bench: load1={load1:.1f} >= {threshold}; cooling down",
-              file=sys.stderr, flush=True)
-        time.sleep(15)
 
 
 def main() -> None:
     if "--scale-probe" in sys.argv[1:]:
         scale_probe()
         return
-    _await_quiet_window()
-    spark = get_spark(
-        "linux-logs-spark-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    host = _host()
     specs = all_queries()
-    argv = sys.argv[1:]
-    force = "--force" in argv
-    only = [a for a in argv if a != "--force"]  # optional: subset by name
+    only = sys.argv[1:]  # optional: subset by name
     names = only or sorted(specs)
 
     timings: dict[str, float] = {}
@@ -451,34 +285,20 @@ def main() -> None:
     import signal
 
     def on_term(signum, frame):
-        _emit(timings, partial=True, subset=bool(only), force=force)
+        _emit(timings, host, partial=True, subset=bool(only))
         os._exit(0)
 
     signal.signal(signal.SIGTERM, on_term)
 
-    # absorb session/executor bootstrap so the first query isn't inflated
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # ... and the Python/Arrow worker pool, which otherwise bills its
-    # spin-up (~2-5 s) to whichever pandas-UDF query runs first
-    from pyspark.sql.functions import col, pandas_udf
-
-    _warm = pandas_udf(lambda s: s + 1, "long")
-    spark.range(1000).select(_warm(col("id"))).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # ... and the Python DataSource machinery (round-14: profiling the
-    # round-13 verdict's 6.15 s in-suite scan_avro_roundtrip showed
-    # ~5 s of it was SESSION-GLOBAL first-use bootstrap — the one-shot
-    # driver-side planner processes (create_data_source /
-    # plan_data_source_read / write_into_data_source, each a fresh
-    # python importing pyspark) plus the datasource-eval worker-module
-    # spin-up — billed to whichever datasource query happens to run
-    # first in registry order: avro measured 4.10 s write + 3.13 s
-    # read cold but 1.70 s run after its siblings and 1.11 s warm.
-    # Warming it here makes the per-query artifact order-independent,
-    # the same discipline as the JVM and pandas-UDF warms above.)
+    spark = warm_session("linux-logs-spark-bench")
+    # Warm the Python DataSource machinery too: its first use in a
+    # session pays ~5 s of session-global bootstrap (the driver-side
+    # planner processes create_data_source / plan_data_source_read /
+    # write_into_data_source, each a fresh python importing pyspark,
+    # plus the datasource-eval worker spin-up), which would otherwise
+    # be billed to whichever datasource query runs first in registry
+    # order (scan_avro_roundtrip measured 4.10 s write + 3.13 s read
+    # cold against 1.11 s warm).
     import tempfile
 
     from linux_logs_spark.sources.avro_py import register_pyavro
@@ -486,31 +306,22 @@ def main() -> None:
 
     register_synthlog(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.read.format("synthlog").option("n", "64").option("parts", "2").load(
-    ).write.mode("overwrite").format("noop").save()
+    _noop(spark.read.format("synthlog").option("n", "64").option("parts", "2").load())
     register_pyavro(spark)
     with tempfile.TemporaryDirectory() as td:
         wp = os.path.join(td, "warm_avro")
         spark.range(64).selectExpr("id AS event_id").write.format(
             "pyavro"
         ).mode("overwrite").option("path", wp).save()
-        spark.read.format("pyavro").option("path", wp).load().write.mode(
-            "overwrite"
-        ).format("noop").save()
-    # ... and the Structured Streaming engine (round-15, same §1.4
-    # class as the warms above, declared in OPTIMIZATION_r15.md:
-    # profiling showed the FIRST streaming query per session pays
-    # ~2.5-3.5 s of session-global spin-up — StreamingQueryManager,
-    # micro-batch planner, state-store/commit-log classes — billed to
-    # whichever §2.9 query runs first in registry order
-    # (stream_custom_state in the current 243: its r14 in-suite 2.2 s
-    # re-timed at 1.5 s warmed; stream_tumbling measured 4.9 s cold vs
-    # 1.2 s warm in one session). A 64-row stateful availableNow drain
-    # through a parquet source and a memory sink touches the same
-    # machinery the registered queries use; the python-DataSource
-    # STREAMING reader path (stream_python_source/_sink) is warmed by
-    # a 2-row synthlog micro-batch drain, the streaming sibling of the
-    # batch synthlog warm above.
+        _noop(spark.read.format("pyavro").option("path", wp).load())
+    # ... and the Structured Streaming engine: the FIRST streaming
+    # query per session pays ~2.5-3.5 s of session-global spin-up
+    # (StreamingQueryManager, micro-batch planner, state-store and
+    # commit-log classes; stream_tumbling measured 4.9 s cold vs 1.2 s
+    # warm in one session). A 64-row stateful availableNow drain
+    # through a parquet source and a memory sink touches the machinery
+    # the registered queries use; a 2-row synthlog drain warms the
+    # python-DataSource streaming reader path.
     with tempfile.TemporaryDirectory() as td:
         wp = os.path.join(td, "warm_stream_src")
         spark.range(64).selectExpr("id", "id % 4 AS k").write.mode(
@@ -537,47 +348,15 @@ def main() -> None:
         spark.catalog.dropTempView("bench_warm_stream")
         spark.catalog.dropTempView("bench_warm_pystream")
 
-    def timed(name: str) -> float:
+    for name in names:
         # Time plan construction + execution together: streaming
         # queries do their micro-batch work inside fn().
         t0 = time.perf_counter()
-        df = specs[name].fn(spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        return round(time.perf_counter() - t0, 3)
-
-    for name in names:
-        timings[name] = timed(name)
+        _noop(specs[name].fn(spark, SF_DIR))
+        timings[name] = round(time.perf_counter() - t0, 3)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
 
-    # outlier splice: re-time queries a transient mid-run load window
-    # inflated vs the committed baseline (see RETRY_RATIO above).
-    # Full canonical runs only — a subset run has no artifact claim.
-    retimed: dict[str, dict] = {}
-    if not only and sf_of(SF_DIR) == 0.1:
-        base = _baseline_query_times(os.path.dirname(os.path.abspath(__file__)))
-        if base:
-            flagged = [
-                n for n in names
-                if n in base
-                and timings[n] > RETRY_RATIO * base[n]
-                and timings[n] - base[n] > RETRY_MIN_ABS
-            ][:MAX_RETRIES]
-            if flagged:
-                print(f"# re-timing {len(flagged)} outliers solo: "
-                      f"{' '.join(flagged[:8])}{' ...' if len(flagged) > 8 else ''}",
-                      file=sys.stderr, flush=True)
-                _await_quiet_window(max_wait_s=120)
-                for name in flagged:
-                    t = timed(name)
-                    # record BOTH passes whether or not the retry won,
-                    # so the min-of-passes bias is auditable
-                    retimed[name] = {"first": timings[name], "retry": t}
-                    if t < timings[name]:
-                        timings[name] = t
-                    print(f"# retry {name}: {t:.3f}s", file=sys.stderr,
-                          flush=True)
-
-    _emit(timings, subset=bool(only), force=force, retimed=retimed)
+    _emit(timings, host, subset=bool(only))
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Solo re-timer: N noop-sink passes of the named queries in one warmed
-session (bench.py's timed() methodology — plan construction included).
+session (bench.py's methodology — plan construction included).
 Usage: solo_time.py [--n 3] query [query ...]"""
 from __future__ import annotations
 

@@ -22,28 +22,6 @@ REGISTRY = os.path.join(REPO, "linux_logs_spark", "registry.py")
 RESULTS = os.path.join(REPO, "driver_sim_results.json")
 
 
-def _median_ratio_vs_table(costs: dict[str, float], src: str) -> float | None:
-    """Median new/old cost ratio against the current table — the
-    loaded-window detector bench.py's artifact guard uses, applied to
-    the cost table (round-8 review: the same clobber class). Old costs
-    are parsed ONLY from the _MEASURED_COST block (round-8 review #2:
-    a bare repo-wide regex would absorb any quoted numeric literal
-    added elsewhere in registry.py)."""
-    block = re.search(
-        r"_MEASURED_COST: dict\[str, float\] = \{(.*?)\n\}", src, re.DOTALL
-    )
-    if not block:
-        return None
-    old = {
-        k: float(v)
-        for k, v in re.findall(r'"([^"]+)": ([\d.]+)', block.group(1))
-    }
-    ratios = sorted(
-        costs[k] / old[k] for k in costs if old.get(k, 0) > 0.05
-    )
-    return ratios[len(ratios) // 2] if ratios else None
-
-
 def main() -> None:
     with open(RESULTS) as fh:
         data = json.load(fh)
@@ -66,13 +44,6 @@ def main() -> None:
 
     with open(REGISTRY) as fh:
         src = fh.read()
-    ratio = _median_ratio_vs_table(costs, src)
-    if ratio is not None and ratio > 1.10 and "--force" not in sys.argv:
-        raise SystemExit(
-            f"refusing: median cost ratio {ratio:.3f} vs current table "
-            "suggests a loaded-window run — rerun driver_sim quietly or "
-            "pass --force"
-        )
     pat = re.compile(
         r"(_MEASURED_COST: dict\[str, float\] = \{\n).*?(\n\})", re.DOTALL
     )
@@ -82,8 +53,7 @@ def main() -> None:
 
     # Maintain the machine-written provenance line so the table's
     # comment cannot go stale across refreshes (round-7 review).
-    args = [a for a in sys.argv[1:] if a != "--force"]
-    note = args[0] if args else "no note given"
+    note = sys.argv[1] if len(sys.argv) > 1 else "no note given"
     prov = (
         f"# LAST REFRESH: {len(costs)} queries, total "
         f"{data.get('total_s', '?')} s, zero bad rows; {note}\n"

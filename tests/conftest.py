@@ -25,6 +25,17 @@ def sf_dir() -> str:
     return TEST_SF_DIR
 
 
+def drop_scratch(sf_dir: str) -> None:
+    """Delete the engine's staging for a temporary sf_dir
+    (``.scratch/<tag>``), which would otherwise outlive the directory
+    it was staged from."""
+    import shutil
+
+    from linux_logs_spark.operators.scans import _SCRATCH, _scratch_tag
+
+    shutil.rmtree(os.path.join(_SCRATCH, _scratch_tag(sf_dir)), ignore_errors=True)
+
+
 @pytest.fixture
 def make_tier(sf_dir, tmp_path):
     """Build a scale-factor directory under tmp_path: every table copied
@@ -45,4 +56,5 @@ def make_tier(sf_dir, tmp_path):
                 shutil.copy(table_path(sf_dir, t), table_path(out, t))
         return out
 
-    return make
+    yield make
+    drop_scratch(str(tmp_path))

@@ -38,79 +38,36 @@ def test_registry_rejects_duplicate_names():
         register("agg_groupby", "aggregate")(lambda s, d: None)
 
 
-def test_bench_full_artifact_guard():
-    """bench.py must refuse to overwrite bench_full.json with a run
-    whose median is >10% above the committed artifact unless forced —
-    mechanizing the quiet-window snapshot rule (round-7 verdict: the
-    183.9 s close artifact was silently replaced by a loaded 215.5 s
-    driver run; that incident's median inflation was 12.5%, so the
-    gate must catch a 12.5% bump)."""
-    from bench import guard_full_artifact
-
-    P = (0.40, 100.0)  # committed (median, total)
-    assert guard_full_artifact(0.40, P, force=False, new_total=99.0)   # flat median, better total
-    assert guard_full_artifact(0.39, P, force=False, new_total=120.0)  # better median
-    assert not guard_full_artifact(0.46, (0.409, 100.0), force=False,
-                                   new_total=90.0)                     # the incident (loaded)
-    assert not guard_full_artifact(0.45, P, force=False, new_total=90.0)  # loaded
-    assert guard_full_artifact(0.45, P, force=True, new_total=90.0)       # forced
-    assert guard_full_artifact(0.45, None, force=False, new_total=90.0)   # no prior
-    assert guard_full_artifact(None, P, force=False, new_total=90.0)      # no median
-    # KEEP-BEST (round 9): inside the 10% window but better at NOTHING
-    # → rejected; the 219.1→235.8→255.7 ratchet class
-    assert not guard_full_artifact(0.42, P, force=False, new_total=110.0)
-    assert guard_full_artifact(0.42, P, force=False, new_total=99.9)   # total improved
-    assert guard_full_artifact(0.40, P, force=False, new_total=110.0)  # median no worse
-
-
-def test_prior_full_median_prefers_head_commit(tmp_path):
-    """_prior_full_median reads the HEAD-committed bench_full.json,
-    not the working-tree file — a loaded run written straight to disk
-    (the round-8 driver drift) must not become the next run's
-    baseline. Fallback order pinned: HEAD → working tree → None."""
+def test_bench_emit_writes_every_run_with_its_host(tmp_path, monkeypatch, capsys):
+    """A complete sf0.1 run overwrites bench_full.json even when it is
+    slower than the one there, and carries the host it ran on; runs
+    that are not comparable go to side files."""
     import json
-    import subprocess
 
-    from bench import _prior_full_stats as _prior_full_median
+    import bench
 
-    repo = tmp_path / "repo"
-    repo.mkdir()
-    subprocess.run(["git", "init", "-q"], cwd=repo, check=True)
-    subprocess.run(["git", "-C", repo, "config", "user.email", "t@t"], check=True)
-    subprocess.run(["git", "-C", repo, "config", "user.name", "t"], check=True)
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    faster = {"total_sec": 1.2, "queries": {"a": 0.4, "b": 0.4, "c": 0.4}, "sf": 0.1}
+    (tmp_path / "bench_full.json").write_text(json.dumps(faster))
+    host = {"cpus": 4, "mem_total_kib": 1, "load1_before": 0.0, "git_sha": None}
+    slower = {"a": 0.9, "b": 0.9, "c": 1.1}
 
-    committed = {"total_sec": 1.0, "queries": {"a": 0.40, "b": 0.40, "c": 0.40}, "sf": 0.1}
-    (repo / "bench_full.json").write_text(json.dumps(committed))
-    subprocess.run(["git", "-C", repo, "add", "-A"], check=True)
-    subprocess.run(["git", "-C", repo, "commit", "-qm", "quiet"], check=True)
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path / "sf0.1"))
+    bench._emit(slower, host)
+    line = json.loads(capsys.readouterr().out)
+    art = json.loads((tmp_path / "bench_full.json").read_text())
+    assert not (tmp_path / "bench_full_rejected.json").exists()
+    assert art["queries"] == slower and art["total_sec"] == 2.9
+    assert set(art["host"]) == {*host, "load1_after"}
+    assert set(line) == {"metric", "value", "unit", "queries", "n_queries",
+                         "median_sec", "p90_sec", "sf"}
+    assert line["value"] == art["total_sec"] == round(sum(slower.values()), 3)
 
-    # a loaded run lands in the working tree only
-    loaded = {"total_sec": 9.0, "queries": {"a": 0.9, "b": 0.9, "c": 0.9}, "sf": 0.1}
-    (repo / "bench_full.json").write_text(json.dumps(loaded))
-    assert _prior_full_median(str(repo)) == (0.40, 1.2000000000000002)
-
-    # no git history (fresh dir): working-tree fallback
-    plain = tmp_path / "plain"
-    plain.mkdir()
-    (plain / "bench_full.json").write_text(json.dumps(loaded))
-    assert _prior_full_median(str(plain)) == (0.9, 2.7)
-
-    # neither: None
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert _prior_full_median(str(empty)) is None
-
-
-def test_bench_baseline_query_times_reads_head():
-    """The outlier-splice pass (round 13) compares against the
-    HEAD-committed per-query baseline; it must parse the committed
-    artifact and degrade to None on garbage, never crash a run."""
-    import os
-
-    from bench import _baseline_query_times
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = _baseline_query_times(repo)
-    assert base and len(base) > 200
-    assert all(isinstance(v, float) for v in base.values())
-    assert _baseline_query_times("/nonexistent") is None
+    bench._emit(slower, host, subset=True)
+    bench._emit(slower, host, partial=True)
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["partial"] is True
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path / "sf0.001"))
+    bench._emit(slower, host)
+    for side in ("subset", "partial", "sf0.001"):
+        assert json.loads((tmp_path / f"bench_full_{side}.json").read_text())["host"]
+    assert json.loads((tmp_path / "bench_full.json").read_text()) == art

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import drop_scratch
 
 from linux_logs_spark.registry import all_queries
 
@@ -40,7 +41,7 @@ DOC_QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def short_doc_dir(spark, tmp_path_factory) -> str:
+def short_doc_dir(spark, tmp_path_factory):
     """A tmp sf_dir holding a documents.parquet of mostly-short docs.
 
     doc_ids include a %50==0 row (decontam's stand-in eval set) and two
@@ -60,7 +61,8 @@ def short_doc_dir(spark, tmp_path_factory) -> str:
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    return d
+    yield d
+    drop_scratch(d)
 
 
 @pytest.mark.parametrize("name", DOC_QUERIES)

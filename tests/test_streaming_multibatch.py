@@ -16,6 +16,7 @@ real multi-trigger execution.
 from __future__ import annotations
 
 import pytest
+from conftest import drop_scratch
 from pyspark.sql import functions as F
 
 from linux_logs_spark.catalog import load
@@ -32,7 +33,8 @@ def split_events_dir(spark, sf_dir, tmp_path_factory):
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     ]
     assert len(files) == 3, files
-    return d
+    yield d
+    drop_scratch(d)
 
 
 def _run_multibatch(spark, streamed, mode: str, name: str):
