@@ -630,44 +630,20 @@ def log_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _footer_max_day_s(path: str) -> int:
-    """Epoch seconds of the UTC day containing the newest ts, read from
-    the parquet footer's column statistics — zero Spark jobs. Stats are
-    µs-truncated, which can only LOWER the boundary by one day in the
-    measure-zero exactly-midnight case; a lower cutoff just enlarges
-    the open tail (correctness is cutoff-independent — the merge covers
-    everything either way). Raises if any row group lacks stats — a
-    silent full-scan fallback would quietly void the operator's whole
-    cost contract."""
+def _utc_day_s(ts) -> int:
+    """Epoch seconds of the UTC day containing a footer ts statistic:
+    raw epoch-nanos for a TIMESTAMP(NANOS) column, else a datetime
+    (naive means UTC). Stats are µs-truncated, which can only LOWER
+    the boundary by one day in the measure-zero exactly-midnight case;
+    a lower cutoff just enlarges the open tail (correctness is
+    cutoff-independent — the merge covers everything either way)."""
     import datetime
-    import os
 
-    import pyarrow.parquet as pq
-
-    files = (
-        [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-        if os.path.isdir(path)
-        else [path]
-    )
-    mx = None
-    for fp in files:
-        f = pq.ParquetFile(fp)
-        idx = f.schema_arrow.get_field_index("ts")
-        for rg in range(f.metadata.num_row_groups):
-            st = f.metadata.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                mx = None
-                break
-            mx = st.max if mx is None or st.max > mx else mx
-        if mx is None:
-            break
-    if mx is None:
-        raise RuntimeError(f"parquet ts statistics missing for {path}")
-    if isinstance(mx, int):  # raw epoch-nanos physical type
-        mx = datetime.datetime.fromtimestamp(mx / 1e9, datetime.timezone.utc)
-    if mx.tzinfo is None:
-        mx = mx.replace(tzinfo=datetime.timezone.utc)
-    day = mx.replace(hour=0, minute=0, second=0, microsecond=0)
+    if isinstance(ts, int):
+        ts = datetime.datetime.fromtimestamp(ts / 1e9, datetime.timezone.utc)
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=datetime.timezone.utc)
+    day = ts.replace(hour=0, minute=0, second=0, microsecond=0)
     return int(day.timestamp())
 
 
@@ -695,8 +671,9 @@ def log_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Refresh cost is O(delta) + O(|rollup|) FOR REAL, not just in
     prose (round-7 review caught the first version full-scanning
     twice): the open/closed cutoff comes from the parquet FOOTER's ts
-    statistics (zero Spark jobs — the table_row_count trick applied to
-    max), and the delta filter lands on the RAW ts column BEFORE any
+    statistics (catalog.table_column_minmax, zero Spark jobs; a table
+    without them — an empty one has no row groups — is all open
+    tail), and the delta filter lands on the RAW ts column BEFORE any
     conversion, so it pushes into the scan and prunes closed row
     groups by their min/max stats (plan-pinned: PushedFilters carries
     ts). On a real dt-partitioned 100 TB log the same predicate is a
@@ -705,20 +682,14 @@ def log_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linux_logs_spark.catalog import (
         dataset_fingerprint,
         nanos_ts_to_micros,
+        table_column_minmax,
         table_path,
     )
     from linux_logs_spark.operators.scans import staged_dataset
 
     load(spark, sf_dir, "events")  # side effect: session confs (UTC, nanosAsLong)
     path = table_path(sf_dir, "events")
-    cutoff_day_s = _footer_max_day_s(path)
     raw = spark.read.parquet(path)
-    # the raw column is epoch-nanos BIGINT (driver testdata) or a real
-    # timestamp (rehearsal data) — build the pushable literal to match
-    if dict(raw.dtypes).get("ts") == "bigint":
-        cut = F.lit(cutoff_day_s * 1_000_000_000)
-    else:
-        cut = F.timestamp_seconds(F.lit(cutoff_day_s))
 
     def partial(df: DataFrame) -> DataFrame:
         hourly = nanos_ts_to_micros(df).select(
@@ -731,20 +702,34 @@ def log_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("value", 2)).alias("value_dec"),  # STAYS decimal
         )
 
-    size, mtime_ns = dataset_fingerprint(path)
-    base_path = staged_dataset(
-        sf_dir,
-        "rollup_hourly",
-        f"{size}_{mtime_ns}_{cutoff_day_s}",
-        lambda p: partial(raw.filter(F.col("ts") < cut))
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    base = spark.read.parquet(base_path)
-    delta = partial(raw.filter(F.col("ts") >= cut))
+    ts_range = table_column_minmax(sf_dir, "events", "ts")
+    if ts_range is None:
+        # no ts statistics (an empty table has no row groups): the
+        # whole table is the open tail, with no staged base
+        parts = partial(raw)
+    else:
+        cutoff_day_s = _utc_day_s(ts_range[1])
+        # the raw column is epoch-nanos BIGINT (driver testdata) or a
+        # real timestamp (rehearsal data) — build the pushable literal
+        # to match
+        if dict(raw.dtypes).get("ts") == "bigint":
+            cut = F.lit(cutoff_day_s * 1_000_000_000)
+        else:
+            cut = F.timestamp_seconds(F.lit(cutoff_day_s))
+        size, mtime_ns = dataset_fingerprint(path)
+        base_path = staged_dataset(
+            sf_dir,
+            "rollup_hourly",
+            f"{size}_{mtime_ns}_{cutoff_day_s}",
+            lambda p: partial(raw.filter(F.col("ts") < cut))
+            .write.mode("overwrite")
+            .parquet(p),
+        )
+        parts = spark.read.parquet(base_path).unionByName(
+            partial(raw.filter(F.col("ts") >= cut))
+        )
     return (
-        base.unionByName(delta)
-        .groupBy("event_type", "hour_s")
+        parts.groupBy("event_type", "hour_s")
         .agg(
             F.sum("n").alias("n"),
             F.sum("value_dec").cast("double").alias("value_sum"),

@@ -2558,7 +2558,7 @@ WHERE {cos} >= {SEMDEDUP_THRESHOLD}
     return "\n".join(sql)
 
 
-def _semdedup_fine_pairs(assigned: DataFrame, stats_only: bool = False) -> DataFrame:
+def _semdedup_fine_pairs(assigned: DataFrame) -> DataFrame:
     """The two-level regime's fine stage: ONE shuffle of (coarse,
     vec_id, embedding) keyed by coarse cell, then per coarse cell a
     numpy fine k-means (k2 = max(1, |cell| // T) cells seeded by the
@@ -2576,16 +2576,7 @@ def _semdedup_fine_pairs(assigned: DataFrame, stats_only: bool = False) -> DataF
     Mean updates use floor(double(sum)/double(count)) — double
     division then floor, the SAME operation as Spark's F.floor(s/n)
     and DuckDB's floor(sum/count), not numpy integer floor-division,
-    so all three engines round identical edge cases identically.
-
-    ``stats_only`` (round-14, verdict item 3): skip the pair GEMM and
-    emit one (cluster, fine, n_rows) row per FINE cell instead —
-    the same coarse shuffle and fine k-means, so the returned size
-    distribution is exactly the one the pair scan would see. Used by
-    scripts/semdedup_skew.py to measure fine-cell occupancy skew at
-    the rehearsal scales (the 60M leg's pair output grew n^1.29
-    against the flat n·T design bound; this separates 'fine cells
-    are oversized' from 'pairs per row grew')."""
+    so all three engines round identical edge cases identically."""
     import numpy as np
     import pandas as pd
 
@@ -2602,20 +2593,12 @@ def _semdedup_fine_pairs(assigned: DataFrame, stats_only: bool = False) -> DataF
             "re-derive _SEMDEDUP_FINE_PACK / KM_SCALE"
         )
 
-    empty = (
-        {
-            "cluster": pd.Series(dtype="int64"),
-            "fine": pd.Series(dtype="int64"),
-            "n_rows": pd.Series(dtype="int64"),
-        }
-        if stats_only
-        else {
-            "cluster": pd.Series(dtype="int64"),
-            "doc_a": pd.Series(dtype="int64"),
-            "doc_b": pd.Series(dtype="int64"),
-            "sim": pd.Series(dtype="float64"),
-        }
-    )
+    empty = {
+        "cluster": pd.Series(dtype="int64"),
+        "doc_a": pd.Series(dtype="int64"),
+        "doc_b": pd.Series(dtype="int64"),
+        "sim": pd.Series(dtype="float64"),
+    }
 
     def _assign_fine(qf: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
         # chunked packed-key argmin: |q|² - 2q·Cᵀ + |c|², all
@@ -2664,12 +2647,6 @@ def _semdedup_fine_pairs(assigned: DataFrame, stats_only: bool = False) -> DataF
             )
             cents = new
         f = _assign_fine(qf, cents)
-        if stats_only:
-            fc, cnt = np.unique(f, return_counts=True)
-            return pd.DataFrame(
-                {"cluster": coarse, "fine": fc.astype(np.int64),
-                 "n_rows": cnt.astype(np.int64)}
-            )
         unit = m / np.linalg.norm(m, axis=1, keepdims=True)
         frames = []
         for fc in np.unique(f):
@@ -2703,15 +2680,10 @@ def _semdedup_fine_pairs(assigned: DataFrame, stats_only: bool = False) -> DataF
             return pd.DataFrame(empty)
         return pd.concat(frames, ignore_index=True)
 
-    schema = (
-        "cluster long, fine long, n_rows long"
-        if stats_only
-        else "cluster long, doc_a long, doc_b long, sim double"
-    )
     return (
         assigned.select("cluster", "vec_id", "embedding")
         .groupBy("cluster")
-        .applyInPandas(fine_pairs, schema)
+        .applyInPandas(fine_pairs, "cluster long, doc_a long, doc_b long, sim double")
     )
 
 

@@ -3,7 +3,7 @@
 re-pointed at the round-13 two-level regime). Writes
 semdedup_crossover.json.
 
-Run AFTER scripts/scale_rehearsal.py --gen100 (needs .scale100).
+Run AFTER `scripts/scale_rehearsal.py --gen 100x` (needs .scale100).
 Serialize with any other Spark work (local[32] contention inflates
 walls ~8x)."""
 

@@ -77,17 +77,20 @@ def test_memory_sink_view_lives_while_returned_frame_is_held(spark, sf_dir):
 
 
 @pytest.mark.parametrize("n_rows", [0, 1])
-def test_user_funnel_on_degenerate_events(spark, sf_dir, make_tier, n_rows):
-    """0 or 1 events can leave no signup at all, making the conversion
-    rate 0/0: the query returns NULL like the oracle, never an ANSI
-    DIVIDE_BY_ZERO."""
+@pytest.mark.parametrize("name", ["log_user_funnel", "log_rollup_incremental"])
+def test_degenerate_events_match_oracle(spark, sf_dir, make_tier, name, n_rows):
+    """0 or 1 events. The funnel can see no signup at all, making its
+    conversion rate 0/0: NULL like the oracle, never an ANSI
+    DIVIDE_BY_ZERO. An empty events file has no row groups, so no ts
+    footer statistics: the rollup aggregates the whole table as the
+    delta instead of raising."""
     import pyarrow.parquet as pq
 
     from linux_logs_spark.catalog import table_path
 
     events = pq.read_table(table_path(sf_dir, "events")).slice(0, n_rows)
     tier = make_tier(events=events)
-    spec = _SPECS["log_user_funnel"]
+    spec = _SPECS[name]
     pdf = spec.fn(spark, tier).toPandas()
     issues = compare_frames(pdf, run_oracle(spec.oracle, tier))
     assert not issues, "; ".join(issues)

@@ -136,51 +136,3 @@ def test_twolevel_gemm_keep_path_matches_hof(spark, sf_dir):
         wh._KM_GEMM_MIN_K = old_min
     assert len(hof) > 0
     assert not compare_frames(gemm, hof)
-
-
-def test_fine_pairs_stats_only_partitions_the_corpus(spark, sf_dir):
-    """stats_only mode (the semdedup_skew.py instrument) must see the
-    SAME fine split as the pair scan: per-fine-cell sizes over the
-    forced two-level fixture sum to the corpus row count minus
-    singleton coarse cells (those early-return before fine k-means),
-    every multi-row coarse cell reports ≥1 fine cell, and no fine
-    cell id reaches the k2 bound implied by its coarse size."""
-    from linux_logs_spark.catalog import load, table_row_count
-
-    old_force, old_t = wh.SEMDEDUP_TWOLEVEL, wh.SEMDEDUP_TARGET_CELL_ROWS
-    try:
-        wh.SEMDEDUP_TWOLEVEL = True
-        wh.SEMDEDUP_TARGET_CELL_ROWS = 20
-        n_vecs = table_row_count(sf_dir, "embeddings")
-        k = wh._semdedup_k(n_vecs)
-        emb = load(spark, sf_dir, "embeddings")
-        qn = emb.selectExpr(
-            "vec_id", *wh._km_q_exprs("embedding", one_based=False)
-        ).selectExpr(
-            "vec_id",
-            "array(" + ", ".join(f"q{i}" for i in range(wh._KM_DIM)) + ") AS qa",
-        )
-        cents, key_sql = wh._km_train_array(qn, wh.SEMDEDUP_ITERS, k)
-        wide = emb.selectExpr(
-            "vec_id", "embedding", *wh._km_q_exprs("embedding", one_based=False)
-        ).selectExpr(
-            "vec_id",
-            "embedding",
-            "array(" + ", ".join(f"q{i}" for i in range(wh._KM_DIM)) + ") AS qa",
-        )
-        assigned = wh._km_assign(wide, cents, key_sql, k, keep=("embedding",))
-        coarse = assigned.selectExpr(
-            "vec_id", "embedding", f"key % {k} AS cluster"
-        )
-        stats = wh._semdedup_fine_pairs(coarse, stats_only=True).toPandas()
-        coarse_sizes = coarse.groupBy("cluster").count().toPandas()
-    finally:
-        wh.SEMDEDUP_TWOLEVEL, wh.SEMDEDUP_TARGET_CELL_ROWS = old_force, old_t
-    singletons = int((coarse_sizes["count"] == 1).sum())
-    assert stats["n_rows"].sum() == n_vecs - singletons
-    multi = set(coarse_sizes.loc[coarse_sizes["count"] > 1, "cluster"])
-    assert set(stats["cluster"]) == multi
-    by_coarse = dict(zip(coarse_sizes["cluster"], coarse_sizes["count"]))
-    for cl, grp in stats.groupby("cluster"):
-        k2 = max(1, by_coarse[cl] // 20)
-        assert grp["fine"].max() < k2 or k2 == 1
