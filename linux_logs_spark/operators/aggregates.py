@@ -413,16 +413,11 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     single double division — no rounding required."""
     o = load(spark, sf_dir, "orders")
     bucket = F.floor(F.col("o_totalprice") / 50000.0).cast("long")
-    # The denominator is the SUM of the bucket counts — deriving it
-    # from the (|buckets|-row, checkpointed) histogram frame instead
-    # of a separate o.count() drops the second corpus pass the
-    # round-14 plan audit flagged (count(*) ≡ Σ n exactly: every row
-    # lands in exactly one bucket, nulls included).
-    b = (
-        o.groupBy(bucket.alias("bucket"))
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
-    )
+    # The denominator is the SUM of the bucket counts (count(*) ≡ Σ n
+    # exactly: every row lands in exactly one bucket, nulls included),
+    # so orders is scanned once — the total reuses the histogram's
+    # exchange.
+    b = o.groupBy(bucket.alias("bucket")).agg(F.count("*").alias("n"))
     total = b.agg(F.sum("n").alias("total"))
     return (
         b.crossJoin(F.broadcast(total))

@@ -411,6 +411,11 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = d.select(
         "doc_id", F.explode(word_shingles(words("text"), 3)).alias("s")
     ).select("doc_id", F.xxhash64("s").alias("h"))
+    # Checkpointed, not left to AQE's exchange reuse: the band
+    # self-join reads only the m* columns and the verify joins only
+    # shset, so column pruning gives each consumer a different
+    # aggregate and no exchange is shared (without the barrier, task
+    # CPU at sf0.1 on 4 cores went from 4.6–4.7 s to 8.3–8.9 s).
     sig = (
         ex.groupBy("doc_id")
         .agg(
@@ -546,6 +551,8 @@ def simhash_signatures(
             f"shiftleft({fold}, 1) | "
             f"(CASE WHEN s{bits - 1 - j} >= 0 THEN 1 ELSE 0 END)"
         )
+    # Kept as a checkpoint: an A/B leaving the band self-join's two
+    # reads to AQE's exchange reuse did not resolve at sf0.1.
     return sums.selectExpr("doc_id", f"({fold}) AS simhash").localCheckpoint()
 
 
@@ -945,15 +952,12 @@ def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shk")
     )
     # Candidate postings (duplicated spans + rare collisions only —
-    # small by data design, unlike corpus-sized `post`). Lazy
-    # localCheckpoint: `pc` feeds BOTH the raw-string re-verify and
-    # the coverage join below; left lazy, each consumer re-ran the
-    # posexplode+hash pipeline with its own embedded `cand` subtree —
-    # the round-14 plan audit counted 4 shingle-explode passes (5
-    # parquet scans) in one query. Checkpointing `pc` (not `post`,
-    # whose corpus×SPAN_K strings would be the expensive thing to
-    # materialize) keeps the 8-byte shuffle discipline and leaves
-    # exactly two corpus passes: one for `cand`, one building `pc`.
+    # small by data design, unlike corpus-sized `post`). `pc` feeds
+    # both the raw-string re-verify and the coverage join below. Lazy
+    # localCheckpoint kept: an A/B leaving the sharing to AQE's
+    # exchange reuse did not resolve at sf0.1. Checkpointing `pc` (not
+    # `post`, whose corpus×SPAN_K strings would be the expensive thing
+    # to materialize) keeps the 8-byte shuffle discipline.
     pc = post.join(cand, "shk").localCheckpoint(eager=False)
     # pass 2 (residual, candidate subset only): re-verify on the RAW
     # string so hash collisions cannot mark a unique span duplicated
@@ -1042,12 +1046,9 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("b.w1", "b.w2")
     )
     # Observed-bigram counts: vocab²-bounded (Heaps-sublinear in the
-    # corpus). Lazy localCheckpoint — c12 feeds BOTH the head-count
-    # rollup and the final join; left lazy, the corpus-sized bigram
-    # explode+aggregate executed twice (round-14 plan audit).
-    c12 = big.groupBy("w1", "w2").agg(F.count("*").alias("n")).localCheckpoint(
-        eager=False
-    )
+    # corpus). c12 feeds both the head-count rollup and the final join;
+    # AQE reuses its exchange, so the bigram explode runs once.
+    c12 = big.groupBy("w1", "w2").agg(F.count("*").alias("n"))
     c1 = c12.groupBy("w1").agg(F.sum("n").alias("c1"))
     tok = load(spark, sf_dir, "documents").select(
         F.explode(words("text")).alias("word")
@@ -2104,9 +2105,9 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: token explode → two hash aggregates (per-(doc,word),
     per-word) — the same two-shuffle skeleton as text_tfidf. The
-    vocab-sized cnt frame is checkpointed because it feeds both the
-    word join (sized by the broadcast threshold and AQE) and the
-    1-row total, which crossJoins as a broadcast scalar."""
+    vocab-sized cnt frame feeds both the word join (sized by the
+    broadcast threshold and AQE) and the 1-row total, which crossJoins
+    as a broadcast scalar; AQE reuses cnt's exchange for both."""
     d = load(spark, sf_dir, "documents")
     tok = spread_ingest(
         d.select("doc_id", "text"), table_row_count(sf_dir, "documents")
@@ -2114,9 +2115,7 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(words("text")).alias("word")
     )
     tf = tok.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    cnt = (
-        tf.groupBy("word").agg(F.sum("tf").alias("cnt")).localCheckpoint(eager=True)
-    )
+    cnt = tf.groupBy("word").agg(F.sum("tf").alias("cnt"))
     # total tokens = sum over the vocab-sized cnt frame — NOT a second
     # corpus-wide explode (exact long sum, identical)
     tot = cnt.agg(F.sum("cnt").alias("total"))
@@ -2209,8 +2208,8 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle ∝ distinct eval terms), per-doc ce (∝ eval docs), final
     (lang, source) rollup (∝ blocks); lang/source ride the tf keys so
     scoring never joins back to the corpus. The vocab-sized LM frame
-    is checkpointed because it feeds both the tf join and the 1-row
-    (total, V) broadcast scalar; the broadcast threshold and AQE size
+    feeds both the tf join and the 1-row (total, V) broadcast scalar
+    through one reused exchange; the broadcast threshold and AQE size
     the tf join, so a 10⁸-word vocab at 100 TB becomes a shuffle
     equi-join on word. Float discipline is text_perplexity's: each
     term rounds half-away at 6 digits, per-doc sums run in
@@ -2223,9 +2222,7 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_train = F.md5(F.col("doc_id").cast("string")) < "cccc"
     s = d.select("doc_id", "lang", "source", "text", is_train.alias("is_train"))
     tok_t = s.filter("is_train").select(F.explode(words("text")).alias("word"))
-    cnt = (
-        tok_t.groupBy("word").agg(F.count("*").alias("cnt")).localCheckpoint(eager=True)
-    )
+    cnt = tok_t.groupBy("word").agg(F.count("*").alias("cnt"))
     tot = cnt.agg(F.sum("cnt").alias("total"), F.count("*").alias("v"))
     tf = (
         s.filter(~F.col("is_train"))

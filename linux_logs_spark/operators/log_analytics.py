@@ -454,24 +454,15 @@ def log_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hierarchical path is bit-identical to the direct aggregation
     the oracle runs."""
     e = load(spark, sf_dir, "events")
-    # Each level is consumed TWICE (by the next-coarser rollup and by
-    # the union output), so without a materialization barrier the lazy
-    # union re-executed minute 3× and hour 2× from the raw scan —
-    # exactly the recompute-from-raw the hierarchical design exists to
-    # avoid (round-14 plan audit: 3 parquet scans). The per-level lazy
-    # localCheckpoints make the physics match the docstring: ONE
-    # events scan, each coarser level aggregating the (time-bounded:
-    # |buckets|×|event_types| rows) checkpoint below it.
+    # Each level feeds both the next-coarser rollup and the union
+    # output; both consumers read all its columns, so AQE reuses the
+    # level's exchange and the events table is scanned once.
     minute = e.groupBy(
         F.date_trunc("minute", "ts").alias("bucket_start"), "event_type"
-    ).agg(
-        F.count("*").alias("n_events"), F.sum(dec("value", 2)).alias("sv")
-    ).localCheckpoint(eager=False)
+    ).agg(F.count("*").alias("n_events"), F.sum(dec("value", 2)).alias("sv"))
     hour = minute.groupBy(
         F.date_trunc("hour", "bucket_start").alias("bucket_start"), "event_type"
-    ).agg(
-        F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv")
-    ).localCheckpoint(eager=False)
+    ).agg(F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv"))
     day = hour.groupBy(
         F.date_trunc("day", "bucket_start").alias("bucket_start"), "event_type"
     ).agg(F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv"))
@@ -565,12 +556,11 @@ def log_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one distributive aggregate per pair. Rounded to 4 places before
     compare (corr's accumulation order differs across engines)."""
     e = load(spark, sf_dir, "events")
-    # |hours|×|types| rows — time-bounded. Lazy localCheckpoint: the
-    # self-join consumes `h` twice; left lazy, the corpus-sized hourly
-    # aggregate executed once per side (round-14 plan audit).
+    # |hours|×|types| rows — time-bounded. Both self-join sides read
+    # the same columns of `h`, so AQE reuses its exchange: one scan.
     h = e.groupBy(
         F.date_trunc("hour", "ts").alias("hour_start"), "event_type"
-    ).agg(F.count("*").alias("n")).localCheckpoint(eager=False)
+    ).agg(F.count("*").alias("n"))
     a, b = h.alias("a"), h.alias("b")
     return (
         a.join(
@@ -839,12 +829,11 @@ def log_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits, then accumulated in DECIMAL(25,6) — exact and order-free
     (compat.py failure mode 2) — and negated after the final cast."""
     e = load(spark, sf_dir, "events")
-    # 24×|types| rows — bounded. Lazy localCheckpoint: `c` feeds both
-    # the per-hour totals and the p join; left lazy, the corpus-sized
-    # count aggregate executed twice (round-14 plan audit).
+    # 24×|types| rows — bounded. `c` feeds both the per-hour totals and
+    # the p join; AQE reuses its exchange, so events are scanned once.
     c = e.groupBy(
         F.hour("ts").cast("long").alias("hour_of_day"), "event_type"
-    ).agg(F.count("*").alias("n")).localCheckpoint(eager=False)
+    ).agg(F.count("*").alias("n"))
     t = c.groupBy("hour_of_day").agg(
         F.sum("n").alias("n_events"), F.count("*").alias("n_types")
     )
@@ -993,47 +982,6 @@ SS_CAPACITY = 64
 SS_SHARD_ROWS = 1_000_000
 
 
-def _ss_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-(day, shard) capacity-M summaries BEFORE the shared
-    localCheckpoint in agg_freq_items_sketch — split out so the plan
-    pins (JVM-only, map-side-combined count aggregate) can see the
-    pipeline the checkpoint otherwise truncates (tests/test_plans.py)."""
-    n_ev = table_row_count(sf_dir, "events")
-    n_shards = max(1, n_ev // SS_SHARD_ROWS)
-    d = load(spark, sf_dir, "events").selectExpr(
-        "cast(ts as date) AS day",
-        "cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10)"
-        f" as bigint) % {n_shards} AS shard",
-        "cast(user_id as string) AS item",
-    )
-    counts = d.groupBy("day", "shard", "item").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("day", "shard").orderBy(
-        F.col("n").desc(), F.col("item")
-    )
-    # The kept rows and the drop bound come from ONE window pass: rk
-    # ranks the items, and a sibling unordered window over the SAME
-    # (day, shard) partitioning takes max(n) across the rows the rank
-    # cut drops — the one scalar a summary carries for everything it
-    # dropped (any absent item's true count is ≤ the largest dropped
-    # count; 0 when nothing was dropped). Spark plans both Window
-    # operators behind a single Exchange+Sort (guide §2.4). The
-    # round-14 plan audit caught the previous kept⋈bound form
-    # re-executing the whole scan→agg→window pipeline for the bound
-    # side, and then the summaries subtree AGAIN for the tot_min
-    # scalar — 4 full event-table passes for one sketch.
-    wg = Window.partitionBy("day", "shard")
-    ranked = counts.withColumn("rk", F.row_number().over(w)).withColumn(
-        "summary_min",
-        F.coalesce(
-            F.max(F.when(F.col("rk") > SS_CAPACITY, F.col("n"))).over(wg),
-            F.lit(0),
-        ),
-    )
-    return ranked.filter(F.col("rk") <= SS_CAPACITY).select(
-        "day", "shard", "item", F.col("n").alias("est"), "summary_min"
-    )
-
-
 @register(
     "agg_freq_items_sketch",
     "log",
@@ -1112,12 +1060,39 @@ def agg_freq_items_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     count above Σ N_g / M is reported — each summary's drop bound is
     ≤ N_g/(M+1), so a never-kept item's total is strictly below the
     threshold."""
-    # ≤ SS_CAPACITY rows per (day, shard) BY CONSTRUCTION — that bound
-    # is the sketch property, so materializing it is cheap at any
-    # scale; lazy localCheckpoint lets the two consumers below (the
-    # merged aggregate and the tot_min scalar) share one execution of
-    # the scan→agg→window pipeline (see _ss_summaries).
-    summaries = _ss_summaries(spark, sf_dir).localCheckpoint(eager=False)
+    n_ev = table_row_count(sf_dir, "events")
+    n_shards = max(1, n_ev // SS_SHARD_ROWS)
+    d = load(spark, sf_dir, "events").selectExpr(
+        "cast(ts as date) AS day",
+        "cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10)"
+        f" as bigint) % {n_shards} AS shard",
+        "cast(user_id as string) AS item",
+    )
+    counts = d.groupBy("day", "shard", "item").agg(F.count("*").alias("n"))
+    w = Window.partitionBy("day", "shard").orderBy(
+        F.col("n").desc(), F.col("item")
+    )
+    # The kept rows and the drop bound come from ONE window pass: rk
+    # ranks the items, and a sibling unordered window over the SAME
+    # (day, shard) partitioning takes max(n) across the rows the rank
+    # cut drops — the one scalar a summary carries for everything it
+    # dropped (any absent item's true count is ≤ the largest dropped
+    # count; 0 when nothing was dropped). Spark plans both Window
+    # operators behind a single Exchange+Sort (guide §2.4).
+    wg = Window.partitionBy("day", "shard")
+    ranked = counts.withColumn("rk", F.row_number().over(w)).withColumn(
+        "summary_min",
+        F.coalesce(
+            F.max(F.when(F.col("rk") > SS_CAPACITY, F.col("n"))).over(wg),
+            F.lit(0),
+        ),
+    )
+    # ≤ SS_CAPACITY rows per (day, shard). The merged aggregate and the
+    # tot_min scalar below both read it above the window, so AQE
+    # reuses the window's exchange: one events scan.
+    summaries = ranked.filter(F.col("rk") <= SS_CAPACITY).select(
+        "day", "shard", "item", F.col("n").alias("est"), "summary_min"
+    )
     # Σ bound over ALL summaries — one scalar, broadcast-crossJoined
     # (the bounded-collect class used by the CC/BPE scalars).
     tot_min = (

@@ -562,14 +562,12 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     CAST(target AS DOUBLE)/n is a single IEEE op on both engines, and
     the n<=target branch pins the rate to exactly 1.0, so the hash
     compare is stable."""
-    # |strata| rows — bounded. Lazy localCheckpoint: `s` feeds both the
-    # 1-row target scalar and the output join; left lazy, the corpus-
-    # sized stratum count executed twice (round-14 plan audit).
+    # |strata| rows — bounded. `s` feeds both the 1-row target scalar
+    # and the output join; AQE reuses its exchange: one scan.
     s = (
         load(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(F.count("*").alias("n_docs"))
-        .localCheckpoint(eager=False)
     )
     t = s.agg(
         F.ceil(F.sum("n_docs").cast("double") / F.count("*"))
@@ -648,16 +646,11 @@ def corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizer sum, which accumulates in DECIMAL(25,6) (exact,
     order-free — compat.py failure mode 2); the final weight is one
     IEEE division of identical doubles, rounded once more."""
-    # |langs| rows — bounded. Lazy localCheckpoint: `s` feeds the
-    # total, the weight frame AND (via w) the normalizer scalar; left
-    # lazy, the corpus-sized lang-count aggregate executed 4× (one per
-    # consumer subtree — round-14 plan audit: 4 parquet scans for a
-    # |langs|-row result).
-    s = (
-        load(spark, sf_dir, "documents")
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"))
-        .localCheckpoint(eager=False)
+    # |langs| rows — bounded. `s` feeds the total, the weight frame
+    # and (via w) the normalizer scalar; AQE reuses its exchange for
+    # every consumer: one scan.
+    s = load(spark, sf_dir, "documents").groupBy("lang").agg(
+        F.count("*").alias("n_docs")
     )
     t = s.agg(F.sum("n_docs").alias("total_docs"))
     w = s.join(F.broadcast(t)).selectExpr(

@@ -698,6 +698,10 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell count ∝ n from the parquet footer (zero jobs) — occupancy
     # stays flat per decade; see _ivf_cells for the scaling argument
     n_vecs_ivf = table_row_count(sf_dir, "embeddings")
+    if n_vecs_ivf == 0:  # no vectors, no neighbors (the oracle's 0 rows)
+        return spark.createDataFrame(
+            [], "vec_id long, neighbor_id long, sim double, nn_rank long"
+        )
     n_cells = _ivf_cells(n_vecs_ivf)
     # vec_id is a dense 0..n-1 key, so the n_cells lowest ids are a
     # pushed-down filter (no global sort job just to pick centroids).
@@ -712,9 +716,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not cent_rows:
-        # A sparse or non-zero-based vec_id key yields no centroids;
-        # fail loudly rather than emit NaN cells / empty results from a
-        # rows-only-verified query.
+        # A non-empty table whose vec_id key does not start at 0
+        # yields no centroids; fail loudly rather than emit NaN cells /
+        # empty results from a rows-only-verified query.
         raise ValueError(
             "sim_ann_ivf: no centroid rows (expected vec_id to cover "
             f"0..{n_cells - 1}); got an empty filter result"
@@ -990,12 +994,12 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that distinct's 260M-row shuffle was the leg's dominant cost and
     # the diagnosed page-cache spill (SCALING.md round-11 row).
     # localCheckpoint: sh0 feeds THREE consumers (the df groupBy, and
-    # both sides of the train⋈bench self-join via the anti join) — on
-    # lazy lineage each would re-run the shingle explode, the leg's
-    # dominant CPU (measured round-12: 2× wall at every tier). The
-    # old distinct() paid a full (doc_id, hash) shuffle to get this
-    # reuse implicitly via ReusedExchange; the checkpoint buys it for
-    # one narrow 16-byte-row materialization instead.
+    # both sides of the train⋈bench self-join via the anti join), and
+    # its root is narrow — no exchange of its own for AQE to reuse —
+    # so on lazy lineage each would re-run the shingle explode, the
+    # leg's dominant CPU (2× wall at every tier). A distinct() would
+    # buy the reuse with a full (doc_id, hash) shuffle; the checkpoint
+    # buys it for one narrow 16-byte-row materialization instead.
     sh0 = (
         d.select(
             "doc_id",

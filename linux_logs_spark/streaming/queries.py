@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,26 +35,6 @@ from linux_logs_spark.catalog import (
 from linux_logs_spark.registry import register
 
 _counter = itertools.count()
-
-# Memory-sink retention for _run (see its docstring), keyed to the
-# liveness of the frame _run RETURNED (round-6 advice item: a fixed
-# keep-last-4 count silently broke any caller that held a returned
-# frame across 4 newer streaming runs — an implicit contract enforced
-# only by a comment). name → weakref to the returned DataFrame; a view
-# is dropped only once its frame has been garbage-collected AND it has
-# fallen out of the most-recent window, so a late-materializing caller
-# does not hit TABLE_OR_VIEW_NOT_FOUND.
-#
-# CONTRACT (round-6 advice): the liveness key is the EXACT object _run
-# returns. A name-resolving client (Spark Connect) that drops the
-# returned frame and holds only a frame DERIVED from it does NOT keep
-# the weakref alive — the view can be evicted before the derived frame
-# late-materializes. Such callers must keep a reference to the
-# returned frame itself for as long as they intend to re-resolve the
-# view name. (Classic PySpark callers are unaffected: spark.table
-# resolves eagerly, so derived frames survive the view drop.)
-_sink_refs: dict[str, "weakref.ref[DataFrame]"] = {}
-_SINK_KEEP_FLOOR = 4
 
 
 def _staged_events_dir(sf_dir: str) -> str:
@@ -139,35 +118,19 @@ def _run(spark: SparkSession, streamed: DataFrame, mode: str) -> DataFrame:
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    # Memory sinks hold their full result set in the driver until the
-    # view is dropped; a long session looping the 11 streaming queries
-    # would otherwise accumulate every past result (round-5 review).
-    # Retention is keyed to the returned frame's liveness: each view
-    # stays as long as the caller holds the DataFrame returned here
-    # (classic PySpark resolves spark.table eagerly, so even a DERIVED
-    # frame keeps working after the view drops; the liveness key and
-    # the keep-last floor below are for name-resolving clients like
-    # Spark Connect, where a held derived frame would re-resolve the
-    # view name late — round-6 review). A view is dropped only when
-    # its returned frame is garbage-collected AND at least
-    # _SINK_KEEP_FLOOR newer runs exist.
     return _register_sink(spark, name)
 
 
 def _register_sink(spark: SparkSession, name: str) -> DataFrame:
-    """Materialize a finished memory sink as a DataFrame and apply the
-    liveness-keyed retention described above (shared by every memory-
-    sink query, including the restart-loop ones that bypass _run)."""
+    """Return a finished memory sink as a batch DataFrame and drop its
+    view (shared by every memory-sink query, including the
+    restart-loop ones that bypass _run). spark.table resolves the
+    view eagerly, so the returned frame — and any frame derived from
+    it — keeps the sink's rows alive through its analyzed plan; the
+    catalog holds no reference, so a session looping the streaming
+    queries frees each result once the caller drops it."""
     out = spark.table(name)
-    _sink_refs[name] = weakref.ref(out)
-    recent = set(list(_sink_refs)[-_SINK_KEEP_FLOOR:])
-    for stale, ref in list(_sink_refs.items()):
-        if stale not in recent and ref() is None:
-            _sink_refs.pop(stale)
-            try:
-                spark.catalog.dropTempView(stale)
-            except Exception:
-                pass  # a different session created it — freed with that session
+    spark.catalog.dropTempView(name)
     return out
 
 

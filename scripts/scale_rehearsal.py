@@ -385,21 +385,27 @@ def gen(
         extra = [f"{base[i % len(base)]}x{i}" for i in range(tail_mult * len(base))]
         vocab[lang] = base + extra
 
+    # Per-language sampling arrays, built once (rng.choice converts a
+    # list to the same array, so the draws are unchanged). Zipf-ish:
+    # rank r weight 1/(r+10) — matches a natural-corpus head-heavy df
+    # profile closely enough for blocking behavior.
+    words_of, zipf_p, lens_of, sources_of = {}, {}, {}, {}
+    for lang in langs:
+        words_of[lang] = np.array(vocab[lang])
+        w = 1.0 / (np.arange(len(words_of[lang])) + 10)
+        zipf_p[lang] = w / w.sum()
+        lens_of[lang] = np.array(lang_lens[lang])
+        sources_of[lang] = np.array(lang_sources[lang])
     doc_ids, texts, doc_langs, doc_sources = [], [], [], []
     lang_choices = rng.choice(langs, size=n_docs)
     for i in range(n_docs):
         lang = str(lang_choices[i])
-        v = vocab[lang]
-        # Zipf-ish: rank r weight 1/(r+10) — matches a natural-corpus
-        # head-heavy df profile closely enough for blocking behavior
-        ranks = np.arange(len(v))
-        w = 1.0 / (ranks + 10)
-        n = int(rng.choice(lang_lens[lang]))
-        words = rng.choice(v, size=max(n, 1), p=w / w.sum())
+        n = int(rng.choice(lens_of[lang]))
+        words = rng.choice(words_of[lang], size=max(n, 1), p=zipf_p[lang])
         doc_ids.append(i)
         texts.append(" ".join(words))
         doc_langs.append(lang)
-        doc_sources.append(str(rng.choice(lang_sources[lang])))
+        doc_sources.append(str(rng.choice(sources_of[lang])))
     # planted near-dups: overwrite the tail with mutated copies of
     # random earlier docs (same lang/source → same block, detectable)
     n_dup = int(n_docs * NEAR_DUP_FRAC)
@@ -408,7 +414,7 @@ def gen(
         toks = texts[src_idx].split(" ")
         for _ in range(max(1, len(toks) // 20)):  # ~5% token edits
             toks[int(rng.integers(0, len(toks)))] = str(
-                rng.choice(vocab[doc_langs[src_idx]])
+                rng.choice(words_of[doc_langs[src_idx]])
             )
         texts[j] = " ".join(toks)
         doc_langs[j] = doc_langs[src_idx]

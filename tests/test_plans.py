@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from linux_logs_spark.plans.explain import assert_in_plan, plan_string
 from linux_logs_spark.registry import all_queries
 
@@ -639,6 +641,39 @@ def test_text_tfidf_df_broadcasts_at_test_scale(spark, sf_dir):
     assert len(re.findall(r"Scan parquet", tree)) == 1, final
 
 
+# Queries that feed one bounded aggregate to several consumers reading
+# the same columns, with the parquet scans their final plan holds.
+# text_bigram_lm (bigrams, vocabulary) and pipeline_perplexity_gate
+# (train, eval split) read documents twice with two projections.
+_REUSED_AGGREGATE_SCANS = {
+    "agg_freq_items_sketch": 1,
+    "agg_histogram": 1,
+    "corpus_mix_rebalance": 1,
+    "corpus_temperature_sample": 1,
+    "log_corr_matrix": 1,
+    "log_entropy_profile": 1,
+    "log_rollup_multires": 1,
+    "pipeline_perplexity_gate": 2,
+    "text_bigram_lm": 2,
+    "text_perplexity": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REUSED_AGGREGATE_SCANS))
+def test_shared_aggregate_rides_exchange_reuse(spark, sf_dir, name):
+    """AQE's exchange reuse, not a localCheckpoint, shares the
+    aggregate between its consumers: the plan Spark ran holds no
+    checkpoint scan (ExistingRDD) and reads the source table no more
+    often than it has projections of it."""
+    df = _Q[name].fn(spark, sf_dir)
+    df.collect()  # AQE reuse is decided at runtime
+    tree = plan_string(df).split("\n\n")[0].split("== Initial Plan ==")[0]
+    assert "ExistingRDD" not in tree, tree
+    assert "ReusedExchange" in tree, tree
+    scans = len(re.findall(r"Scan parquet", tree))
+    assert scans == _REUSED_AGGREGATE_SCANS[name], tree
+
+
 def test_scan_apache_log_is_shuffle_free(spark, sf_dir):
     """Parse plans must stay embarrassingly parallel: text scan →
     regexp projections, zero exchanges."""
@@ -951,22 +986,12 @@ def test_freq_items_sketch_stays_jvm_side_with_partial_agg(spark, sf_dir):
     map-side combined (partial_count before the exchange), so the
     shuffle carries distinct (day, shard, item) combos, never
     events."""
-    # The summaries stage sits behind a shared localCheckpoint since
-    # round 14 (the kept⋈bound + tot_min consumers re-ran the whole
-    # scan→agg→window pipeline 4×), which truncates the visible plan —
-    # pin the pipeline on the pre-checkpoint builder, and the no-Python
-    # claim on the final plan too.
-    from linux_logs_spark.operators.log_analytics import _ss_summaries
-
     py_ops = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
               "MapInPandas", "PythonMapInArrow")
-    plan = plan_string(_ss_summaries(spark, sf_dir))
+    plan = plan_string(_Q["agg_freq_items_sketch"].fn(spark, sf_dir))
     for py_op in py_ops:
         assert py_op not in plan, py_op
     assert "partial_count" in plan, plan
-    final = plan_string(_Q["agg_freq_items_sketch"].fn(spark, sf_dir))
-    for py_op in py_ops:
-        assert py_op not in final, py_op
 
 
 def test_matryoshka_pair_join_is_blocked_equi(spark, sf_dir):

@@ -53,27 +53,55 @@ def test_query_is_timezone_independent(spark, sf_dir, name):
     assert not issues, f"{name} under non-UTC session: " + "; ".join(issues)
 
 
-def test_memory_sink_view_lives_while_returned_frame_is_held(spark, sf_dir):
-    """Memory-sink retention is keyed to the liveness of the frame
-    _run returns (round-6 advice item): a caller may hold a returned
-    lazy frame across many newer streaming runs and materialize it
-    late — the old fixed keep-last-4 eviction raised
-    TABLE_OR_VIEW_NOT_FOUND here. Dead frames' views must still be
-    dropped so a looping driver doesn't accumulate every result."""
+def test_memory_sink_frame_outlives_its_dropped_view(spark, sf_dir):
+    """A memory-sink query drops its view as it returns: the returned
+    frame, and a frame derived from it, still read the sink's rows
+    after newer streaming runs, and no stream_out_* view remains in
+    the catalog to pin a past result."""
     from linux_logs_spark.streaming import queries as sq
 
     held = sq.stream_tumbling(spark, sf_dir)
-    held_names = {n for n, r in sq._sink_refs.items() if r() is held}
+    derived = held.filter("n > 0")
     for _ in range(5):
-        # returned frame is discarded each iteration → weakref dies →
-        # the NEXT _run drops its view
         sq.stream_tumbling(spark, sf_dir).count()
-    assert held.count() > 0  # late materialization still works
-    # held's view survived; dead views outside the keep-floor window
-    # were dropped, so retention is bounded by live frames + the floor
-    assert held_names <= set(sq._sink_refs)
-    live = {n for n, r in sq._sink_refs.items() if r() is not None}
-    assert len(sq._sink_refs) <= len(live) + sq._SINK_KEEP_FLOOR
+    n = len(run_oracle(_SPECS["stream_tumbling"].oracle, sf_dir))
+    assert n > 0
+    assert held.count() == n
+    assert derived.count() == n
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")
+    ]
+
+
+def test_sim_ann_ivf_empty_embeddings_match_oracle(spark, sf_dir, make_tier):
+    """0 embeddings: no centroids and no neighbors — an empty result
+    like the oracle's, not an error."""
+    import pyarrow.parquet as pq
+
+    from linux_logs_spark.catalog import table_path
+
+    vecs = pq.read_table(table_path(sf_dir, "embeddings")).slice(0, 0)
+    spec = _SPECS["sim_ann_ivf"]
+    tier = make_tier(embeddings=vecs)
+    pdf = spec.fn(spark, tier).toPandas()
+    assert list(pdf.columns) == ["vec_id", "neighbor_id", "sim", "nn_rank"]
+    issues = compare_frames(pdf, run_oracle(spec.oracle, tier))
+    assert not issues, "; ".join(issues)
+
+
+def test_sim_ann_ivf_rejects_vec_ids_not_from_zero(spark, sf_dir, make_tier):
+    """A non-empty table whose vec_id key does not start at 0 has no
+    centroid rows: the query raises instead of returning NaN cells."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from linux_logs_spark.catalog import table_path
+
+    vecs = pq.read_table(table_path(sf_dir, "embeddings"))
+    i = vecs.schema.get_field_index("vec_id")
+    shifted = vecs.set_column(i, "vec_id", pc.add(vecs["vec_id"], 1_000_000))
+    with pytest.raises(ValueError, match="no centroid rows"):
+        _SPECS["sim_ann_ivf"].fn(spark, make_tier(embeddings=shifted))
 
 
 @pytest.mark.parametrize("n_rows", [0, 1])
