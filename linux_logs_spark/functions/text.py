@@ -39,6 +39,13 @@ def words(text: Column | str) -> Column:
 def word_shingles(ws: Column, n: int) -> Column:
     """Overlapping n-word shingles as strings (LSH/minhash input).
 
+    ``ws`` must reference a word-array column already projected by a
+    parent select (``.select(words("text").alias("ws"))``, then
+    ``F.col("ws")``), never an expression such as ``words("text")``:
+    the lambda below repeats ``ws`` for every word of every shingle, so
+    an expression there is re-evaluated n times per shingle — the
+    document is re-split O(words²) times per row.
+
     Guarded for short documents: F.sequence(0, size-n) with size < n
     would produce a DESCENDING sequence ([0, -1]) and element_at(ws, 0)
     raises; such docs get an empty shingle array instead.

@@ -352,8 +352,8 @@ def simhash_width(n_docs: int) -> int:
     rehearsal measured the cap's consequence — at 5M docs a 64-bit
     signature leaves 2^-16 per-band random collisions against
     n² = 2.5e13 ≈ 1.5e9 candidate pairs, and the band join never
-    finished. Past 64 bits dedup_simhash switches to per-BAND key
-    columns (_simhash_band_keys), each ≤ 62 bits, with no ceiling."""
+    finished. The signature is per-band key columns
+    (simhash_band_keys), each ≤ 62 bits, so no width is a ceiling."""
     bits = SIMHASH_BITS
     scale = _SKETCH_BASE_DOCS
     while n_docs > scale:
@@ -372,24 +372,23 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — it used word sets before round 3 — silently decouples the
     filter from the sketch). Three scale properties, each measured:
     (a) candidate generation is a hash-shuffle equi-join — cost scales
-    with bucket collisions, not n²; (b) the signature table is
-    materialized once (localCheckpoint) because the band self-join
-    consumes it twice; (c) banding ships ONLY (doc_id, band) rows —
-    the multi-KB shingle arrays never ride the ×8 band explode or the
-    join shuffle (doing so was 2 GB of shuffle at sf0.1, ~2× the whole
-    query); the surviving candidate pairs join back to the signature
-    table to fetch the two sets they verify.
+    with bucket collisions, not n²; (b) each document's shingle-hash
+    set is materialized once (localCheckpoint), because the signature
+    aggregate and both verify joins consume it; (c) banding ships ONLY
+    (doc_id, band) rows — the multi-KB shingle arrays never ride the
+    ×8 band explode or the join shuffle (doing so was 2 GB of shuffle
+    at sf0.1, ~2× the whole query); the surviving candidate pairs join
+    back to the shingle sets to fetch the two they verify.
 
-    Round-7 signature build: explode shingles once, hash each shingle
-    string ONCE (xxhash64), then derive the 16 per-seed values as
-    xxhash64(seed, h) over 8-byte longs in FLAT codegen'd columns and
-    take 16 map-side partial MINs + the distinct hash set in ONE
-    aggregate — replacing 16 interpreted higher-order transforms that
-    re-hashed every ~20-char shingle string per seed (UDF-free but
-    interpreted; measured ~2× the whole query at sf0.1). The exact
-    verify runs on the hashed shingle sets — Jaccard is preserved
-    under the injective-in-practice hash, the posting_jaccard_pairs
-    argument.
+    Signature build: hash each shingle string ONCE (xxhash64) into the
+    document's distinct set, explode that set, then derive the 16
+    per-seed values as xxhash64(seed, h) over 8-byte longs in FLAT
+    codegen'd columns and take 16 map-side partial MINs in one plain
+    hash aggregate — replacing 16 interpreted higher-order transforms
+    that re-hashed every ~20-char shingle string per seed (measured ~2×
+    the whole query at sf0.1). The exact verify runs on the hashed
+    shingle sets — Jaccard is preserved under the injective-in-practice
+    hash, the posting_jaccard_pairs argument.
     tests/test_ann_quality.py pins recall against brute-force shingle
     Jaccard with ZERO false positives. DuckDB has no xxhash64 →
     rows-only.
@@ -406,26 +405,34 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_ingest(
         load(spark, sf_dir, "documents").select("doc_id", "text"), n_docs
     )
+    # one row per doc: its distinct hashed 3-shingles — the exact set
+    # the signature sketches and the verify compares. Checkpointed, not
+    # left to AQE's exchange reuse: it feeds the signature aggregate and
+    # both verify joins, and its root is narrow, so there is no exchange
+    # to reuse. Checkpointing the signature aggregate instead (with the
+    # sets joined on) measured 4.0–4.2 s task CPU a warm call at sf0.1
+    # on 4 cores, against 0.9–1.3 s here.
+    sh = (
+        d.select("doc_id", words("text").alias("ws"))
+        .select(
+            "doc_id",
+            F.array_distinct(
+                F.transform(word_shingles(F.col("ws"), 3), lambda s: F.xxhash64(s))
+            ).alias("shset"),
+        )
+        .localCheckpoint()
+    )
     # explode drops empty-shingle (sub-width) docs — no similarity is
     # defined for them, mirroring the short-doc guard in word_shingles
-    ex = d.select(
-        "doc_id", F.explode(word_shingles(words("text"), 3)).alias("s")
-    ).select("doc_id", F.xxhash64("s").alias("h"))
-    # Checkpointed, not left to AQE's exchange reuse: the band
-    # self-join reads only the m* columns and the verify joins only
-    # shset, so column pruning gives each consumer a different
-    # aggregate and no exchange is shared (without the barrier, task
-    # CPU at sf0.1 on 4 cores went from 4.6–4.7 s to 8.3–8.9 s).
     sig = (
-        ex.groupBy("doc_id")
+        sh.select("doc_id", F.explode("shset").alias("h"))
+        .groupBy("doc_id")
         .agg(
             *[
                 F.min(F.xxhash64(F.lit(k), F.col("h"))).alias(f"m{k}")
                 for k in range(n_minhash)
-            ],
-            F.collect_set("h").alias("shset"),
+            ]
         )
-        .localCheckpoint()
     )
     rows_per_band = n_minhash // N_BANDS
     bands = sig.select(
@@ -461,8 +468,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("wa"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("wb"))
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("wa"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("wb"))
     jac = F.size(F.array_intersect("wa", "wb")).cast("double") / F.size(
         F.array_union("wa", "wb")
     )
@@ -477,171 +484,77 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIMHASH_BITS = 48
 # Fixed band COUNT keeps the pigeonhole guarantee (hamming ≤ bands-1
-# pairs always share a band); the n-scaling knob is SIMHASH_BITS:
-# random-pair collisions per band are 2^-(bits/bands), so widening
-# the signature one bit per band per ~doubling of n holds expected
-# bucket-collision volume level — the same log(n) rule as the LSH
-# plane count. The 100× rehearsal runs 64 bits / 4×16-bit bands
-# (2^-16 per band vs 2^-12 at default: 16× fewer random candidates
-# for 100× the pairs); the d ≤ 3 exactness is band-count-only and
-# survives any width.
+# pairs always share a band); the width grows with n instead
+# (simhash_width): random-pair collisions per band are
+# 2^-(bits/bands), so widening every band as n grows holds the
+# expected bucket-collision volume level — the same log(n) rule as the
+# LSH plane count. The d ≤ 3 exactness is band-count-only and survives
+# any width.
 SIMHASH_BANDS = 4
 
 
-def simhash_signatures(
-    d: DataFrame, bits: int | None = None, n_rows: int | None = None
+def simhash_band_keys(
+    d: DataFrame, bits: int = SIMHASH_BITS, n_rows: int | None = None
 ) -> DataFrame:
-    """(doc_id, simhash) — the 48-bit signature table dedup_simhash
-    band-joins, extracted so tests can brute-force Hamming distance
-    over the SAME signatures the query uses (round 6). `bits`
-    defaults to the module SIMHASH_BITS (read at call time, so the
-    test knob-patch contract holds); dedup_simhash passes the
-    footer-derived simhash_width(n_docs) instead.
+    """(doc_id, k0..k{SIMHASH_BANDS-1}) — the simhash signature of each
+    document as one bigint key per band, at any width. Exposed so tests
+    can brute-force Hamming distance over the SAME signatures the query
+    bands.
 
-    Bit votes are a property of the WORD — computed once on the
-    distinct vocabulary (tiny dim) as 48 plain int columns, broadcast
-    into the posting list, and aggregated with 48 codegen'd sums.
-    (An array-of-votes fold over collect_list was interpreted per
-    element and ~20× slower.) The band self-join consumes the result
-    twice; without a cut Spark recomputes the explode→broadcast-join→
-    48-sum pipeline per side (4 parquet scans, zero ReusedExchange —
-    measured). Signatures are |docs| rows × 16 bytes, so materialize
-    once (localCheckpoint) and join the materialized table to itself:
-    at 100 TB this is the standard "signature table" shape (persist
-    signatures, then band-join)."""
-    if bits is None:
-        bits = SIMHASH_BITS
-    if bits > 64:
-        raise ValueError(
-            f"simhash_signatures packs one bigint; {bits} bits needs the "
-            "per-band key form — use _simhash_band_keys (dedup_simhash "
-            "switches automatically past 64 bits)"
-        )
-    per_word = spread_ingest(d.select("doc_id", "text"), n_rows).select(
-        "doc_id", F.explode(F.array_distinct(words("text"))).alias("word")
-    )
-    # expressions built as SQL strings: the Column form made ~300 py4j
-    # round-trips (48 vote columns + 48 sums + a 48-step fold) and
-    # plan build dominated execution (round-6 measurement)
-    vocab = (
-        per_word.select("word")
-        .distinct()
-        .withColumn("h", F.xxhash64("word"))
-        .selectExpr(
-            "word",
-            *[
-                f"CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END AS v{j}"
-                for j in range(bits)
-            ],
-        )
-    )
-    sums = (
-        per_word.join(F.broadcast(vocab), "word")
-        .groupBy("doc_id")
-        .agg(*[F.expr(f"sum(v{j}) AS s{j}") for j in range(bits)])
-    )
-    # MSB-first fold as one parsed expression — bitwise shift/or, not
-    # `*2 + bit`: at SIMHASH_BITS=64 the top bit lands in the sign
-    # position and checked (ANSI) multiplication raises
-    # ARITHMETIC_OVERFLOW, while shiftleft is defined to wrap (the
-    # signature is a bit pattern, not a number).
-    fold = "cast(0 as bigint)"
-    for j in range(bits):
-        fold = (
-            f"shiftleft({fold}, 1) | "
-            f"(CASE WHEN s{bits - 1 - j} >= 0 THEN 1 ELSE 0 END)"
-        )
-    # Kept as a checkpoint: an A/B leaving the band self-join's two
-    # reads to AQE's exchange reuse did not resolve at sf0.1.
-    return sums.selectExpr("doc_id", f"({fold}) AS simhash").localCheckpoint()
-
-
-def _simhash_band_keys(
-    d: DataFrame, bits: int, n_rows: int | None = None
-) -> DataFrame:
-    """(doc_id, k0..k{SIMHASH_BANDS-1}) — the WIDE simhash form for
-    bits > 64 (round 11: the 1000× rehearsal measured the bigint
-    cap's consequence — at 5M docs a 64-bit signature leaves
-    n²·2^-16 ≈ 1.5e9 per-band random candidate pairs and the band
-    join never finished; the +4-bits/band/decade rule must keep
-    going). Each band's bits/bands-bit slice is packed into its OWN
-    bigint column, so there is no signature-width ceiling (each band
-    key ≤ 62 bits), band joins key on the column directly, and the
-    total Hamming distance is the SUM of per-band popcounts — bands
-    partition the bit positions, so this is exact, and the d ≤
-    bands-1 pigeonhole argument is untouched. Bit j's vote comes
-    from bit (j % 64) of hash word j//64, where word 0 is
-    xxhash64(word) (the narrow path's source) and word i ≥ 1 is
-    xxhash64(i, xxhash64(word)) — the same seeded-chain derivation
-    the minhash seeds use. Same vocab-broadcast + per-bit-sum build
-    as simhash_signatures; same localCheckpoint rationale."""
-    n_bands = SIMHASH_BANDS
-    if bits % n_bands:
-        raise ValueError(f"bits {bits} must divide into {n_bands} bands")
-    k = bits // n_bands
-    if k > 62:
-        raise ValueError(f"band key width {k} exceeds a positive bigint")
-    per_word = spread_ingest(d.select("doc_id", "text"), n_rows).select(
-        "doc_id", F.explode(F.array_distinct(words("text"))).alias("word")
-    )
-    n_chunks = (bits + 63) // 64
-    chunk_exprs = ["xxhash64(word) AS h0"] + [
+    Band b holds signature bits b·k … b·k+k-1 (k = bits/bands) with
+    bit b·k+i at position i, so at ≤ 64 bits the keys are exactly the
+    bit slices of one folded bigint, and past 64 bits the width has no
+    ceiling (each key ≤ 62 bits). Bit j is the sign of the document's
+    summed ±1 votes over its distinct words; a word's vote for bit j
+    is bit j % 64 of hash chunk j // 64, where chunk 0 is
+    xxhash64(word) and chunk i ≥ 1 is xxhash64(i, xxhash64(word)) —
+    the seeded chain the minhash seeds use. Votes are computed inline
+    in the per-document sum aggregate (codegen'd plain columns; no
+    vocabulary side table or join). The band self-join reads the keys
+    twice, and an A/B leaving that to AQE's exchange reuse did not
+    resolve, so the |docs|-row key table is materialized once."""
+    k = bits // SIMHASH_BANDS
+    if bits % SIMHASH_BANDS or k > 62:
+        raise ValueError(f"{bits} bits do not fit {SIMHASH_BANDS} bigint bands")
+    # SQL strings, not Columns: the Column form costs a py4j round-trip
+    # per vote and sum, and plan build then outweighs execution
+    chunks = ["xxhash64(word) AS h0"] + [
         f"xxhash64(CAST({i} AS BIGINT), xxhash64(word)) AS h{i}"
-        for i in range(1, n_chunks)
+        for i in range(1, (bits + 63) // 64)
     ]
-    vote_exprs = [
-        f"CASE WHEN (shiftright(h{j // 64}, {j % 64}) & 1) = 1 "
-        f"THEN 1 ELSE -1 END AS v{j}"
-        for j in range(bits)
-    ]
-    vocab = (
-        per_word.select("word")
-        .distinct()
-        .selectExpr("word", *chunk_exprs)
-        .selectExpr("word", *vote_exprs)
-    )
     sums = (
-        per_word.join(F.broadcast(vocab), "word")
+        spread_ingest(d.select("doc_id", "text"), n_rows)
+        .select("doc_id", F.explode(F.array_distinct(words("text"))).alias("word"))
+        .selectExpr("doc_id", *chunks)
         .groupBy("doc_id")
-        .agg(*[F.expr(f"sum(v{j}) AS s{j}") for j in range(bits)])
+        .agg(
+            *[
+                F.expr(
+                    f"sum(IF(shiftright(h{j // 64}, {j % 64}) & 1 = 1, 1, -1)) AS s{j}"
+                )
+                for j in range(bits)
+            ]
+        )
     )
-    key_exprs = []
-    for b in range(n_bands):
-        fold = "cast(0 as bigint)"
-        for i in range(k - 1, -1, -1):  # MSB-first: bit i lands at position i
-            fold = (
-                f"shiftleft({fold}, 1) | "
-                f"(CASE WHEN s{b * k + i} >= 0 THEN 1 ELSE 0 END)"
-            )
-        key_exprs.append(f"({fold}) AS k{b}")
-    return sums.selectExpr("doc_id", *key_exprs).localCheckpoint()
+    keys = [
+        " | ".join(f"IF(s{b * k + i} >= 0, {1 << i}L, 0L)" for i in range(k))
+        + f" AS k{b}"
+        for b in range(SIMHASH_BANDS)
+    ]
+    return sums.selectExpr("doc_id", *keys).localCheckpoint()
 
 
-def _simhash_candidate_pairs(sig: DataFrame, carry: list, band_key, hamming):
-    """Shared candidate logic for BOTH simhash width regimes: explode
-    the SIMHASH_BANDS band keys, self-equi-join on (band_id,
-    band_key) with doc_a < doc_b, dedupe multi-band collisions, and
-    keep pairs inside the exact pigeonhole radius (bands - 1). The
-    regimes differ ONLY in how a band key and the Hamming distance
-    are derived from the carried signature columns (`band_key(b)` /
-    `hamming(a, b)` callables) — factoring this out keeps the next
-    radius/banding change from diverging between them (round-11
-    advice)."""
-    banded = sig.select(
-        "doc_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        band_key(b).alias("band_key"),
-                    )
-                    for b in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", *carry, "band.band_id", "band.band_key")
+def simhash_pairs(keys: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair of simhash_band_keys rows
+    within the pigeonhole radius SIMHASH_BANDS - 1: self-equi-join on
+    (band_id, band_key) with doc_a < doc_b, dedupe multi-band
+    collisions, filter on the exact distance. Bands partition the bit
+    positions, so the Hamming distance is the sum of per-band
+    popcounts."""
+    ks = [f"k{b}" for b in range(SIMHASH_BANDS)]
+    banded = keys.select(
+        "doc_id", *ks, F.posexplode(F.array(*ks)).alias("band_id", "band_key")
+    )
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -653,72 +566,40 @@ def _simhash_candidate_pairs(sig: DataFrame, carry: list, band_key, hamming):
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            hamming(a, b).alias("hamming"),
+            sum(
+                F.bit_count(F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}"))) for c in ks
+            ).alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-        # bands-1 = the radius the pigeonhole makes exact (docstring)
         .filter(F.col("hamming") <= SIMHASH_BANDS - 1)
     )
 
 
 @register("dedup_simhash", "llm", oracle=None)  # xxhash64-based → rows-only
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: SIMHASH_BITS-bit signature from word-hash
-    bit votes, banded into SIMHASH_BANDS equal-width keys for
-    candidate generation (48 → 4×12 at defaults), verified by
-    Hamming distance. All JVM expressions.
+    """SimHash near-dup: a simhash_width(n)-bit signature from word-hash
+    bit votes, banded into SIMHASH_BANDS equal-width keys for candidate
+    generation (48 → 4×12 at defaults), verified by Hamming distance.
+    All JVM expressions.
 
-    Threshold/banding alignment (Manku et al., WWW'07, round-5
-    review): with 4 bands, any pair within Hamming distance 3 differs
-    in at most 3 bands, so BY PIGEONHOLE at least one band matches
-    exactly — candidate generation is therefore COMPLETE for d ≤ 3
-    and the query returns exactly {pairs : hamming ≤ 3}. The verify
-    filter used to accept d ≤ 6, where 4-band detection is only
-    probabilistic (a 4-bit-difference pair with one flipped bit per
-    band collides in no band) — that silently-lossy region is now
-    excluded rather than partially reported. To widen the exact
-    radius to d, band into d+1 keys of 48/(d+1) bits and re-balance
-    keys-per-band against bucket collision volume. The banding +
-    verify logic is pinned exactly (tests/test_ann_quality.py,
-    round 6): the query's pairs must equal brute-force Hamming ≤ 3
-    over the SAME engine-computed signatures — so rows-only covers
-    only the xxhash64 bit votes, not the candidate logic."""
-    d = load(spark, sf_dir, "documents")
-    # signature bits derive from the footer row count: 48 through the
-    # 50k-doc decade, +4 bits/band per decade past it — the 100×
-    # rehearsal's hand-patched width now falls out of the data
-    # (simhash_width docstring has the algebra). Past 64 bits the
-    # one-bigint signature can't hold the width and the query
-    # switches to per-band key columns (_simhash_band_keys — the
-    # round-11 1000× finding); output and semantics are identical.
+    Threshold/banding alignment (Manku et al., WWW'07): with 4 bands,
+    any pair within Hamming distance 3 differs in at most 3 bands, so
+    BY PIGEONHOLE at least one band matches exactly — candidate
+    generation is therefore COMPLETE for d ≤ 3 and the query returns
+    exactly {pairs : hamming ≤ 3}. Past d = 3, 4-band detection is
+    only probabilistic (a 4-bit-difference pair with one flipped bit
+    per band collides in no band), so that region is excluded rather
+    than partially reported. To widen the exact radius to d, band into
+    d+1 keys. tests/test_ann_quality.py pins the query's pairs to
+    brute-force Hamming ≤ 3 over the SAME engine-computed keys, so
+    rows-only covers only the xxhash64 bit votes, not the candidate
+    logic."""
+    # the width derives from the footer row count (zero jobs)
     n_docs = table_row_count(sf_dir, "documents")
-    bits = simhash_width(n_docs)
-    if bits > 64:
-        keys = _simhash_band_keys(d, bits, n_rows=n_docs)
-        return _simhash_candidate_pairs(
-            keys,
-            carry=[f"k{b}" for b in range(SIMHASH_BANDS)],
-            band_key=lambda b: F.col(f"k{b}"),
-            # bands partition the bit positions, so total Hamming is
-            # the sum of per-band-key popcounts — exact
-            hamming=lambda a, b: sum(
-                F.bit_count(F.col(f"a.k{i}").bitwiseXOR(F.col(f"b.k{i}")))
-                for i in range(SIMHASH_BANDS)
-            ),
-        )
-    summed = simhash_signatures(d, bits=bits, n_rows=n_docs)
-    band_bits = bits // SIMHASH_BANDS
-    band_mask = (1 << band_bits) - 1
-    return _simhash_candidate_pairs(
-        summed,
-        carry=["simhash"],
-        band_key=lambda b: F.shiftright("simhash", b * band_bits).bitwiseAND(
-            F.lit(band_mask)
-        ),
-        hamming=lambda a, b: F.bit_count(
-            F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-        ),
+    keys = simhash_band_keys(
+        load(spark, sf_dir, "documents"), simhash_width(n_docs), n_rows=n_docs
     )
+    return simhash_pairs(keys)
 
 
 def dedup_blocks(n_vecs: int) -> int:
@@ -861,10 +742,10 @@ def dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_ingest(
         load(spark, sf_dir, "documents").select("doc_id", "text"),
         table_row_count(sf_dir, "documents"),
-    )
+    ).select("doc_id", words("text").alias("ws"))
     return posting_jaccard_pairs(
         d,
-        word_shingles(words("text"), 3),
+        word_shingles(F.col("ws"), 3),
         block_cols=(),
         df_cap=None,
     ).filter(F.col("jaccard") >= 0.5)
@@ -916,8 +797,8 @@ def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     the case pairwise Jaccard and minhash both miss); the downstream
     policy cuts or trims docs above a dup_frac threshold.
 
-    Scale shape: CANDIDATE detection is one hash aggregate over
-    (xxhash64 key, doc_id) — the 8-byte posting discipline of
+    Scale shape: CANDIDATE detection is one hash aggregate on the
+    xxhash64 key (min/max doc_id) — the 8-byte posting discipline of
     dedup_shingle_jaccard, no strings in the corpus-wide shuffle;
     then only the candidate postings (truly duplicated spans plus
     the rare hash collisions) carry their raw shingle string through
@@ -931,9 +812,12 @@ def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc — positions are bounded by |dup postings|×SPAN_K, and
     overlap dedup happens in the same shuffle as the final count.
     All-integer except the final single IEEE division."""
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", words("text").alias("ws")
-    )
+    # spread_ingest: the SPAN_K-word shingle map is this query's whole
+    # map cost, and documents is one row group (one task) without it
+    d = spread_ingest(
+        load(spark, sf_dir, "documents").select("doc_id", "text"),
+        table_row_count(sf_dir, "documents"),
+    ).select("doc_id", words("text").alias("ws"))
     n = d.select("doc_id", F.size("ws").cast("long").alias("n_words"))
     post = d.select(
         "doc_id", F.posexplode(word_shingles(F.col("ws"), SPAN_K)).alias("pos", "sh")
@@ -943,13 +827,12 @@ def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sh"),
         F.xxhash64("sh").alias("shk"),
     )
-    # pass 1: hash-only candidates (8-byte shuffle discipline)
+    # pass 1: hash-only candidates (8-byte shuffle discipline). "In ≥ 2
+    # documents" is min(doc_id) < max(doc_id): one hash aggregate,
+    # where count_distinct would expand and aggregate twice.
+    in_two_docs = F.min("doc_id") < F.max("doc_id")
     cand = (
-        post.select("shk", "doc_id")
-        .groupBy("shk")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("shk")
+        post.groupBy("shk").agg(in_two_docs.alias("dup")).filter("dup").select("shk")
     )
     # Candidate postings (duplicated spans + rare collisions only —
     # small by data design, unlike corpus-sized `post`). `pc` feeds
@@ -963,8 +846,8 @@ def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string so hash collisions cannot mark a unique span duplicated
     dup = (
         pc.groupBy("shk", "sh")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
+        .agg(in_two_docs.alias("dup"))
+        .filter("dup")
         .select("shk", "sh")
     )
     cov = (

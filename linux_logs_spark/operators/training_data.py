@@ -325,7 +325,8 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic tie-break on the bigram string."""
     d = load(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(word_shingles(words("text"), 2)).alias("bigram"))
+        d.select(words("text").alias("ws"))
+        .select(F.explode(word_shingles(F.col("ws"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), "bigram")

@@ -1001,9 +1001,10 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buy the reuse with a full (doc_id, hash) shuffle; the checkpoint
     # buys it for one narrow 16-byte-row materialization instead.
     sh0 = (
-        d.select(
+        d.select("doc_id", words("text").alias("ws"))
+        .select(
             "doc_id",
-            F.explode(F.array_distinct(word_shingles(words("text"), 3))).alias(
+            F.explode(F.array_distinct(word_shingles(F.col("ws"), 3))).alias(
                 "shingle"
             ),
         )

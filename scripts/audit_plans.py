@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Plan audit over every registered query: run each query (collect) and
-count parquet scans, Exchanges, ReusedExchanges, checkpoint scans
-(ExistingRDD), Python-eval nodes and nested-loop joins in AQE's FINAL
-physical plan — the plan Spark ran. The initial plan is not counted:
-it is drawn before AQE reuses exchanges, so a subplan that several
-consumers share shows there once per consumer. A scan count above the
-distinct tables referenced is the duplicated-subtree smell (guide
-§7.2). Plans go to a scratch dir for inspection; a TSV summary to
-stdout."""
+count parquet scans, the distinct locations they read, Exchanges,
+ReusedExchanges, checkpoint scans (ExistingRDD), Python-eval nodes and
+nested-loop joins in AQE's FINAL physical plan — the plan Spark ran.
+The initial plan is not counted: it is drawn before AQE reuses
+exchanges, so a subplan that several consumers share shows there once
+per consumer. A scan count above the distinct tables referenced is the
+duplicated-subtree smell (guide §7.2). Plans go to a scratch dir for
+inspection; a TSV summary to stdout."""
 from __future__ import annotations
 
 import os
@@ -23,6 +23,44 @@ from linux_logs_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.environ.get("PLAN_AUDIT_DIR", "/tmp/plans_audit")
+COLUMNS = ("scans", "tables", "exchanges", "reused", "checkpoints", "pyeval",
+           "bnlj", "cartesian")
+
+
+def plan_counts(plan: str) -> tuple[int, ...]:
+    """COLUMNS for one formatted AQE plan, counted in the final-plan
+    tree only (before the node details and before AQE's initial plan).
+    ``tables`` is the number of distinct locations those parquet scans
+    read — the first path of each scan's ``Location:`` — so staged,
+    bucketed and partitioned copies count as tables, not only
+    ``…/<name>.parquet`` files."""
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
+    details = {}
+    for block in plan.split("\n\n")[1:]:
+        m = re.match(r"\s*\((\d+)\) ", block)
+        if m:
+            details[m.group(1)] = block
+    scan_ids = re.findall(r"Scan parquet[^(\n]*\((\d+)\)", tree)
+    locations = set()
+    for sid in scan_ids:
+        m = re.search(r"^Location: \S+ \[([^,\]]+)", details.get(sid, ""), re.M)
+        if m:
+            locations.add(m.group(1))
+
+    def n(pattern: str) -> int:
+        return len(re.findall(pattern, tree))
+
+    return (
+        len(scan_ids),
+        len(locations),
+        n(r"\bExchange\b"),
+        n(r"\bReusedExchange\b"),
+        n(r"ExistingRDD"),
+        n(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow"
+          r"|FlatMapGroupsInPandas"),
+        n(r"BroadcastNestedLoopJoin"),
+        n(r"CartesianProduct"),
+    )
 
 
 def main() -> None:
@@ -37,8 +75,7 @@ def main() -> None:
     ).save()
     specs = all_queries()
     names = sys.argv[1:] or sorted(specs)
-    print("query\tscans\ttables\texchanges\treused\tcheckpoints\tpyeval\tbnlj"
-          "\tcartesian")
+    print("\t".join(("query",) + COLUMNS))
     for name in names:
         try:
             df = specs[name].fn(spark, SF_DIR)
@@ -51,21 +88,7 @@ def main() -> None:
             continue
         with open(os.path.join(OUT, f"{name}.txt"), "w") as fh:
             fh.write(plan)
-        # final-plan tree only: before the blank-line-separated details
-        # and before AQE's initial plan
-        tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
-        scans = len(re.findall(r"Scan parquet", tree))
-        files = set(re.findall(r"file:[^\s\]]+?([a-z_]+)\.parquet", plan))
-        exch = len(re.findall(r"\bExchange\b", tree))
-        reused = len(re.findall(r"\bReusedExchange\b", tree))
-        ckpt = len(re.findall(r"ExistingRDD", tree))
-        pyeval = len(
-            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", tree)
-        )
-        bnlj = len(re.findall(r"BroadcastNestedLoopJoin", tree))
-        cart = len(re.findall(r"CartesianProduct", tree))
-        print(f"{name}\t{scans}\t{len(files)}\t{exch}\t{reused}\t{ckpt}\t{pyeval}"
-              f"\t{bnlj}\t{cart}", flush=True)
+        print("\t".join([name, *map(str, plan_counts(plan))]), flush=True)
 
 
 if __name__ == "__main__":

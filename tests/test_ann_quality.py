@@ -125,22 +125,23 @@ def test_simhash_banding_is_complete_for_radius_3(spark, sf_dir):
     """dedup_simhash claims EXACT semantics over its signatures: with
     4×12-bit bands, pigeonhole makes candidate generation complete for
     Hamming ≤ 3, and the verify filter returns exactly that set. Pin
-    it: brute-force Hamming distance over the SAME engine-computed
-    signature table must equal the query's pairs — so the only thing
-    rows-only still covers is the xxhash64 bit votes themselves
-    (round 6)."""
+    it: brute-force Hamming distance (the sum of per-band popcounts)
+    over the SAME engine-computed band keys must equal the query's
+    pairs — so the only thing rows-only still covers is the xxhash64
+    bit votes themselves."""
     from linux_logs_spark.catalog import load
-    from linux_logs_spark.operators.llm_pipeline import simhash_signatures
+    from linux_logs_spark.operators.llm_pipeline import simhash_band_keys
 
-    sigs = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash_signatures(load(spark, sf_dir, "documents")).collect()
+    keys = {
+        r["doc_id"]: (r["k0"], r["k1"], r["k2"], r["k3"])
+        for r in simhash_band_keys(load(spark, sf_dir, "documents")).collect()
     }
     exact = set()
-    ids = sorted(sigs)
+    ids = sorted(keys)
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:
-            if bin(sigs[a] ^ sigs[b]).count("1") <= 3:
+            d = sum(bin(x ^ y).count("1") for x, y in zip(keys[a], keys[b]))
+            if d <= 3:
                 exact.add((a, b))
     got = _pairs(_Q["dedup_simhash"].fn(spark, sf_dir), "doc_a", "doc_b")
     assert got == exact, (

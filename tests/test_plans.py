@@ -1151,3 +1151,49 @@ def test_spread_ingest_committed_sf_plans_unchanged(spark, sf_dir):
     plan = plan_string(_Q["dedup_shingle_jaccard"].fn(spark, sf_dir))
     m = re.search(r"RoundRobinPartitioning\((\d+)\)", plan)
     assert m and int(m.group(1)) == cores, plan
+
+
+def _lambdas_that_split(plan: str) -> list[str]:
+    """The plan's lambdafunction(...) bodies that contain a split( —
+    a word array re-derived for every element of the lambda."""
+    found = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        if "split(" in plan[m.start() : i]:
+            found.append(plan[m.start() : i])
+    return found
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_ngram_topk",
+        "dedup_shingle_jaccard",
+        "dedup_near_minhash",
+        "decontam_ngram_overlap",
+    ],
+)
+def test_shingle_maps_split_each_document_once(spark, sf_dir, monkeypatch, name):
+    """word_shingles repeats its word-array argument inside a lambda,
+    once per word of every shingle. Passed words("text"), the lambda
+    re-splits the document for each of them — O(words²) per row. Each
+    shingle map must project the word array first, so no split( is
+    left inside a lambda. Minhash and decontam checkpoint their shingle
+    frames, which hides the map from the final plan, so the optimized
+    plan of every frame the query checkpoints is checked too."""
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    df = _Q[name].fn(spark, sf_dir)
+    plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+    bad = [body for p in plans for body in _lambdas_that_split(p)]
+    assert not bad, bad[0]

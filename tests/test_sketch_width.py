@@ -1,23 +1,19 @@
-"""Scale-knob regression gates for the sketch-width parameters
-(round 10, second-decade rehearsal).
+"""Regression gates for the widened sketch widths.
 
-`N_MINHASH` and `SIMHASH_BITS` are the documented log(n) knobs that
-keep banding candidate volume sub-quadratic (SCALING.md, second
-decade: fixed widths measured 458 s / 148 s at 100×). They are
-patched at rehearsal time, never at defaults — so nothing else in the
-suite exercises the widened paths, and a silent breakage (e.g. the
-64-bit signature fold overflowing under ANSI arithmetic, which the
+The minhash and simhash widths grow with the corpus (`minhash_width`,
+`simhash_width`; SCALING.md, second decade: fixed widths measured
+458 s / 148 s at 100×). Only the scale tiers reach the widened widths,
+so nothing else in the suite exercises them, and a silent breakage
+(e.g. a 64-bit signature overflowing under ANSI arithmetic, which the
 first widened run hit) would only surface mid-rehearsal. These tests
 pin the widened paths at sf0.001:
 
 - the widened sketches still run and their pair sets keep the
-  semantics the knob rule promises (minhash r=4 keeps a SUBSET of the
-  r=2 candidates whose verified Jaccard still passes; simhash at 64
-  bits keeps hamming ≤ SIMHASH_BANDS-1 over the wider signature);
-- the 64-bit simhash signature genuinely uses the top bits (the
-  overflow regression would zero or throw on them);
-- restoring the defaults restores the default pair sets bit-for-bit
-  (the rehearsal's knob save/restore contract).
+  semantics the width rule promises (minhash r=4 stays a verified
+  subset of the exact pairs; simhash at 64 and 80 bits reports exactly
+  the hamming ≤ SIMHASH_BANDS-1 pairs over the wider signature);
+- the widened simhash signature genuinely uses its top bits (an
+  overflow or truncation regression would zero or throw on them).
 """
 
 from __future__ import annotations
@@ -66,90 +62,52 @@ def test_minhash_widened_rows_per_band_is_a_verified_subset(spark, sf_dir):
     assert len(wide & exact) >= int(0.9 * len(exact))
 
 
-def test_simhash_64bit_signature_runs_and_verifies(spark, sf_dir):
-    """The widened signature must execute (the ANSI-overflow
-    regression raised ARITHMETIC_OVERFLOW here), use its top bits,
-    and report only hamming ≤ SIMHASH_BANDS-1 pairs over the SAME
-    64-bit signatures the query banded."""
-    from pyspark.sql import functions as F
-
+def _simhash_pairs_at(spark, sf_dir, bits):
+    """(band keys by doc_id, the query's pair set) at ``bits`` bits,
+    both from the same engine-computed key table."""
     from linux_logs_spark.catalog import load
 
-    old = lp.SIMHASH_BITS
-    lp.SIMHASH_BITS = 64
-    try:
-        sigs = {
-            r["doc_id"]: r["simhash"]
-            for r in lp.simhash_signatures(
-                load(spark, sf_dir, "documents")
-            ).collect()
-        }
-        # top 16 bits are real signal: at 64 bits some signature must
-        # differ from its low-48 truncation (i.e. high bits nonzero)
-        assert any((s >> 48) & 0xFFFF for s in sigs.values())
-        got = _with_knobs(spark, sf_dir, "dedup_simhash", SIMHASH_BITS=64)
-    finally:
-        lp.SIMHASH_BITS = old
+    kf = lp.simhash_band_keys(load(spark, sf_dir, "documents"), bits)
+    keys = {
+        r["doc_id"]: tuple(r[f"k{b}"] for b in range(lp.SIMHASH_BANDS))
+        for r in kf.collect()
+    }
+    return keys, _pairs(lp.simhash_pairs(kf))
+
+
+def _brute_force_pairs(keys):
+    """Pairs within the pigeonhole radius, Hamming distance being the
+    sum of per-band popcounts (bands partition the bit positions)."""
     radius = lp.SIMHASH_BANDS - 1
-    for a, b in got:
-        assert bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1") <= radius
-    # completeness at the widened width: every brute-force pair within
-    # the radius must be reported (pigeonhole is width-independent)
-    ids = sorted(sigs)
-    brute = {
+    ids = sorted(keys)
+    return {
         (a, b)
         for i, a in enumerate(ids)
         for b in ids[i + 1 :]
-        if bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1") <= radius
+        if sum(bin(x ^ y).count("1") for x, y in zip(keys[a], keys[b])) <= radius
     }
-    assert got == brute
 
 
-def test_knob_restore_restores_default_pairs(spark, sf_dir):
-    """After a widened run, defaults must reproduce the default pair
-    sets exactly — the rehearsal's save/restore contract."""
-    before = _pairs(_Q["dedup_simhash"].fn(spark, sf_dir))
-    _with_knobs(spark, sf_dir, "dedup_simhash", SIMHASH_BITS=64)
-    after = _pairs(_Q["dedup_simhash"].fn(spark, sf_dir))
-    assert before == after
+def test_simhash_64bit_signature_runs_and_verifies(spark, sf_dir):
+    """The 64-bit signature must execute (an ANSI-overflow regression
+    raised ARITHMETIC_OVERFLOW here), use its top bits, and report
+    exactly the hamming ≤ SIMHASH_BANDS-1 pairs over the SAME keys
+    the query banded (pigeonhole completeness is width-independent)."""
+    keys, got = _simhash_pairs_at(spark, sf_dir, 64)
+    # band 3 holds bits 48-63: some key there must be nonzero
+    assert any(ks[3] for ks in keys.values())
+    assert got == _brute_force_pairs(keys)
 
 
 def test_simhash_wide_band_keys_past_the_bigint(spark, sf_dir):
-    """bits > 64 must route through the per-band key form
-    (_simhash_band_keys — the 1000× rehearsal's finding: the one-
-    bigint signature caps the log(n) width rule at 64 and leaves
-    n²·2⁻¹⁶ random band collisions at 5M docs). Pins, at 80 bits:
-    the query's pairs equal brute-force Hamming ≤ SIMHASH_BANDS-1
-    where Hamming = Σ per-band popcounts over the SAME engine keys
-    (bands partition the bits, so this is the exact distance and the
-    pigeonhole completeness argument is width-independent); and the
-    second hash chunk genuinely contributes (band 3 of an 80-bit
-    signature holds bits 60-79, so positions 4-19 of k3 come from
-    chunk 1 — the truncation regression would zero them)."""
-    from linux_logs_spark.catalog import load
-
-    old = lp.SIMHASH_BITS
-    lp.SIMHASH_BITS = 80
-    try:
-        kf = lp._simhash_band_keys(load(spark, sf_dir, "documents"), 80)
-        keys = {
-            r["doc_id"]: tuple(r[f"k{b}"] for b in range(lp.SIMHASH_BANDS))
-            for r in kf.collect()
-        }
-        got = _with_knobs(spark, sf_dir, "dedup_simhash", SIMHASH_BITS=80)
-    finally:
-        lp.SIMHASH_BITS = old
+    """Past 64 bits the signature needs a second hash chunk (the 1000×
+    rehearsal's finding: a one-bigint signature caps the log(n) width
+    rule at 64 and leaves n²·2⁻¹⁶ random band collisions at 5M docs).
+    Pins, at 80 bits: the pairs equal brute-force Hamming ≤
+    SIMHASH_BANDS-1 over the same keys; and the second hash chunk
+    genuinely contributes (band 3 of an 80-bit signature holds bits
+    60-79, so positions 4-19 of k3 come from chunk 1 — a truncation
+    regression would zero them)."""
+    keys, got = _simhash_pairs_at(spark, sf_dir, 80)
     assert any(ks[3] >= 16 for ks in keys.values())  # chunk-1 bits live
-    radius = lp.SIMHASH_BANDS - 1
-
-    def ham(a, b):
-        return sum(bin(x ^ y).count("1") for x, y in zip(keys[a], keys[b]))
-
-    ids = sorted(keys)
-    brute = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if ham(a, b) <= radius
-    }
-    assert got == brute
+    assert got == _brute_force_pairs(keys)
