@@ -568,31 +568,30 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     size, mtime_ns = dataset_fingerprint(table_path(sf_dir, "events"))
     tag = f"{size}_{mtime_ns}"
+    # both sides read back with the written frame's schema: an empty
+    # events table writes no file to infer one from
+    fact_df = e.withColumn("dt", F.date_trunc("day", "ts").cast("date")).select(
+        "event_id", "dt"
+    )
     fact_path = staged_dataset(
         sf_dir,
         "dpp_fact",
         tag,
-        lambda p: e.withColumn("dt", F.date_trunc("day", "ts").cast("date"))
-        .select("event_id", "dt")
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(p),
+        lambda p: fact_df.write.mode("overwrite").partitionBy("dt").parquet(p),
     )
+    fact = spark.read.schema(fact_df.schema).parquet(fact_path)
     # the dim's dt set IS the fact's partition set — resolve it from
     # partition metadata (no data read) instead of re-scanning events
+    dim_df = fact.select("dt").distinct().withColumn("dow", F.dayofweek("dt"))
     dim_path = staged_dataset(
         sf_dir,
         "dpp_dim",
         tag,
-        lambda p: spark.read.parquet(fact_path)
-        .select("dt")
-        .distinct()
-        .withColumn("dow", F.dayofweek("dt"))
-        .write.mode("overwrite")
-        .parquet(p),
+        lambda p: dim_df.write.mode("overwrite").parquet(p),
     )
-    fact = spark.read.parquet(fact_path)
-    dim = spark.read.parquet(dim_path).filter(F.col("dow") == 2)  # Monday
+    dim = spark.read.schema(dim_df.schema).parquet(dim_path).filter(
+        F.col("dow") == 2  # Monday
+    )
     joined = fact.join(dim.select("dt"), "dt")
     return joined.groupBy(F.col("dt").cast("string").alias("dt")).agg(
         F.count("*").alias("n")

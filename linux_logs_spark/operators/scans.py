@@ -209,16 +209,14 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the 'searchable store' layout for 100 TB of logs: writes
     land in dt=YYYY-MM-DD directories, so any time-bounded query
     prunes partitions at planning time (zero I/O outside the range).
-    The read-back count verifies no rows were lost or duplicated."""
+    The read-back count verifies no rows were lost or duplicated;
+    it reads with the written frame's schema, because an empty write
+    leaves no file to infer one from."""
     e = load(spark, sf_dir, "events")
     path = _scratch(sf_dir, "events_by_day")
-    (
-        e.withColumn("dt", F.date_trunc("day", "ts").cast("date"))
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(path)
-    )
-    back = spark.read.parquet(path)
+    by_day = e.withColumn("dt", F.date_trunc("day", "ts").cast("date"))
+    by_day.write.mode("overwrite").partitionBy("dt").parquet(path)
+    back = spark.read.schema(by_day.schema).parquet(path)
     # dt surfaces as a string: DATE-typed cells materialize as
     # date-vs-midnight-datetime across engines and break the hash.
     return back.groupBy(F.col("dt").cast("string").alias("dt"), "event_type").agg(
@@ -835,7 +833,7 @@ def sink_parquet_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     hinted = _rebalanced_events(spark, sf_dir)
     path = _scratch(sf_dir, "events_rebalanced")
     hinted.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(hinted.schema).parquet(path)
     return back.groupBy("event_type").agg(F.count("*").alias("n"))
 
 
@@ -964,28 +962,25 @@ def table_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cut = F.lit(PART_EVO_CUTOFF).cast("timestamp")
     root = _scratch(sf_dir, "events_part_evo")
-    (
-        e.filter(F.col("ts") < cut)
-        .write.mode("overwrite")
-        .partitionBy("event_type")
-        .parquet(os.path.join(root, "spec1"))
+    # each generation reads back with its written schema: an empty
+    # generation leaves no file to infer one from
+    gen1 = e.filter(F.col("ts") < cut)
+    gen1.write.mode("overwrite").partitionBy("event_type").parquet(
+        os.path.join(root, "spec1")
     )
-    (
-        e.filter(F.col("ts") >= cut)
-        .withColumn("dt", F.date_trunc("day", "ts").cast("date"))
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(os.path.join(root, "spec2"))
+    gen2 = e.filter(F.col("ts") >= cut).withColumn(
+        "dt", F.date_trunc("day", "ts").cast("date")
     )
+    gen2.write.mode("overwrite").partitionBy("dt").parquet(os.path.join(root, "spec2"))
     lo, hi = "2024-01-11", "2024-01-21"
     old = (
-        spark.read.parquet(os.path.join(root, "spec1"))
+        spark.read.schema(gen1.schema).parquet(os.path.join(root, "spec1"))
         .filter(F.col("event_type") == "error")  # prunes et= dirs
         .filter((F.col("ts") >= lo) & (F.col("ts") < hi))
         .select(F.date_trunc("day", "ts").cast("date").alias("dt"))
     )
     new = (
-        spark.read.parquet(os.path.join(root, "spec2"))
+        spark.read.schema(gen2.schema).parquet(os.path.join(root, "spec2"))
         .filter(F.col("event_type") == "error")
         .filter((F.col("dt") >= lo) & (F.col("dt") < hi))  # prunes dt= dirs
         .select("dt")

@@ -489,119 +489,43 @@ def cust_order_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_MIN_CELLS = 16
 IVF_TARGET_CELL_ROWS = 125
 N_PROBE = 2
-# Round-14 (verdict item 2): TWO-LEVEL probing past the flip —
-# the SemDeDup treatment applied to IVF. History: the flat
-# cells-∝-n rule keeps occupancy (and verify volume) linear but has
-# two unbounded terms — the driver-side centroid collect (cells×dim
-# float64 in the probe UDF's closure: ~512 MB at 125M vectors) and,
-# sooner, the n×cells assignment GEMM (n²·dim/125 FLOPs: the 2M
-# rehearsal leg measured 211.6 s under it). The round-13 √n hatch
-# (cells = n // floor(√n)) bounded both but traded occupancy to √n,
-# so the per-cell verify GEMM went O(n^1.5·nprobe·dim) — measured
-# 507.1 s at 20M vectors, 14.7×/decade, 8× the sibling LSH's 63.2 s
-# (the round-13 verdict's one `weak`). Two-level keeps BOTH bounded:
-# K1 = max(16, floor(√(n/T)), n // COARSE_ROW_CAP) coarse
-# super-cells (the FLOPs balance point: coarse assignment n·K1
-# equals the summed per-cell fine assignment n²/(K1·T) at
-# K1 = √(n/T); the cap arm bounds per-task memory past n = T·CAP²),
-# then per coarse cell k2 = max(1, |members| // T) fine cells seeded
-# by the cell's k2 lowest-vec_id members — fine assignment, fine
-# probing (N_PROBE at each level) and the per-fine-cell verify GEMM
-# all run inside ONE applyInPandas over coarse cells, so fine
-# centroids never reach the driver. Occupancy returns to ~T ⇒ verify
-# FLOPs ~n·N_PROBE²·T·dim (linear), closure K1×dim ≈ 205 KB at 20M.
-# The flip sits at the measured crossover decade: 1x/10x/100x
-# rehearsal legs (≤200k vectors) and every committed sf stay flat —
-# below the flip k2 is 1 everywhere, so the fine level collapses to
-# the identity and plan + hashes are unchanged. Recall: each query
-# now verifies against ≤ N_PROBE·N_PROBE fine cells of ~T members
-# (vs N_PROBE flat cells of T members) — tests/test_ann_quality.py
-# measures it against the exact pair set rather than asserting.
-# The force knob runs the two-level rule below the flip for
-# tests/rehearsals (oracle-checked against the flip-forced SQL by
-# tests/test_ivf_twolevel.py, the test_semdedup_twolevel pattern).
-IVF_TWOLEVEL = False
-IVF_TWOLEVEL_FLIP_ROWS = 1_000_000
-IVF_COARSE_ROW_CAP = 500_000
-
-
-def _ivf_twolevel(n_vecs: int) -> bool:
-    return IVF_TWOLEVEL or n_vecs >= IVF_TWOLEVEL_FLIP_ROWS
 
 
 def _ivf_cells(n_vecs: int) -> int:
-    """Coarse cell count. Flat rule below the flip:
-    n // IVF_TARGET_CELL_ROWS floored at IVF_MIN_CELLS — cells grow
-    ∝ n so occupancy, candidates-per-probe and total verify volume
-    stay FLAT per decade (this replaced the round-10 hand-patched
-    ×8/decade sequence whose occupancy creep made sim_ann_ivf the
-    one super-linear family). At/past IVF_TWOLEVEL_FLIP_ROWS (or
-    under the force knob): K1 = max(16, floor(√(n // T)),
-    n // IVF_COARSE_ROW_CAP) — the two-level balance rule with the
-    per-task-memory cap arm (see the knob comment above). Derived
-    from the parquet footer row count (zero jobs) on the Spark side
-    and count(*) in the oracle — the `_semdedup_k` pattern — so both
-    engines compute the same count at any scale from the data alone.
-    Python // and DuckDB // agree (floor) on the non-negative ints
-    involved; floor(sqrt(double)) is IEEE-identical cross-engine. At
-    every committed scale factor the result is the historical 16
-    (500//125 < 16 → floor; 2000//125 = 16 exactly), so the baked
-    hash signatures are unchanged."""
-    if _ivf_twolevel(n_vecs):
-        from math import floor, sqrt
-
-        return max(
-            IVF_MIN_CELLS,
-            floor(sqrt(n_vecs // IVF_TARGET_CELL_ROWS)),
-            n_vecs // IVF_COARSE_ROW_CAP,
-        )
+    """Cell count: n // IVF_TARGET_CELL_ROWS floored at IVF_MIN_CELLS —
+    cells grow ∝ n so occupancy, candidates-per-probe and total verify
+    volume stay FLAT per decade (this replaced the round-10
+    hand-patched ×8/decade sequence whose occupancy creep made
+    sim_ann_ivf the one super-linear family). Derived from the parquet
+    footer row count (zero jobs) on the Spark side and count(*) in the
+    oracle — the `_semdedup_k` pattern — so both engines compute the
+    same count at any scale from the data alone; Python // and DuckDB
+    // agree (floor) on the non-negative ints involved. At every
+    committed scale factor the result is the historical 16 (500//125 <
+    16 → floor; 2000//125 = 16 exactly)."""
     return max(IVF_MIN_CELLS, n_vecs // IVF_TARGET_CELL_ROWS)
 
 
 # Centroids are the _ivf_cells(n) lowest vec_ids — fully deterministic,
 # so DuckDB replays the index: rank every vector's cosine against each
-# coarse centroid (normalize-then-GEMM vs dot/norms agree to ~1e-15;
-# an assignment flip needs a near-exact centroid tie), take rk=1 as
-# the assignment and rk<=N_PROBE as the probes. At/past the two-level
-# flip, the fine level replays inside SQL too: per coarse cell
-# k2 = GREATEST(1, |members| // T) seeds taken as the cell's k2
-# lowest-vec_id MEMBERS (row_number), members assigned to their
-# nearest seed (frk=1), queries probing their N_PROBE nearest seeds
-# (frk<=N_PROBE) — below the flip k2 is 1 everywhere, so the fine
-# CTEs collapse to the identity and the query is algebraically the
-# old single-level one (committed-sf hashes unchanged). Verification
-# uses the SAME round-6 cosine the exact-family oracles hash-match.
-# Graduated from rows-only in round 6 (the r5 verdict's item 1). The
-# oracle re-derives every count from count(*) — mirroring _ivf_cells
-# exactly — so retuning or rescaling cannot silently desync engine
-# and oracle, same rule as _LSH_ORACLE. The parameters exist so
-# tests can re-bake the SQL with the flip forced and the target-cell
-# knob shrunk (500-vector coarse cells hold ~31 members, so k2 only
-# exceeds 1 at a sub-125 T) and oracle-check the two-level regime at
-# tiny sf; registration bakes the module defaults.
+# centroid (normalize-then-GEMM vs dot/norms agree to ~1e-15; an
+# assignment flip needs a near-exact centroid tie), take rk=1 as the
+# assignment and rk<=N_PROBE as the probes. Verification uses the SAME
+# round-6 cosine the exact-family oracles hash-match. Graduated from
+# rows-only in round 6 (the r5 verdict's item 1). The oracle re-derives
+# the cell count from count(*) — mirroring _ivf_cells exactly — so
+# retuning or rescaling cannot silently desync engine and oracle, same
+# rule as _LSH_ORACLE.
 
 
-def _ivf_oracle(
-    flip_rows: int | None = None,
-    target_cell: int | None = None,
-    coarse_cap: int | None = None,
-) -> str:
-    flip = IVF_TWOLEVEL_FLIP_ROWS if flip_rows is None else flip_rows
-    t = IVF_TARGET_CELL_ROWS if target_cell is None else target_cell
-    cap = IVF_COARSE_ROW_CAP if coarse_cap is None else coarse_cap
+def _ivf_oracle() -> str:
     return f"""
 WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dv FROM embeddings
 ),
-nn AS (SELECT count(*) AS nv FROM v),
 k AS (
-  SELECT CASE WHEN nv >= {flip}
-         THEN GREATEST({IVF_MIN_CELLS},
-              CAST(floor(sqrt(CAST(nv // {t} AS DOUBLE))) AS BIGINT),
-              nv // {cap})
-         ELSE GREATEST({IVF_MIN_CELLS}, nv // {t})
-         END AS n_cells
-  FROM nn
+  SELECT GREATEST({IVF_MIN_CELLS}, count(*) // {IVF_TARGET_CELL_ROWS}) AS n_cells
+  FROM v
 ),
 cent AS (
   SELECT vec_id AS cell, dv AS cv FROM v WHERE vec_id < (SELECT n_cells FROM k)
@@ -615,45 +539,11 @@ ranked AS (
 ),
 assign AS (SELECT vec_id, cell FROM ranked WHERE rk = 1),
 probe  AS (SELECT vec_id, cell FROM ranked WHERE rk <= {N_PROBE}),
-k2s AS (
-  SELECT cell, CASE WHEN (SELECT nv FROM nn) >= {flip}
-         THEN GREATEST(1, count(*) // {t}) ELSE 1 END AS k2
-  FROM assign GROUP BY cell
-),
-seeds AS (
-  SELECT cell, vec_id AS seed_id, rn - 1 AS f FROM (
-    SELECT a.cell, a.vec_id, k2s.k2,
-           row_number() OVER (PARTITION BY a.cell ORDER BY a.vec_id) AS rn
-    FROM assign a JOIN k2s ON a.cell = k2s.cell)
-  WHERE rn <= k2
-),
-fm AS (
-  SELECT a.vec_id, a.cell, s.f,
-         row_number() OVER (PARTITION BY a.vec_id, a.cell
-                            ORDER BY list_cosine_similarity(va.dv, vs.dv) DESC,
-                                     s.f) AS frk
-  FROM assign a
-  JOIN seeds s ON s.cell = a.cell
-  JOIN v va ON va.vec_id = a.vec_id
-  JOIN v vs ON vs.vec_id = s.seed_id
-),
-massign AS (SELECT vec_id, cell, f FROM fm WHERE frk = 1),
-fp AS (
-  SELECT p.vec_id, p.cell, s.f,
-         row_number() OVER (PARTITION BY p.vec_id, p.cell
-                            ORDER BY list_cosine_similarity(vq.dv, vs.dv) DESC,
-                                     s.f) AS frk
-  FROM probe p
-  JOIN seeds s ON s.cell = p.cell
-  JOIN v vq ON vq.vec_id = p.vec_id
-  JOIN v vs ON vs.vec_id = s.seed_id
-),
-fprobe AS (SELECT vec_id, cell, f FROM fp WHERE frk <= {N_PROBE}),
 pairs AS (
   SELECT p.vec_id, a.vec_id AS neighbor_id,
          round(list_cosine_similarity(vq.dv, va.dv), 6) AS sim
-  FROM fprobe p
-  JOIN massign a ON a.cell = p.cell AND a.f = p.f AND a.vec_id <> p.vec_id
+  FROM probe p
+  JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.vec_id
   JOIN v vq ON vq.vec_id = p.vec_id
   JOIN v va ON va.vec_id = a.vec_id
 )
@@ -675,22 +565,11 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     path), each query probes its 2 nearest cells, and candidates are
     verified with one exact float64 GEMM per cell (round-13, the
     sim_ann_lsh treatment: per-cell local top-5 is exhaustive for the
-    cell, so the global top-5 is a bounded ≤ N_PROBE²·5-row window
+    cell, so the global top-5 is a bounded ≤ N_PROBE·5-row window
     merge). Candidate generation shuffles n·N_PROBE rows keyed by
-    cell — the cross-join pair space never materializes. Past
-    IVF_TWOLEVEL_FLIP_ROWS the plan goes TWO-LEVEL (round-14, the
-    SemDeDup treatment): the collected centroids become
-    K1 = √(n/T) coarse super-cells, and INSIDE the per-cell UDF each
-    coarse cell splits into k2 = |members|/T fine cells seeded by its
-    k2 lowest-vec_id members — members assigned to their nearest
-    seed, queries probing their N_PROBE nearest seeds, verify GEMM
-    per FINE cell — so occupancy returns to ~T, verify FLOPs to
-    ~n·N_PROBE²·T·dim (linear), and the driver closure stays K1×dim
-    ≈ 205 KB at 20M (the retired √n hatch measured 507.1 s / n^1.5
-    verify at the 20M leg; see the IVF_TWOLEVEL knob comment). Below
-    the flip k2 is 1 and the fine level is the identity — same plan,
-    same hashes. Complements sim_ann_lsh: IVF partitions by data
-    geometry, LSH by random hyperplanes."""
+    cell — the cross-join pair space never materializes.
+    Complements sim_ann_lsh: IVF partitions by data geometry, LSH by
+    random hyperplanes."""
     import numpy as np
     import pandas as pd
 
@@ -706,10 +585,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id is a dense 0..n-1 key, so the n_cells lowest ids are a
     # pushed-down filter (no global sort job just to pick centroids).
     # The collect is n_cells×dim float64 — 820 KB at the 100×
-    # rehearsal's 1600 cells; past the two-level flip n_cells is the
-    # COARSE K1 = √(n/T), so the closure SHRINKS with the flip
-    # (205 KB at 20M vectors) — fine centroids are cell-local inside
-    # cell_topk and never reach the driver.
+    # rehearsal's 1600 cells.
     cent_rows = (
         e.filter(F.col("vec_id") < n_cells)
         .select("vec_id", "embedding")
@@ -766,8 +642,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `size(pcells) > 0 AND isnotnull(pcells)` and push it below
     # spread_ingest's repartition, where the only way to evaluate it is
     # to run the UDF AGAIN — the round-14 all-243 duplication scan
-    # found the coarse-assignment GEMM (the dominant n·K1·dim term at
-    # the 20M leg) executing twice, plan nodes (2)+(6) (guide §4.4).
+    # found the assignment GEMM executing twice, plan nodes (2)+(6)
+    # (guide §4.4).
     # The fence drops the inferred filter; posexplode itself already
     # skips null/empty arrays, and _probe_cells never returns one.
     probe_cells = F.pandas_udf(_probe_cells, "array<long>").asNondeterministic()
@@ -787,28 +663,19 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "embedding", F.posexplode("pcells").alias("prank", "cell"))
 
     chunk = _CELL_GEMM_CHUNK
-    two_level = _ivf_twolevel(table_row_count(sf_dir, "embeddings"))
-    t_rows = IVF_TARGET_CELL_ROWS
-    nprobe = N_PROBE
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Within-cell verification: ONE numpy float64 GEMM per FINE
-        # cell of its queries against its members (round-13 brought
-        # the GEMM — the JVM equi-join + 64-term-fold form priced the
-        # 2M-vector leg at ~5e9 candidate rows, a ~20-minute DNF;
-        # round-14 made it two-level: past the flip each coarse cell
-        # splits into k2 = |members|/T fine cells seeded by its k2
-        # lowest-vec_id members, so occupancy — and the GEMM — stay
-        # ~T-row bounded; below the flip k2 = 1 and this body is
-        # bit-identical to the round-13 single-level one). A query's
-        # per-fine-cell local top-5 is EXHAUSTIVE for that cell, so
-        # the global top-5 lives in the union of its ≤ N_PROBE²·5
-        # local winners — merged by the tiny ranking window below.
-        # Tie-break parity: members sorted by vec_id so argmax's
-        # first-max rule IS the oracle's (sim DESC, neighbor_id ASC)
-        # for the verify and (sim DESC, f ASC) for fine
-        # assignment/probing; sims round 6-digit half-away-from-zero
-        # BEFORE ranking (the shared rounded-sim convention).
+        # Within-cell verification: ONE numpy float64 GEMM per cell of
+        # its queries against its members (a JVM equi-join + 64-term
+        # fold priced the 2M-vector leg at ~5e9 candidate rows, a
+        # ~20-minute DNF). A query's per-cell local
+        # top-5 is EXHAUSTIVE for that cell, so the global top-5 lives
+        # in the union of its ≤ N_PROBE·5 local winners — merged by
+        # the tiny ranking window below. Tie-break parity: members
+        # sorted by vec_id so argmax's first-max rule IS the oracle's
+        # (sim DESC, neighbor_id ASC); sims round 6-digit
+        # half-away-from-zero BEFORE ranking (the shared rounded-sim
+        # convention).
         empty = pd.DataFrame(
             {"vec_id": pd.Series(dtype="int64"),
              "neighbor_id": pd.Series(dtype="int64"),
@@ -827,62 +694,28 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         qids = pdf["vec_id"].to_numpy()
         qm = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-        k2 = max(1, len(mids) // t_rows) if two_level else 1
-        if k2 > 1:
-            # fine level: seeds = the k2 lowest-vec_id members (mm is
-            # vec_id-sorted, so a prefix slice); member assignment is
-            # one chunked argmax (first-max = lowest f, the oracle's
-            # frk=1 tie-break), query probing min(N_PROBE, k2)
-            # repeated argmaxes — all chunk×k2 buffers
-            st = np.ascontiguousarray(mm[:k2].T)
-            mf = np.empty(len(mids), dtype=np.int64)
-            for lo in range(0, len(mids), chunk):
-                mf[lo : lo + chunk] = np.argmax(mm[lo : lo + chunk] @ st, axis=1)
-            npq = min(nprobe, k2)
-            qp = np.empty((len(qids), npq), dtype=np.int64)
-            for lo in range(0, len(qids), chunk):
-                b = qm[lo : lo + chunk] @ st
-                rows = np.arange(len(b))
-                for j in range(npq):
-                    idx = np.argmax(b, axis=1)
-                    qp[lo : lo + len(b), j] = idx
-                    b[rows, idx] = -np.inf
-        else:
-            mf = np.zeros(len(mids), dtype=np.int64)
-            qp = np.zeros((len(qids), 1), dtype=np.int64)
+        k = min(5, len(mids))
         frames = []
-        for f in range(k2):
-            msk = mf == f
-            if not msk.any():
-                continue
-            qmsk = (qp == f).any(axis=1)
-            if not qmsk.any():
-                continue
-            f_mids = mids[msk]
-            f_mm = mm[msk]
-            f_qids = qids[qmsk]
-            f_qm = qm[qmsk]
-            k = min(5, f_mm.shape[0])
-            # query-chunked so the sim matrix is chunk×|fine members|
-            # — bounds task memory on a hot cell; top-5 via k argmax
-            # PASSES, not a per-row sort
-            for lo in range(0, len(f_qids), chunk):
-                sims = f_qm[lo : lo + chunk] @ f_mm.T
-                sims = np.copysign(np.floor(np.abs(sims) * 1e6 + 0.5), sims) / 1e6
-                sims[f_qids[lo : lo + chunk, None] == f_mids[None, :]] = -np.inf
-                rows = np.arange(sims.shape[0])
-                qslice = f_qids[lo : lo + sims.shape[0]]
-                for _ in range(k):
-                    idx = np.argmax(sims, axis=1)
-                    val = sims[rows, idx]
-                    keep = val != -np.inf
-                    if keep.any():
-                        frames.append(pd.DataFrame({
-                            "vec_id": qslice[keep],
-                            "neighbor_id": f_mids[idx[keep]],
-                            "sim": val[keep],
-                        }))
-                    sims[rows, idx] = -np.inf
+        # query-chunked so the sim matrix is chunk×|members| — bounds
+        # task memory on a hot cell; top-5 via k argmax PASSES, not a
+        # per-row sort
+        for lo in range(0, len(qids), chunk):
+            sims = qm[lo : lo + chunk] @ mm.T
+            sims = np.copysign(np.floor(np.abs(sims) * 1e6 + 0.5), sims) / 1e6
+            sims[qids[lo : lo + chunk, None] == mids[None, :]] = -np.inf
+            rows = np.arange(sims.shape[0])
+            qslice = qids[lo : lo + sims.shape[0]]
+            for _ in range(k):
+                idx = np.argmax(sims, axis=1)
+                val = sims[rows, idx]
+                keep = val != -np.inf
+                if keep.any():
+                    frames.append(pd.DataFrame({
+                        "vec_id": qslice[keep],
+                        "neighbor_id": mids[idx[keep]],
+                        "sim": val[keep],
+                    }))
+                sims[rows, idx] = -np.inf
         if not frames:
             return empty
         return pd.concat(frames, ignore_index=True)
@@ -890,7 +723,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probed.groupBy("cell").applyInPandas(
         cell_topk, "vec_id long, neighbor_id long, sim double"
     )
-    # global merge: ≤ N_PROBE²·5 candidates per query — a bounded
+    # global merge: ≤ N_PROBE·5 candidates per query — a bounded
     # partitioned window with the same (sim DESC, neighbor ASC) order
     # as each cell's local ranking and the oracle's row_number
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -2197,68 +2030,16 @@ SEMDEDUP_THRESHOLD = 0.35
 SEMDEDUP_TARGET_CELL_ROWS = 250
 
 
-# TWO-LEVEL centroid probing past the flip (round-13; replaces the
-# round-12 √n cell-size hatch). The flat K∝n rule's assignment FLOPs
-# are n·K = n²/T (quadratic); the retired √n hatch (T = √n) balanced
-# assignment and pair volume at O(n^1.5) — but its PAIR OUTPUT was
-# the n^1.5 term (measured fourth decade: 2.88B same-cell pairs /
-# 768.3 s at 20M vectors), i.e. the materialized-rows cost, not the
-# GEMM, became the wall. Two-level keeps fine cells at the flat
-# TARGET_CELL_ROWS (pair output ~n·T — LINEAR again) and makes the
-# ASSIGNMENT hierarchical instead: a coarse quantizer of
-# K1 = √(n/T) super-cells (the FLOPs balance point: coarse assignment
-# n·K1 equals the summed per-super-cell fine assignment n²/(K1·T)
-# exactly at K1 = √(n/T)), then per super-cell a fine k-means with
-# k2 = max(1, |cell| // T) cells seeded by the cell's lowest vec_ids.
-# Total assignment FLOPs 2·n·√(n/T) — 16× below the √n hatch's n^1.5
-# at 20M — and every fine cell stays ~T rows. Per-task memory is one
-# coarse cell (~√(n·T) rows ≈ 70 MB at 20M); SEMDEDUP_COARSE_ROW_CAP
-# bounds it at the extreme (past n = T·CAP² ≈ 1B the cap arm takes
-# over and K1 grows ∝ n, trading coarse FLOPs for bounded tasks).
-# The flip AUTO-ENGAGES at SEMDEDUP_TWOLEVEL_FLIP_ROWS from the
-# parquet footer row count (the _ivf_cells pattern); the registered
-# oracle is ONE static SQL whose kk/csz CTEs replay the same
-# conditionals from count(*), with the fine level degenerating to
-# k2=1 below the flip — algebraically identical to the flat
-# single-level query there, so committed-sf hashes are unchanged.
-# √ uses floor(sqrt(double)) — IEEE sqrt is correctly rounded, so
-# Python and DuckDB floor identically. The default-OFF force knob
-# runs the two-level path below the flip for tests/rehearsals
-# (oracle-checked against the flip-forced SQL by
-# tests/test_semdedup_twolevel.py).
-SEMDEDUP_TWOLEVEL = False
-SEMDEDUP_TWOLEVEL_FLIP_ROWS = 4_000_000
-SEMDEDUP_COARSE_ROW_CAP = 500_000
-# fine packed key = dist·PACK + f; k2 < PACK enforced, and
-# dist·PACK + f ≤ 64·(2·KM_SCALE)²·2²⁰ ≈ 2.7e14 < 2⁵³ stays exact
-# in float64 (the _km_assign GEMM argument, fine-level instance).
-_SEMDEDUP_FINE_PACK = 1 << 20
-
 # Query-side chunk for the per-cell verification GEMM — bounds task
 # memory on a hot cell; module-level so tests can shrink it and
 # exercise the boundary arithmetic (normal cells never exceed one).
 _CELL_GEMM_CHUNK = 2048
 
 
-def _semdedup_twolevel(n_vecs: int) -> bool:
-    return SEMDEDUP_TWOLEVEL or n_vecs >= SEMDEDUP_TWOLEVEL_FLIP_ROWS
-
-
 def _semdedup_k(n_vecs: int) -> int:
-    """Coarse cell count. Flat rule below the flip: max(KM_K,
-    n // TARGET) — never below the kmeans floor, grows linearly with
-    the corpus; Python // and DuckDB // agree (floor) on the
-    non-negative ints involved. Two-level rule at/past the flip:
-    K1 = max(KM_K, floor(sqrt(n // TARGET)), n // COARSE_ROW_CAP) —
-    the FLOPs balance point with a per-task-memory cap arm."""
-    if _semdedup_twolevel(n_vecs):
-        from math import floor, sqrt
-
-        return max(
-            KM_K,
-            floor(sqrt(n_vecs // SEMDEDUP_TARGET_CELL_ROWS)),
-            n_vecs // SEMDEDUP_COARSE_ROW_CAP,
-        )
+    """Cell count: max(KM_K, n // TARGET) — never below the kmeans
+    floor, grows linearly with the corpus; Python // and DuckDB //
+    agree (floor) on the non-negative ints involved."""
     return max(KM_K, n_vecs // SEMDEDUP_TARGET_CELL_ROWS)
 
 
@@ -2289,15 +2070,11 @@ def _semdedup_k(n_vecs: int) -> int:
 _KM_GEMM_MIN_K = 128
 
 
-def _km_assign(qa, cents, key_sql: str, k: int, keep: tuple = ()):
-    """(vec_id, qa, *keep, key) assignment against the 1-row packed
-    centroid frame — broadcast-join + HOF argmin below
-    _KM_GEMM_MIN_K, numpy int64 GEMM above it. Both produce identical
-    packed keys. `keep` names extra input columns carried through
-    (round 13: the two-level SemDeDup path assigns the coarse key
-    with the raw embedding riding along, so no corpus-sized join is
-    needed to reunite them)."""
-    cols = ["vec_id", "qa", *keep]
+def _km_assign(qa, cents, key_sql: str, k: int):
+    """(vec_id, qa, key) assignment against the 1-row packed centroid
+    frame — broadcast-join + HOF argmin below _KM_GEMM_MIN_K, numpy
+    int64 GEMM above it. Both produce identical packed keys."""
+    cols = ["vec_id", "qa"]
     if k < _KM_GEMM_MIN_K:
         return qa.join(F.broadcast(cents)).selectExpr(
             *cols, f"({key_sql}) AS key"
@@ -2446,43 +2223,18 @@ def _km_train_array(qa, iters: int, k: int):
     return pack(c).localCheckpoint(eager=True), key_sql
 
 
-def _semdedup_oracle(
-    flip_rows: int | None = None,
-    target_cell: int | None = None,
-    coarse_cap: int | None = None,
-) -> str:
-    """ONE static SQL for BOTH regimes. Coarse: Lloyd chain (shared
-    _km_chain_sql, K1 from the data via the kk CTE — _semdedup_k's
-    CASE replayed in SQL) → coarse assignment. Fine: per coarse cell,
-    k2 = CASE(count(*) >= flip → GREATEST(1, |cell| // T), else 1)
-    seeds taken as the cell's k2 lowest vec_ids (row_number), then
-    SEMDEDUP_ITERS Lloyd updates with the dist·PACK+f packed argmin
-    and empty-cell carry — below the flip k2 is 1 everywhere, so the
-    fine level collapses to the identity and the query is
-    algebraically the old single-level one (committed-sf hashes
-    unchanged). Pairs join on (coarse, fine) with
-    list_cosine_similarity, the dedup_embedding_cosine rounding
-    convention. Parameters exist so tests can re-bake the SQL under
-    forced-flip / shrunk-T knobs and oracle-check the two-level path
-    at tiny sf; registration bakes the module defaults."""
-    flip = SEMDEDUP_TWOLEVEL_FLIP_ROWS if flip_rows is None else flip_rows
-    t = SEMDEDUP_TARGET_CELL_ROWS if target_cell is None else target_cell
-    cap = SEMDEDUP_COARSE_ROW_CAP if coarse_cap is None else coarse_cap
-    pack = _SEMDEDUP_FINE_PACK
+def _semdedup_oracle() -> str:
+    """Lloyd chain (shared _km_chain_sql, K from the data via the kk
+    CTE — _semdedup_k replayed in SQL) → final assignment → same-cell
+    pairs with list_cosine_similarity, the dedup_embedding_cosine
+    rounding convention."""
     dist = " + ".join(f"(q.q{i} - c.q{i}) * (q.q{i} - c.q{i})" for i in range(_KM_DIM))
     final = SEMDEDUP_ITERS + 1
     k_sql = "(SELECT kv FROM kk)"
-    # mirrors _semdedup_k EXACTLY, including the two-level auto-flip:
-    # DuckDB // is floor division and floor(sqrt(double)) matches
-    # Python's (IEEE-correctly-rounded sqrt in both engines; n//T is
-    # < 2^53 so the CAST to DOUBLE is exact)
+    # mirrors _semdedup_k EXACTLY: DuckDB // is floor division
     kk_cte = (
-        f"nn AS (SELECT count(*) AS nv FROM embeddings), "
-        f"kk AS (SELECT CASE WHEN nv >= {flip}"
-        f" THEN GREATEST({KM_K},"
-        f" CAST(floor(sqrt(CAST(nv // {t} AS DOUBLE))) AS BIGINT),"
-        f" nv // {cap})"
-        f" ELSE GREATEST({KM_K}, nv // {t}) END AS kv FROM nn), "
+        f"kk AS (SELECT GREATEST({KM_K}, count(*) // {SEMDEDUP_TARGET_CELL_ROWS})"
+        " AS kv FROM embeddings), "
     )
     cos = (
         "round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),"
@@ -2496,200 +2248,17 @@ def _semdedup_oracle(
     sql.append(
         f", m AS (SELECT vec_id, key % {k_sql} AS coarse FROM a{final})"
     )
-    # ---- fine level ----
-    qcols = ", ".join(f"q{i}" for i in range(_KM_DIM))
-    fdist = " + ".join(
-        f"(x.q{i} - s.q{i}) * (x.q{i} - s.q{i})" for i in range(_KM_DIM)
-    )
-    fupd = ", ".join(
-        f"CAST(floor(sum(x.q{i}) / count(*)) AS BIGINT) AS q{i}"
-        for i in range(_KM_DIM)
-    )
-    fcarry = ", ".join(f"coalesce(u.q{i}, p.q{i}) AS q{i}" for i in range(_KM_DIM))
-    sql.append(
-        f", mq AS (SELECT m.vec_id, m.coarse, {qcols}"
-        f" FROM m JOIN q ON m.vec_id = q.vec_id)"
-    )
-    sql.append(
-        f", csz AS (SELECT coarse, CASE WHEN (SELECT nv FROM nn) >= {flip}"
-        f" THEN GREATEST(1, count(*) // {t}) ELSE 1 END AS k2"
-        f" FROM mq GROUP BY coarse)"
-    )
-    sql.append(
-        ", rn AS (SELECT mq.*, row_number() OVER"
-        " (PARTITION BY coarse ORDER BY vec_id) - 1 AS r FROM mq)"
-    )
-    sql.append(
-        f", s0 AS (SELECT rn.coarse, rn.r AS f, {qcols}"
-        f" FROM rn JOIN csz ON rn.coarse = csz.coarse WHERE rn.r < csz.k2)"
-    )
-    for it in range(1, SEMDEDUP_ITERS + 1):
-        sql.append(
-            f", fa{it} AS (SELECT x.vec_id, x.coarse,"
-            f" min(({fdist}) * {pack} + s.f) AS fkey"
-            f" FROM mq x JOIN s{it - 1} s ON x.coarse = s.coarse"
-            f" GROUP BY x.vec_id, x.coarse)"
-        )
-        sql.append(
-            f", fu{it} AS (SELECT x.coarse, a.fkey % {pack} AS f, {fupd}"
-            f" FROM mq x JOIN fa{it} a ON x.vec_id = a.vec_id"
-            f" GROUP BY x.coarse, a.fkey % {pack})"
-        )
-        sql.append(
-            f", s{it} AS (SELECT p.coarse, p.f, {fcarry}"
-            f" FROM s{it - 1} p LEFT JOIN fu{it} u"
-            f" ON p.coarse = u.coarse AND p.f = u.f)"
-        )
-    ffinal = SEMDEDUP_ITERS + 1
-    sql.append(
-        f", fa{ffinal} AS (SELECT x.vec_id, x.coarse,"
-        f" min(({fdist}) * {pack} + s.f) AS fkey"
-        f" FROM mq x JOIN s{SEMDEDUP_ITERS} s ON x.coarse = s.coarse"
-        f" GROUP BY x.vec_id, x.coarse)"
-    )
-    sql.append(
-        f", m2 AS (SELECT vec_id, coarse, fkey % {pack} AS fine FROM fa{ffinal})"
-    )
     sql.append(
         f"""
 SELECT a.coarse AS cluster, a.vec_id AS doc_a, b.vec_id AS doc_b, {cos} AS sim
-FROM m2 a JOIN m2 b
-  ON a.coarse = b.coarse AND a.fine = b.fine AND a.vec_id < b.vec_id
+FROM m a JOIN m b
+  ON a.coarse = b.coarse AND a.vec_id < b.vec_id
 JOIN q ea ON a.vec_id = ea.vec_id
 JOIN q eb ON b.vec_id = eb.vec_id
 WHERE {cos} >= {SEMDEDUP_THRESHOLD}
 """
     )
     return "\n".join(sql)
-
-
-def _semdedup_fine_pairs(assigned: DataFrame) -> DataFrame:
-    """The two-level regime's fine stage: ONE shuffle of (coarse,
-    vec_id, embedding) keyed by coarse cell, then per coarse cell a
-    numpy fine k-means (k2 = max(1, |cell| // T) cells seeded by the
-    cell's lowest vec_ids, SEMDEDUP_ITERS Lloyd updates — the EXACT
-    integer arithmetic of _km_train_array replayed in float64, which
-    is exact by the _km_assign bound: dist·PACK+f ≤ 2.7e14 < 2⁵³)
-    followed by the per-fine-cell exact-cosine threshold scan. Pair
-    output is Σ|fine cell|² ≈ n·T — linear, the whole point. Per-task
-    memory is one coarse cell (√(n·T) rows, capped by
-    SEMDEDUP_COARSE_ROW_CAP); the distance/sim buffers are chunked to
-    _CELL_GEMM_CHUNK rows. Quantization happens INSIDE the UDF
-    (floor(float64(emb)·SCALE) — float32→float64 is exact and numpy's
-    multiply/floor are the same IEEE ops the SQL oracle uses) so the
-    shuffle carries the raw embedding only, not 64 extra longs.
-    Mean updates use floor(double(sum)/double(count)) — double
-    division then floor, the SAME operation as Spark's F.floor(s/n)
-    and DuckDB's floor(sum/count), not numpy integer floor-division,
-    so all three engines round identical edge cases identically."""
-    import numpy as np
-    import pandas as pd
-
-    thr = SEMDEDUP_THRESHOLD
-    t_rows = SEMDEDUP_TARGET_CELL_ROWS
-    iters = SEMDEDUP_ITERS
-    pack = _SEMDEDUP_FINE_PACK
-    chunk = _CELL_GEMM_CHUNK
-    scale = float(KM_SCALE)
-    # static exactness guard, the _km_assign argument at the fine level
-    if (_KM_DIM * (2 * KM_SCALE) ** 2 + 1) * pack >= 2**53:
-        raise ValueError(
-            "fine packed key exceeds the exact-float64 bound — "
-            "re-derive _SEMDEDUP_FINE_PACK / KM_SCALE"
-        )
-
-    empty = {
-        "cluster": pd.Series(dtype="int64"),
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "sim": pd.Series(dtype="float64"),
-    }
-
-    def _assign_fine(qf: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
-        # chunked packed-key argmin: |q|² - 2q·Cᵀ + |c|², all
-        # integral float64 (exact); key = dist·PACK + f, min per row
-        ct = np.ascontiguousarray(cents.T)
-        c_sq = (cents * cents).sum(axis=1)
-        jf = np.arange(len(cents), dtype=np.float64)
-        keys = np.empty(len(qf), dtype=np.int64)
-        for lo in range(0, len(qf), chunk):
-            mc = qf[lo : lo + chunk]
-            b = mc @ ct
-            b *= -2.0
-            b += (mc * mc).sum(axis=1)[:, None]
-            b += c_sq[None, :]
-            b *= float(pack)
-            b += jf[None, :]
-            keys[lo : lo + len(mc)] = b.min(axis=1)
-        return keys % pack
-
-    def fine_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:  # singleton coarse cell: no candidate pairs
-            return pd.DataFrame(empty)
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        coarse = int(pdf["cluster"].iloc[0])
-        m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        qf = np.floor(m * scale)  # integral float64, |q| ≤ KM_SCALE
-        k2 = max(1, len(pdf) // t_rows)
-        if k2 >= pack:
-            raise ValueError(
-                f"fine cell count {k2} exceeds the packed-key width "
-                f"{pack} — a coarse cell of {len(pdf)} rows escaped "
-                "SEMDEDUP_COARSE_ROW_CAP"
-            )
-        cents = qf[:k2].copy()  # seeds: the k2 lowest vec_ids
-        qi = qf.astype(np.int64)
-        for _ in range(iters):
-            f = _assign_fine(qf, cents)
-            cnt = np.bincount(f, minlength=k2)
-            s = np.zeros((k2, qf.shape[1]), dtype=np.int64)
-            np.add.at(s, f, qi)
-            nz = cnt > 0
-            new = cents.copy()  # empty fine cells carry the previous
-            new[nz] = np.floor(
-                s[nz].astype(np.float64) / cnt[nz, None].astype(np.float64)
-            )
-            cents = new
-        f = _assign_fine(qf, cents)
-        unit = m / np.linalg.norm(m, axis=1, keepdims=True)
-        frames = []
-        for fc in np.unique(f):
-            idx = np.nonzero(f == fc)[0]
-            if len(idx) < 2:
-                continue
-            u = unit[idx]
-            sid = ids[idx]
-            for lo in range(0, len(sid), chunk):
-                sims = u[lo : lo + chunk] @ u.T
-                sims = np.copysign(np.floor(np.abs(sims) * 1e6 + 0.5), sims) / 1e6
-                r_idx, c_idx = np.nonzero(
-                    (sims >= thr)
-                    & (
-                        np.arange(len(sid))[None, :]
-                        > (lo + np.arange(sims.shape[0]))[:, None]
-                    )
-                )
-                if len(r_idx):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "cluster": coarse,
-                                "doc_a": sid[lo + r_idx],
-                                "doc_b": sid[c_idx],
-                                "sim": sims[r_idx, c_idx],
-                            }
-                        )
-                    )
-        if not frames:
-            return pd.DataFrame(empty)
-        return pd.concat(frames, ignore_index=True)
-
-    return (
-        assigned.select("cluster", "vec_id", "embedding")
-        .groupBy("cluster")
-        .applyInPandas(fine_pairs, "cluster long, doc_a long, doc_b long, sim double")
-    )
 
 
 @register("dedup_semantic_cluster", "llm", oracle=_semdedup_oracle())
@@ -2716,20 +2285,11 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (see cell_pairs below) — same-cell pairs only, never a
     cartesian, and pair volume stays ~n·TARGET_CELL instead of n²/K
     (the round-8 rehearsal measured fixed K=8 at 23× wall under 10×
-    rows; the K∝n rule is the paper's fix). Past
-    SEMDEDUP_TWOLEVEL_FLIP_ROWS the flat rule's n·K assignment term
-    goes quadratic, so the sizing flips to TWO-LEVEL probing
-    (round-13): the SAME trainer builds K1 = √(n/T) coarse
-    super-cells, and _semdedup_fine_pairs splits each into
-    ~TARGET_CELL-row fine cells inside one applyInPandas — assignment
-    FLOPs 2·n·√(n/T), pair output linear n·T (the retired round-12
-    √n hatch had O(n^1.5) pair OUTPUT: 2.88B pairs / 768 s at 20M).
-    Cosine parity: the GEMM rounds 6-digit half-away-from-zero on
-    the binary double — the shared rounded-sim convention — and the
-    ONE registered oracle replays K (count(*)-derived), both
-    assignment levels (all-integer, the fine level degenerating to
-    k2=1 below the flip) and the cosine via
-    list_cosine_similarity."""
+    rows; the K∝n rule is the paper's fix). Cosine parity: the GEMM
+    rounds 6-digit half-away-from-zero on the binary double — the
+    shared rounded-sim convention — and the registered oracle replays
+    K (count(*)-derived), the all-integer assignment and the cosine
+    via list_cosine_similarity."""
     n_vecs = table_row_count(sf_dir, "embeddings")
     k = _semdedup_k(n_vecs)
     emb = load(spark, sf_dir, "embeddings")
@@ -2757,30 +2317,6 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     cents, key_sql = _km_train_array(qn, SEMDEDUP_ITERS, k)
-    if _semdedup_twolevel(n_vecs):
-        # Two-level regime: k above was the COARSE K1 (√(n/T) balance
-        # rule); the fine k-means + per-fine-cell pair scan runs
-        # inside one applyInPandas over coarse cells — pair output
-        # returns to the flat rule's linear n·T (the round-12 √n
-        # hatch's 2.88B-pair fourth decade is the retired comparison).
-        # The coarse key is assigned in ONE MAP PASS over a fresh
-        # parquet read with the raw embedding CARRIED (quantize →
-        # GEMM/HOF key → cluster), so the only corpus-sized shuffle is
-        # the groupBy(cluster) itself — the first 60M-leg attempt
-        # materialized a separate (vec_id, cluster) frame and
-        # sort-merge-joined it back onto the embeddings, and the two
-        # extra 60M-row exchanges ran the host out of shuffle disk.
-        wide = emb.selectExpr(
-            "vec_id", "embedding", *_km_q_exprs("embedding", one_based=False)
-        ).selectExpr(
-            "vec_id",
-            "embedding",
-            "array(" + ", ".join(f"q{i}" for i in range(_KM_DIM)) + ") AS qa",
-        )
-        assigned = _km_assign(wide, cents, key_sql, k, keep=("embedding",))
-        return _semdedup_fine_pairs(
-            assigned.selectExpr("vec_id", "embedding", f"key % {k} AS cluster")
-        )
     # The (vec_id, cluster) assignment gets its OWN stage cut: left
     # lazy, the centroid-array expression fuses into the join stage
     # below and re-evaluates per joined row (bisected in round 8: the
@@ -2816,13 +2352,14 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk = _CELL_GEMM_CHUNK
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame(
+            {"cluster": pd.Series(dtype="int64"),
+             "doc_a": pd.Series(dtype="int64"),
+             "doc_b": pd.Series(dtype="int64"),
+             "sim": pd.Series(dtype="float64")}
+        )
         if len(pdf) < 2:  # singleton cell: no candidate pairs
-            return pd.DataFrame(
-                {"cluster": pd.Series(dtype="int64"),
-                 "doc_a": pd.Series(dtype="int64"),
-                 "doc_b": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
+            return empty
         # sort by vec_id so the upper triangle IS the doc_a < doc_b set
         pdf = pdf.sort_values("vec_id")
         m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
@@ -2847,12 +2384,7 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "sim": sims[r_idx, c_idx],
                 }))
         if not frames:
-            return pd.DataFrame(
-                {"cluster": pd.Series(dtype="int64"),
-                 "doc_a": pd.Series(dtype="int64"),
-                 "doc_b": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
+            return empty
         return pd.concat(frames, ignore_index=True)
 
     return (

@@ -29,9 +29,10 @@ Usage::
 ``1x`` is sf0.1. Each leg records wall seconds, result rows, and the
 shuffle-write, task-CPU and GC totals of its stages, read from Spark's
 in-process status store (perfbench's StatusProbe), plus each tier's
-derived sizes (_derived_knobs). Results merge into
-``scale_rehearsal.json``; SCALING.md quotes them. Serialize with any
-other Spark work on the host (single-JVM rule).
+derived sizes (_derived_knobs). Full-family results merge into
+``scale_rehearsal.json``, which SCALING.md quotes; ``--queries``
+subset runs merge into the gitignored ``scale_rehearsal_subset.json``.
+Serialize with any other Spark work on the host (single-JVM rule).
 """
 
 from __future__ import annotations
@@ -559,11 +560,18 @@ def run(
     tiers: list[tuple[str, str]],
     family: list[str] = HEAVY,
     only: list[str] | None = None,
-    dest: str = RESULTS,
+    dest: str | None = None,
 ) -> None:
     """Run ``family`` (narrowed to ``only``) at each ``(tag, dir)`` tier
-    and merge one record per leg into the JSON file ``dest``."""
+    and merge one record per leg into the JSON file ``dest``. By
+    default a full-family run merges into the tracked RESULTS that
+    SCALING.md quotes, and a subset run into the gitignored
+    ``scale_rehearsal_subset.json`` beside it, so checking a few
+    queries never rewrites the recorded figures."""
     import sys
+
+    if dest is None:
+        dest = os.path.splitext(RESULTS)[0] + "_subset.json" if only else RESULTS
 
     sys.path.insert(0, REPO)
     from linux_logs_spark.registry import all_queries

@@ -1,7 +1,7 @@
 """Chunk-boundary pins for the per-bucket / per-cell verification GEMMs.
 
-sim_ann_lsh and dedup_semantic_cluster verify candidates with one
-query-chunked numpy GEMM per bucket/cell (round 12). Normal occupancy
+sim_ann_lsh, sim_ann_ivf and dedup_semantic_cluster verify candidates
+with one query-chunked numpy GEMM per bucket/cell. Normal occupancy
 (≈122-250 rows) never exceeds one 2048-row chunk, so the boundary
 arithmetic — self-exclusion offsets, the strict-upper-triangle mask
 against GLOBAL row indices, partial tail chunks — would otherwise ship
@@ -58,18 +58,9 @@ def test_semdedup_cell_gemm_chunk_boundary(spark, sf_dir, monkeypatch):
     _assert_match(got, want, cols.index("sim"))
 
 
-def test_semdedup_twolevel_gemm_chunk_boundary(spark, sf_dir, monkeypatch):
-    """Round 13: the two-level fine stage reuses _CELL_GEMM_CHUNK for
-    BOTH the fine-assignment packed-key GEMM and the per-fine-cell
-    pair GEMM — force the knobs so the fixture genuinely multi-cells,
-    then cross chunk boundaries in both. Fine assignment is integer-
-    exact (packed keys are integral doubles), so even the cell
-    MEMBERSHIP must be bit-stable under re-chunking; sims get the
-    shared one-quantum rule."""
-    monkeypatch.setattr(wh, "SEMDEDUP_TWOLEVEL", True)
-    monkeypatch.setattr(wh, "SEMDEDUP_TARGET_CELL_ROWS", 20)
-    cols = ("cluster", "doc_a", "doc_b", "sim")
-    want = _rows(_Q["dedup_semantic_cluster"].fn(spark, sf_dir), *cols)
+def test_ivf_cell_gemm_chunk_boundary(spark, sf_dir, monkeypatch):
+    cols = ("vec_id", "neighbor_id", "sim", "nn_rank")
+    want = _rows(_Q["sim_ann_ivf"].fn(spark, sf_dir), *cols)
     monkeypatch.setattr(wh, "_CELL_GEMM_CHUNK", 7)
-    got = _rows(_Q["dedup_semantic_cluster"].fn(spark, sf_dir), *cols)
+    got = _rows(_Q["sim_ann_ivf"].fn(spark, sf_dir), *cols)
     _assert_match(got, want, cols.index("sim"))

@@ -30,3 +30,24 @@ def test_run_records_leg_from_status_store(spark, sf_dir, tmp_path):
     knobs = json.loads(json.dumps(sr._derived_knobs(sf_dir)))  # tuples → lists
     assert res["knobs"]["1x"] == knobs
     assert res["knobs"]["1x"]["lsh_planes"] >= 4
+
+
+def test_subset_run_leaves_tracked_results_untouched(spark, sf_dir, tmp_path, monkeypatch):
+    """A ``--queries`` run merges into the gitignored subset file, never
+    into the tracked results file that SCALING.md quotes."""
+    import bench
+
+    sr = bench._rehearsal_module()
+    tracked = tmp_path / "scale_rehearsal.json"
+    tracked.write_text('{"queries": {}}')
+    monkeypatch.setattr(sr, "RESULTS", str(tracked))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        sr.run([("1x", sf_dir)], family=["tpch_q6", "tpch_q3"], only=["tpch_q6"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert tracked.read_text() == '{"queries": {}}'
+    with open(tmp_path / "scale_rehearsal_subset.json") as fh:
+        res = json.load(fh)
+    assert list(res["queries"]) == ["tpch_q6"]
+    assert res["queries"]["tpch_q6"]["1x"]["rows"] == 1

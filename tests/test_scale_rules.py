@@ -21,6 +21,14 @@ from linux_logs_spark.operators.llm_pipeline import (
     sim_blocks,
 )
 from linux_logs_spark.operators.scans import synth_rows
+from linux_logs_spark.operators.warehouse import (
+    IVF_MIN_CELLS,
+    IVF_TARGET_CELL_ROWS,
+    KM_K,
+    SEMDEDUP_TARGET_CELL_ROWS,
+    _ivf_cells,
+    _semdedup_k,
+)
 from linux_logs_spark.registry import all_queries
 from linux_logs_spark.streaming.queries import pysrc_rows
 from linux_logs_spark.verify import compare_frames, run_oracle
@@ -40,6 +48,26 @@ def test_lsh_planes_rule():
 def test_block_rules():
     assert [dedup_blocks(n) for n in (0, 500, 2_000, 20_000)] == [8, 8, 8, 25]
     assert [sim_blocks(n) for n in (0, 500, 2_000, 20_000)] == [4, 4, 4, 13]
+
+
+def test_ivf_cells_rule():
+    # 500 / 2 000 vectors: sf0.01 / sf0.1; 200 000: the 100x tier
+    want = {500: 16, 2_000: 16, 200_000: 1_600, 999_999: 7_999}
+    assert {n: _ivf_cells(n) for n in want} == want
+
+
+def test_semdedup_k_rule():
+    want = {10: KM_K, 20_000: 80, 200_000: 800, 2_000_000: 8_000}
+    assert {n: _semdedup_k(n) for n in want} == want
+
+
+def test_registered_oracles_mirror_cell_rules():
+    """Each oracle derives its cell count from count(*) with the same
+    floor and divisor as the Spark-side rule."""
+    ivf = _SPECS["sim_ann_ivf"].oracle
+    assert f"GREATEST({IVF_MIN_CELLS}, count(*) // {IVF_TARGET_CELL_ROWS})" in ivf
+    semdedup = _SPECS["dedup_semantic_cluster"].oracle
+    assert f"GREATEST({KM_K}, count(*) // {SEMDEDUP_TARGET_CELL_ROWS})" in semdedup
 
 
 def test_python_source_row_rules():
